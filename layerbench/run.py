@@ -1,6 +1,6 @@
 """Layered benchmark of colinospark: one workload per JVM, closed loop.
 
-    python3 layerbench/run.py --workload <select_wide|pipeline_tall|curate_mix|all>
+    python3 layerbench/run.py --workload <select_curate|pipeline_tall|all>
         [--seed N] [--seconds S] [--trace 0|1] [--smoke]
 
 Builds the program from source on first use (see build.py), runs the
@@ -20,7 +20,7 @@ sys.dont_write_bytecode = True  # keep the package directory free of __pycache__
 import build  # noqa: E402
 
 HERE = Path(__file__).resolve().parent
-WORKLOADS = ["select_wide", "pipeline_tall", "curate_mix"]
+WORKLOADS = ["select_curate", "pipeline_tall"]
 # Spark 4 on JDK 17 outside spark-submit needs these (the root build.sbt's list).
 OPENS = ["java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
          "java.base/java.io", "java.base/java.net", "java.base/java.nio", "java.base/java.util",

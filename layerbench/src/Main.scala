@@ -19,7 +19,9 @@ import graft.core.GraftSession
   * timed as build (the call) plus exec (its frame written to the `noop`
   * sink). The session caches are cleared before each pass.
   *
-  * `--trace 0` prints the end-to-end metrics; `--trace 1` traces the warm
+  * `--trace 0` prints the end-to-end metrics: `setup_s` and the JVM's CPU
+  * seconds in the cold and the first warm pass together (`cpu_s`) go into
+  * the JSON line; each pass's CPU and wall time are printed. `--trace 1` traces the warm
   * passes, prints their per-layer metrics and writes every span as JSON
   * lines. The last stdout line is one JSON object:
   * `{"correct", "attempted", "failed", "metrics"}`.
@@ -29,7 +31,7 @@ object Main {
       trace: Boolean = false, smoke: Boolean = false, work: String = ".bench_build/work",
       pins: String = "layerbench/pins.tsv", cores: Int = Runtime.getRuntime.availableProcessors)
 
-  val workloads: Seq[String] = Seq("select_wide", "pipeline_tall", "curate_mix")
+  val workloads: Seq[String] = Seq("select_curate", "pipeline_tall")
   /** Input generations per set-up; `setup_s` takes their median. */
   val setupReps = 3
   /** No new pass starts after this, so a run ends well inside 180 s. */
@@ -53,6 +55,12 @@ object Main {
     if (s.isEmpty) Double.NaN
     else if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
   }
+
+  private val os = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** CPU seconds of every thread of this JVM: driver, tasks, JIT and GC. */
+  def cpuSeconds(): Double = os.getProcessCpuTime / 1e9
 
   private def secs(f: => Unit): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -87,8 +95,8 @@ object Main {
   private def run(o: Opts, spark: SparkSession, work: String, sessionS: Double): Unit = {
     val sc = spark.sparkContext
     val size = if (o.smoke) "smoke" else "full"
-    val pins = new Pins(scala.io.Source.fromFile(o.pins, "UTF-8").getLines().toList, o.workload, size, o.seed)
-    val wl = Workload(o.workload, spark, o.seed, o.smoke, work, pins)
+    val pinLines = scala.io.Source.fromFile(o.pins, "UTF-8").getLines().toList
+    val wl = Workload(o.workload, spark, o.seed, o.smoke, work, pinLines)
     // the smoke run checks one cold pass against the smoke pins
     val minWarm = if (o.smoke) 0 else 1
     val gens = (1 to (if (o.smoke) 1 else setupReps)).map(_ => secs(wl.generate()))
@@ -98,6 +106,7 @@ object Main {
     val failures = mutable.ArrayBuffer.empty[String]
     var attempted = 0
     val walls = mutable.ArrayBuffer.empty[(Int, Boolean, Double)] // (pass, traced, seconds)
+    val cpus = mutable.ArrayBuffer.empty[(Int, Double)]             // (pass, JVM CPU seconds)
     val prePass = mutable.ArrayBuffer.empty[(Double, Int)]         // (pinned MB, persisted RDDs)
     val layerRows = mutable.ArrayBuffer.empty[(Int, Map[String, Double])] // (pass, metrics)
     val t0 = System.nanoTime()
@@ -112,9 +121,11 @@ object Main {
       wl.prepare()
       tracer.setTraced(traced)
       val before = tracer.spans.length
+      val cpu0 = cpuSeconds()
       val ok =
         try {
           walls += ((p, traced, tracer.pass(p)(wl.pass(tracer))))
+          cpus += ((p, cpuSeconds() - cpu0))
           true
         } catch {
           case e: Throwable =>
@@ -143,19 +154,27 @@ object Main {
     val untraced = walls.filter(w => w._1 > 0 && !w._2).map(_._3).toSeq
     val tracedW = walls.filter(_._2).map(_._3).toSeq
     val wallS = median(untraced)
+    // cpu_s is the cold pass plus the first warm pass: the JIT compiles the
+    // same methods in every run, but how much of that work lands in the
+    // cold pass and how much in the next one varies from run to run (by 10
+    // s in 80); their sum does not, and it covers the same passes whatever
+    // the number of passes a run fits
+    val firstCpu = cpus.find(_._1 == 0).map(_._2).getOrElse(Double.NaN)
+    val warmCpu = cpus.find(_._1 == 1).map(_._2).getOrElse(Double.NaN)
     def line(s: String): Unit = println(s"[layerbench] $s")
     line(s"workload ${o.workload} seed ${o.seed} size $size cores ${o.cores} " +
       s"loop closed clients 1 passes ${walls.length} (warm untraced ${untraced.length}, traced ${tracedW.length})")
     line(f"ops attempted $attempted failed $failed fail_ratio ${failed.toDouble / math.max(1, attempted)}%.4f")
     val metrics: Seq[(String, Double, String)] =
       if (!o.trace) {
-        val e2e = Seq(
-          ("setup_s", setupS, "s"), ("first_pass_s", firstPass, "s"), ("wall_s", wallS, "s"))
+        val e2e = Seq(("setup_s", setupS, "s"), ("cpu_s", firstCpu + warmCpu, "s"))
         line(f"set-up: session $sessionS%.3f s + median input generation ${median(gens)}%.3f s " +
           s"of ${gens.map(g => f"$g%.2f").mkString(" ")}")
         line(s"wall_s samples ${untraced.length}: ${untraced.map(x => f"$x%.3f").mkString(" ")} " +
           "(no tail percentile: fewer than 10 passes lie beyond any)")
-        val shown = e2e ++ wl.extras(wallS) :+ (("fail_ratio", failed.toDouble / math.max(1, attempted), "ratio"))
+        line(s"CPU seconds per pass (pass:seconds): ${cpus.map(c => f"${c._1}:${c._2}%.2f").mkString(" ")}")
+        val shown = e2e ++ Seq(("first_cpu_s", firstCpu, "s"), ("warm_cpu_s", warmCpu, "s"),
+          ("first_pass_s", firstPass, "s"), ("wall_s", wallS, "s")) ++ wl.extras(wallS) :+ (("fail_ratio", failed.toDouble / math.max(1, attempted), "ratio"))
         shown.foreach { case (k, v, u) => line(f"$k%-24s $v%.6g $u") }
         e2e
       } else {
@@ -181,7 +200,7 @@ object Main {
         all
       }
     Files.write(Paths.get(work, s"observed-seed${o.seed}.tsv"),
-      wl.pinsObserved.map { case (k, v) => s"${o.workload}\t$size\t${o.seed}\t$k\t$v\n" }.mkString
+      wl.pinsObserved.map { case (w, k, v) => s"$w\t$size\t${o.seed}\t$k\t$v\n" }.mkString
         .getBytes(StandardCharsets.UTF_8))
     val mjson = metrics.map { case (k, v, u) => s"${jstr(k)}:{\"value\":${jnum(v)},\"unit\":${jstr(u)}}" }
     println(s"""{"correct":${failed == 0},"attempted":$attempted,"failed":$failed,"metrics":{${mjson.mkString(",")}}}""")

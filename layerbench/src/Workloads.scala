@@ -27,21 +27,26 @@ trait Workload {
   def check(t: Tracer, full: Boolean): Seq[String]
   /** Workload-only figures of the last pass, as (name, value, unit). */
   def extras(wallS: Double): Seq[(String, Double, String)] = Nil
-  /** Observed values to pin, as (key, value). */
-  def pinsObserved: Seq[(String, String)]
+  /** Observed values to pin, as (workload, key, value). */
+  def pinsObserved: Seq[(String, String, String)]
 }
 
 object Workload {
+  /** `pinLines` are the lines of `pins.tsv`; `size` is `full` or `smoke`. */
   def apply(name: String, spark: SparkSession, seed: Int, smoke: Boolean, work: String,
-      pins: Pins): Workload = name match {
-    case "select_wide"   => new SelectWide(spark, seed, if (smoke) 1000L else 4000L, work, pins)
-    case "pipeline_tall" =>
-      if (smoke) new PipelineTall(spark, seed, 10000L, 1000L, work, pins)
-      else new PipelineTall(spark, seed, 20000L, 2000L, work, pins)
-    case "curate_mix"    =>
-      if (smoke) new CurateMix(spark, seed, 400, 200, work, pins)
-      else new CurateMix(spark, seed, 2000, 1000, work, pins)
-    case other => throw new IllegalArgumentException(s"unknown workload $other")
+      pinLines: Seq[String]): Workload = {
+    val size = if (smoke) "smoke" else "full"
+    def pins(w: String) = new Pins(pinLines, w, size, seed)
+    name match {
+      case "select_curate" => new Sequence(Seq(
+        new SelectWide(spark, seed, if (smoke) 1000L else 4000L, work, pins("select_wide")),
+        if (smoke) new CurateMix(spark, seed, 400, 200, work, pins("curate_mix"))
+        else new CurateMix(spark, seed, 2000, 1000, work, pins("curate_mix"))))
+      case "pipeline_tall" =>
+        if (smoke) new PipelineTall(spark, seed, 10000L, 1000L, work, pins(name))
+        else new PipelineTall(spark, seed, 20000L, 2000L, work, pins(name))
+      case other => throw new IllegalArgumentException(s"unknown workload $other")
+    }
   }
 
   def deleteTree(p: Path): Unit = if (Files.exists(p)) {
@@ -146,7 +151,7 @@ final class SelectWide(spark: SparkSession, seed: Int, n: Long, work: String, pi
     fitFails ++ scored.toSeq.flatMap { case (k, v) => expect(k, v()) }
   }
 
-  def pinsObserved: Seq[(String, String)] = expect.observed
+  def pinsObserved: Seq[(String, String, String)] = expect.observed.map(o => ("select_wide", o._1, o._2))
 }
 
 /** The production job: `graft.RunPipeline`'s sequence through its public
@@ -237,7 +242,7 @@ final class PipelineTall(spark: SparkSession, seed: Int, nPages: Long, nLabels: 
         Workload.treeBytes(Paths.get(featPath + "_metrics")) + Workload.treeBytes(ckDir)).toDouble / nPages,
       "B"))
 
-  def pinsObserved: Seq[(String, String)] = expect.observed
+  def pinsObserved: Seq[(String, String, String)] = expect.observed.map(o => ("pipeline_tall", o._1, o._2))
 }
 
 /** The registered curation queries over fixed `documents`/`embeddings`
@@ -276,5 +281,15 @@ final class CurateMix(spark: SparkSession, seed: Int, nDocs: Int, nEmb: Int, wor
     outs.toSeq.flatMap { case (q, df) => expect(q, Lineage.contentDigest(df).toString) }
   }
 
-  def pinsObserved: Seq[(String, String)] = expect.observed
+  def pinsObserved: Seq[(String, String, String)] = expect.observed.map(o => ("curate_mix", o._1, o._2))
+}
+
+/** Workloads run one after another in each pass, on one session. */
+final class Sequence(parts: Seq[Workload]) extends Workload {
+  def generate(): Unit = parts.foreach(_.generate())
+  override def prepare(): Unit = parts.foreach(_.prepare())
+  def pass(t: Tracer): Unit = parts.foreach(_.pass(t))
+  def check(t: Tracer, full: Boolean): Seq[String] = parts.flatMap(_.check(t, full))
+  override def extras(wallS: Double): Seq[(String, Double, String)] = parts.flatMap(_.extras(wallS))
+  def pinsObserved: Seq[(String, String, String)] = parts.flatMap(_.pinsObserved)
 }
