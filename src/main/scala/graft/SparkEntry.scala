@@ -148,14 +148,12 @@ object SparkEntry {
         coalesce(get_json_object(col("props"), "$.missing").cast("long"), lit(-1L))
           .as("k_missing"))
         .orderBy("event_id")),
-    "q_rolling" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(unix_timestamp(col("ts"))).rangeBetween(-3600, 0)
+    "q_rolling" -> ((s, dir) =>
       t(s, dir, "events").select(
         col("event_id"),
-        count(lit(1)).over(w).as("cnt_1h"),
-        round(sum("value").over(w), 2).as("sum_1h")
-      ).orderBy("event_id")
-    }),
+        Windows.rollingCount("user_id", "ts", 3600).as("cnt_1h"),
+        round(Windows.rollingSum(col("value"), "user_id", "ts", 3600), 2).as("sum_1h")
+      ).orderBy("event_id")),
     "q_backfill" -> ((s, dir) => {
       val v = when(col("event_type") === "error", lit(null)).otherwise(col("value"))
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
@@ -235,8 +233,7 @@ object SparkEntry {
         .select(col("doc_id"), TextFeatures.fingerprintMd5(col("text")).as("md5"))
         .orderBy("doc_id")
     }),
-    // portable md5-hash variant so DuckDB can recompute the fold exactly;
-    // the xxhash64 production variant is pinned by ScalaTest
+    // md5-derived token hashes so DuckDB can recompute the fold exactly
     "q_fingerprint_rolling" -> ((s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), TextFeatures.rollingFingerprintMd5(col("text")).as("fp"))

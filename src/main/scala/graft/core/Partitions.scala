@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, xxhash64}
 
 /** Parallelism guard for expensive per-row projections (char-bigram
   * explodes, token hashing): when the source arrives UNDER-SPLIT — fewer
@@ -18,7 +17,8 @@ import org.apache.spark.sql.functions.{col, xxhash64}
   * string alloc per doc) went 2.9 → 1.2 s; but on cheap projections the
   * extra exchange + stage costs ~0.1–0.3 s and LOSES at bench scale (the
   * whole dedup/sim family regressed +0.05…+0.38 s per query and was
-  * reverted). When in doubt, measure with QBench before and after.
+  * reverted). When in doubt, measure before and after with
+  * `SPARK_GRAFT_QUERY_FILTER=<queries> sbt "runMain graft.Bench"`.
   */
 object Partitions {
 

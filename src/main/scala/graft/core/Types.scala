@@ -64,7 +64,7 @@ object Types {
       col("url"), col("warc_ts"),
       col("text_len0").cast("double").as("text_len"),
       Windows.sessionId("url", "warc_ts", sessionGapSeconds).cast("double").as("session_id"),
-      lag(col("text_len0"), 1).over(Windows.byKey("url", "warc_ts")).cast("double").as("prev_text_len"),
+      Windows.lagCol(col("text_len0"), 1, "url", "warc_ts").cast("double").as("prev_text_len"),
       Windows.rollingCount("url", "warc_ts", rollingWindowSeconds).cast("double").as("revisits_7d"),
       Windows.revisitIndex("url", "warc_ts").cast("double").as("visit_no"))
     AsOf.sortMerge(

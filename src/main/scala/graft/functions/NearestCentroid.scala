@@ -164,7 +164,8 @@ object NearestCentroid {
     * ~4 cycles). Centroids are therefore processed four at a time — four
     * INDEPENDENT accumulators, each still summing ITS centroid's products
     * in ascending index order, so every dot is bit-identical to the
-    * one-centroid-at-a-time chain (measured ~3× on KmeansScaleBench).
+    * one-centroid-at-a-time chain (measured ~3×; BASELINE.md, round-5
+    * kmeans iteration probe).
     * `sqrt(na)` is hoisted out of the centroid loop: sqrt is correctly
     * rounded and loop-invariant, so the hoist is bit-identical too. */
   def assignCore(flat: Array[Double], norms: Array[Double], d: Int, x: Array[Double]): InternalRow = {

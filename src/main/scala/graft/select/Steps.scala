@@ -418,8 +418,11 @@ final case class RocStep(
     val long = Melt
       .numeric(df, preds, keep = Seq(outcome))
       .select(col("feature"), col("value"), col(outcome).cast("string").as("y"))
-    val got = Auc.scoresAuto(long, df.select(col(outcome).cast("string").as("y")))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val pairs = Auc.classPairs(df.select(col(outcome).cast("string")))
+    val h = new graft.runtime.CacheHandle
+    val got =
+      try Auc.scores(long, pairs, h).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      finally h.release()
     val scores = preds.map(p => p -> got.get(p).filterNot(_.isNaN))
     val (excluded, warns) =
       StepCommon.select(scores, topP, threshold, cutoff, maximize = true, name)
@@ -507,14 +510,14 @@ final case class FcbfStep(minimumSu: Double = 0.025, cutpoint: Double = 0.5,
     }
     work.cache()
     try {
-      val su = Entropy.suAgainst(work, "__y", usable)
+      val su = Entropy.scoresAgainst(work, "__y", usable, Entropy.SymUncert)
       var ranked = usable
         .flatMap(p => su.get(p).filterNot(_.isNaN).filter(_ >= minimumSu).map(p -> _))
         .sortBy(-_._2)
         .toList
       var selected = List.empty[String]
       // Wave-batched redundancy elimination: one keeper per round used to
-      // mean one small suAgainst job per retained feature. The pairwise SU
+      // mean one small scoresAgainst job per retained feature. The pairwise SU
       // values are selection-order-independent, so we precompute, in ONE
       // batched job, SU(wᵢ, f) for the next `wave` candidates wᵢ against
       // everything ranked after them, then replay the exact sequential
@@ -528,7 +531,7 @@ final case class FcbfStep(minimumSu: Double = 0.025, cutpoint: Double = 0.5,
           (w, i) <- heads.zipWithIndex
           (f, _) <- ranked.drop(i + 1)
         } yield (f, w) // orientation (f, w): xb = candidate, yb = keeper —
-                       // identical to the old suAgainst(work, keeper, rest)
+                       // identical to scoresAgainst(work, keeper, rest, SymUncert)
         val redSu = Entropy.pairwiseScores(work, pairs, Entropy.SymUncert)
         var processed = 0
         var cur = ranked

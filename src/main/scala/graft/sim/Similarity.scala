@@ -216,11 +216,12 @@ object Similarity {
       // Exact per-cell coordinate sums WITHOUT a posexplode: the exploded
       // formulation shuffles rows × dim records through the aggregation
       // machinery and sums decimal(38,0) on BigDecimal — measured to
-      // dominate the whole iteration (KmeansScaleBench: k=8 as slow as
-      // k=256). One native FixedPointVectorSum aggregate reads each vector
-      // once into a flat long[] buffer: each snapped coordinate (a ≤53-bit
-      // integer in a double) splits into carry-normalized (hi, lo) long
-      // slots whose exact integer sums are order-independent; the driver
+      // dominate the whole iteration (k=8 as slow as k=256; BASELINE.md,
+      // round-5 kmeans iteration probe). One native FixedPointVectorSum
+      // aggregate reads each vector once into a flat long[] buffer: each
+      // snapped coordinate (a ≤53-bit integer in a double) splits into
+      // carry-normalized (hi, lo) long slots whose exact integer sums are
+      // order-independent; the driver
       // reassembles (Σhi << 32) + Σlo as a BigInt — bit-identical to the
       // decimal formulation the DuckDB oracle replays (and to the 2·d-wide
       // sum-column twin SimilaritySpec pins, itself measured to cost as

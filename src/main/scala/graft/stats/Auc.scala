@@ -98,8 +98,19 @@ object Auc {
       .agg(avg("auc").as("score"))
   }
 
-  /** Convenience: derive the class pairs from the outcome's distinct values
-    * (collected — class cardinality is small by construction). */
+  /** Every unordered pair of the distinct non-null classes in the
+    * single-column frame `ySource`, in sorted order (collected — class
+    * cardinality is small by construction). */
+  def classPairs(ySource: DataFrame): Seq[(String, String)] = {
+    val classes = ySource.toDF("y")
+      .select("y").where(col("y").isNotNull).distinct()
+      .collect().map(_.getString(0)).sorted.toSeq
+    require(classes.length >= 2, "ROC needs at least two outcome classes")
+    for { i <- classes.indices; j <- i + 1 until classes.length }
+      yield (classes(i), classes(j))
+  }
+
+  /** Convenience: derive the class pairs from the outcome's distinct values. */
   def scoresAuto(long: DataFrame): DataFrame = scoresAuto(long, long.select("y"))
 
   /** [[scoresAuto]] with the class-discovery scan decoupled from the melted
@@ -108,13 +119,6 @@ object Auc {
     * distinct doesn't re-execute the p-fold melt — measured ~0.5 s of the
     * q_auc bench time). The discovered class SET is identical because the
     * melt carries the outcome to every row unchanged. */
-  def scoresAuto(long: DataFrame, ySource: DataFrame): DataFrame = {
-    val classes = ySource.toDF("y")
-      .select("y").where(col("y").isNotNull).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-    require(classes.length >= 2, "ROC needs at least two outcome classes")
-    val pairs = for { i <- classes.indices; j <- i + 1 until classes.length }
-      yield (classes(i), classes(j))
-    scores(long, pairs)
-  }
+  def scoresAuto(long: DataFrame, ySource: DataFrame): DataFrame =
+    scores(long, classPairs(ySource))
 }

@@ -17,10 +17,11 @@ import org.apache.spark.sql.functions._
   *    engines. NOTE: the rank window runs per feature over DISTINCT values
   *    (tiny for binned/low-cardinality inputs, its regime); near-unique
   *    columns should use the spearman-style two-phase bucketed prefix.
-  *  - [[cutpointBins]] — compute exact quantile cut points (one distributed
-  *    pass, relativeError = 0), broadcast them, and bin by value comparison.
-  *    Fully scalable: no global sort, pure map-side `when` chain. Rows tied
-  *    at a cut point all land in the lower bin (deterministic).
+  *  - [[exactCuts]] + [[binByCuts]] — compute exact quantile cut points
+  *    (one distributed pass, relativeError = 0), then bin by value
+  *    comparison against the collected cuts. Fully scalable: no global sort,
+  *    pure map-side `when` chain. Rows tied at a cut point all land in the
+  *    lower bin (deterministic).
   *  - [[medianSplit]] — the reference's FCBF discretize_var
   *    (/root/reference/R/step_select_fcbf.R:256–270): values <= type-7
   *    median → 'l', > median → 'h', NULL stays NULL
@@ -389,14 +390,6 @@ object Binning {
     for (i <- cuts.indices.reverse)
       expr = when(c <= cuts(i), lit(i + 1)).otherwise(expr)
     when(c.isNull, lit(null)).otherwise(expr)
-  }
-
-  /** Scalable equal-frequency-style binning of wide columns in place:
-    * adds `<col>__bin` columns. One stats pass + one narrow map.
-    */
-  def cutpointBins(df: DataFrame, cols: Seq[String], nbins: Int, suffix: String = "__bin"): DataFrame = {
-    val cuts = exactCuts(df, cols, nbins)
-    cols.foldLeft(df) { (d, c) => d.withColumn(c + suffix, binByCuts(col(c), cuts(c))) }
   }
 
   /** R type-7 median of a column, computed exactly and distributedly. */

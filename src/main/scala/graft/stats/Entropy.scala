@@ -80,24 +80,17 @@ object Entropy {
     t.select(col("feature"), s.as("score"))
   }
 
-  /** Mutual information I(A;B) between two (discrete) columns of `df`,
-    * complete cases only, natural log. Used pairwise by mRMR/FCBF redundancy.
+  /** Scores of `target` vs each of `others` in ONE distributed pass: melt
+    * others against the fixed target column. Returns feature → score;
+    * features sharing no complete cases with `target` are absent.
     */
-  def mutualInfo(df: DataFrame, a: String, b: String): Double = {
-    val long = df.select(lit(a + "|" + b).as("feature"), col(a).as("xb"), col(b).as("yb"))
-    val r = scores(long, InfoGain).select("score").collect()
-    if (r.isEmpty) Double.NaN else r(0).getDouble(0)
-  }
-
-  /** Pairwise MI of `target` vs each of `others` in ONE distributed pass:
-    * melt others against the fixed target column. Returns feature → MI.
-    */
-  def mutualInfoAgainst(df: DataFrame, target: String, others: Seq[String]): Map[String, Double] = {
+  def scoresAgainst(
+      df: DataFrame, target: String, others: Seq[String], kind: Kind): Map[String, Double] = {
     if (others.isEmpty) return Map.empty
     val long = graft.core.Melt
       .categorical(df.select((others :+ target).distinct.map(col): _*), others, keep = Seq(target))
       .select(col("feature"), col("value").as("xb"), col(target).cast("string").as("yb"))
-    scores(long, InfoGain).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    scores(long, kind).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
   }
 
   /** Scores for an EXPLICIT list of column pairs in ONE distributed pass —
@@ -110,7 +103,7 @@ object Entropy {
     * Pair orientation follows the argument order ((a, b) ⇒ xb = a, yb = b)
     * — irrelevant for InfoGain/SymUncert (both symmetric in hx/hy) but kept
     * deterministic anyway. Pairs whose columns share no complete cases are
-    * absent from the result (same contract as [[mutualInfoAgainst]]).
+    * absent from the result (same contract as [[scoresAgainst]]).
     *
     * The per-row pair array is chunked (1024 pairs) so the generated
     * projection stays inside JIT/codegen method limits; chunks are unioned
@@ -140,13 +133,4 @@ object Entropy {
   def pairwiseScoresAll(df: DataFrame, cols: Seq[String], kind: Kind): Map[(String, String), Double] =
     pairwiseScores(df,
       for { i <- cols.indices; j <- i + 1 until cols.length } yield (cols(i), cols(j)), kind)
-
-  /** Per-feature symmetrical uncertainty vs a fixed outcome column. */
-  def suAgainst(df: DataFrame, target: String, others: Seq[String]): Map[String, Double] = {
-    if (others.isEmpty) return Map.empty
-    val long = graft.core.Melt
-      .categorical(df.select((others :+ target).distinct.map(col): _*), others, keep = Seq(target))
-      .select(col("feature"), col("value").as("xb"), col(target).cast("string").as("yb"))
-    scores(long, SymUncert).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-  }
 }

@@ -25,27 +25,4 @@ object Salting {
       .agg(count(lit(1)).as("__c"))
       .groupBy(col(key))
       .agg(sum("__c").as("cnt"))
-
-  /** Two-phase salted sum of `value` per key. */
-  def saltedSum(df: DataFrame, key: String, value: Column, unique: Column, buckets: Int): DataFrame =
-    df.groupBy(col(key), saltCol(unique, buckets).as("__salt"))
-      .agg(sum(value).as("__s"))
-      .groupBy(col(key))
-      .agg(sum("__s").as("sum"))
-
-  /** Generic two-phase decomposition for any partial/merge agg pair, e.g.
-    * partial = count → merge = sum, partial = max → merge = max. */
-  def salted(
-      df: DataFrame,
-      key: String,
-      unique: Column,
-      buckets: Int,
-      partial: Seq[Column],
-      merge: Seq[Column]
-  ): DataFrame = {
-    val p = df
-      .groupBy(col(key), saltCol(unique, buckets).as("__salt"))
-      .agg(partial.head, partial.tail: _*)
-    p.groupBy(col(key)).agg(merge.head, merge.tail: _*)
-  }
 }

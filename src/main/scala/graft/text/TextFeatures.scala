@@ -140,21 +140,10 @@ object TextFeatures {
 
   /** Rolling document fingerprint: polynomial rolling hash over the token
     * stream (base 1000003 mod 1e9+7), computed as a fold — deterministic,
-    * order-sensitive, cheap. Intermediate values stay < 2^51 so 64-bit
-    * modular arithmetic never overflows. */
-  def rollingFingerprint(text: Column): Column = {
-    val p = lit(1000000007L)
-    aggregate(
-      tokens(text),
-      lit(0L),
-      (acc, t) => pmod(acc * 1000003L + pmod(xxhash64(t), p), p)
-    )
-  }
-
-  /** Portable rolling fingerprint: the same polynomial fold but over the
-    * 48-bit md5-derived token hash ([[graft.text.Dedup.md5Hash48]]) so an
-    * external engine can recompute it token-by-token (the DuckDB oracle
-    * does). acc stays < 1e9, so acc·1000003 + h never overflows a long. */
+    * order-sensitive, cheap. Each token hashes to the 48-bit md5-derived
+    * value ([[graft.text.Dedup.md5Hash48]]) so an external engine can
+    * recompute it token-by-token (the DuckDB oracle does). acc stays < 1e9,
+    * so acc·1000003 + h never overflows a long. */
   def rollingFingerprintMd5(text: Column): Column = {
     val p = lit(1000000007L)
     aggregate(

@@ -69,11 +69,12 @@ class PlanSpec extends AnyFunSuite {
     // pinned to a constant exchange count
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     def exchanges(features: Seq[String]): Int = {
-      val (stats, rankTable) = graft.stats.Correlation
-        .spearmanStats(li, features, "l_extendedprice")
+      val h = new graft.runtime.CacheHandle
+      val (stats, _) = graft.stats.Correlation
+        .spearmanStats(li, features, "l_extendedprice", h)
       try "Exchange hashpartitioning".r
         .findAllIn(stats.queryExecution.executedPlan.toString).length
-      finally rankTable.unpersist(blocking = false)
+      finally h.release()
     }
     val one = exchanges(Seq("l_quantity"))
     val three = exchanges(Seq("l_quantity", "l_discount", "l_tax"))

@@ -201,6 +201,8 @@ class RuntimeSpec extends AnyFunSuite {
     val vecs = (0L until 100L).map(i => (i, Array.fill(16)(rng.nextFloat())))
       .toDF("vec_id", "embedding")
     val planes = Similarity.hyperplanes(16, 16)
+    val roc = Seq((1.0, 4.0, "a"), (2.0, 3.0, "b"), (3.0, 2.0, "a"), (4.0, 1.0, "b"))
+      .toDF("x1", "x2", "y")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     (0 until 2).foreach { _ =>
       val h = new CacheHandle
@@ -217,6 +219,7 @@ class RuntimeSpec extends AnyFunSuite {
         Dedup.duplicateSpans(docs, "doc_id", "text", k = 3, handle = h).count()
         Dedup.resolveClusters(
           Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b"), "a", "b", handle = h).count()
+        graft.select.RocStep(topP = Some(1)).fit(roc, "y", Nil)
       } finally h.release()
     }
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before

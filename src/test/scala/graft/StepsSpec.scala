@@ -133,6 +133,18 @@ class StepsSpec extends AnyFunSuite {
     assert(corr.summary == "Carscore feature selection (1 excluded)")
   }
 
+  test("tidy: termsDF rows == excluded; scoresDF by score descending, NA last (tidy_filter_step.R:4-7)") {
+    val fitted = InfoGainStep(topP = Some(2)).fit(df, "species", Seq("f1", "f2", "f3"))
+    assert(fitted.termsDF(spark).as[String].collect().toSeq == fitted.excluded)
+    val withNa = fitted.copy(scores = ("f0" -> None) +: fitted.scores)
+    val tidy = withNa.scoresDF(spark).collect().toSeq
+      .map(r => r.getString(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+    assert(tidy.toSet == withNa.scores.toSet)
+    assert(tidy.last == ("f0" -> None), "NA scores sort last")
+    val known = tidy.init.map(_._2.get)
+    assert(known == known.sorted.reverse, s"scores must be descending: $known")
+  }
+
   test("XtabStep: minimize semantics with BH-adjusted p-values") {
     val cat = df.select(
       when(col("f1") > 2, "hi").otherwise("lo").as("x_informative"),

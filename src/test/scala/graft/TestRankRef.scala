@@ -34,7 +34,7 @@ object TestRankRef {
     * with a single batched pairwise pass. Selection order and criterion
     * values must match exactly (modulo fp reassociation ≤ 1e-9). */
   def mrmrNaive(binned: DataFrame, preds: Seq[String]): List[(String, Double)] = {
-    val relevance = Entropy.mutualInfoAgainst(binned, "__y", preds)
+    val relevance = Entropy.scoresAgainst(binned, "__y", preds, Entropy.InfoGain)
     var out = List.empty[(String, Double)]
     var selected = List.empty[String]
     var remaining = preds.filter(p => relevance.get(p).exists(v => !v.isNaN))
@@ -49,18 +49,18 @@ object TestRankRef {
       selected = best :: selected
       remaining = remaining.filterNot(_ == best)
       if (remaining.nonEmpty)
-        Entropy.mutualInfoAgainst(binned, best, remaining).foreach {
+        Entropy.scoresAgainst(binned, best, remaining, Entropy.InfoGain).foreach {
           case (p, v) => if (!v.isNaN) redundancySum(p) += v
         }
     }
     out.reverse
   }
 
-  /** NAIVE sequential FCBF redundancy elimination (one suAgainst job per
+  /** NAIVE sequential FCBF redundancy elimination (one scoresAgainst job per
     * keeper) over the prepared/cached work frame — the formulation the
     * production wave-batched loop must reproduce keeper-for-keeper. */
   def fcbfNaiveKeepers(work: DataFrame, usable: Seq[String], minimumSu: Double): List[String] = {
-    val su = Entropy.suAgainst(work, "__y", usable)
+    val su = Entropy.scoresAgainst(work, "__y", usable, Entropy.SymUncert)
     var ranked = usable
       .flatMap(p => su.get(p).filterNot(_.isNaN).filter(_ >= minimumSu).map(p -> _))
       .sortBy(-_._2)
@@ -71,7 +71,7 @@ object TestRankRef {
       selected = fp :: selected
       val rest = ranked.tail
       if (rest.nonEmpty) {
-        val redSu = Entropy.suAgainst(work, fp, rest.map(_._1))
+        val redSu = Entropy.scoresAgainst(work, fp, rest.map(_._1), Entropy.SymUncert)
         ranked = rest.filterNot { case (fq, suQy) => redSu.get(fq).exists(_ >= suQy) }
       } else ranked = Nil
     }
