@@ -248,15 +248,12 @@ final case class VipStep(
     threshold: Option[Double] = None,
     cutoff: Option[Double] = None,
     scale: Boolean = true
-) extends SelectorStep {
+) extends FilterStep {
   val name = "step_select_vip"
-  def fit(df: DataFrame, outcome: String, predictors: Seq[String]): FittedSelector = {
+  protected def score(df: DataFrame, outcome: String, predictors: Seq[String]): Seq[(String, Option[Double])] = {
     val preds = StepCommon.resolvePredictors(df, outcome, predictors)
     val raw0 = importanceFn(df, outcome, preds)
     val raw = if (scale) DualFilter.rescale(raw0) else raw0
-    val scores = preds.map(p => p -> raw.get(p).filterNot(_.isNaN))
-    val (excluded, warns) =
-      StepCommon.select(scores, topP, threshold, cutoff, maximize = true, name)
-    FittedSelector(name, outcome, scores, excluded, warns)
+    preds.map(p => p -> raw.get(p))
   }
 }

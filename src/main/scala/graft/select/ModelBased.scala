@@ -113,10 +113,9 @@ final case class LinearStep(
     cutoff: Option[Double] = None,
     penalty: Double = 0.0,
     mixture: Double = 0.0
-) extends SelectorStep {
+) extends FilterStep {
   val name = "step_select_linear"
-  def fit(df: DataFrame, outcome: String, predictors: Seq[String]): FittedSelector = {
-    StepCommon.preValidate(topP, threshold, name)
+  protected def score(df: DataFrame, outcome: String, predictors: Seq[String]): Seq[(String, Option[Double])] = {
     val preds0 = StepCommon.resolvePredictors(df, outcome, predictors)
     val preds = StepCommon.numericPredictors(df, preds0)
     // complete cases, like R's na.omit (VectorAssembler's skip only covers
@@ -147,12 +146,7 @@ final case class LinearStep(
         ImportanceExtractor.linear.importances(m, preds)
       }
     // abs(coef); NA/NaN coefficients are force-excluded (:172–173)
-    val scores = preds.map { p =>
-      p -> coefs.get(p).filterNot(_.isNaN).map(math.abs)
-    }
-    val (excluded, warns) =
-      StepCommon.select(scores, topP, threshold, cutoff, maximize = true, name)
-    FittedSelector(name, outcome, scores, excluded, warns)
+    preds.map(p => p -> coefs.get(p).map(math.abs))
   }
 }
 
@@ -167,10 +161,9 @@ final case class TreeStep(
     maxDepth: Int = 5,
     seed: Long = 42L,
     maxBins: Int = 32 // split-candidate bins; fewer = faster stats passes
-) extends SelectorStep {
+) extends FilterStep {
   val name = "step_select_tree"
-  def fit(df: DataFrame, outcome: String, predictors: Seq[String]): FittedSelector = {
-    StepCommon.preValidate(topP, threshold, name)
+  protected def score(df: DataFrame, outcome: String, predictors: Seq[String]): Seq[(String, Option[Double])] = {
     val preds0 = StepCommon.resolvePredictors(df, outcome, predictors)
     val preds = StepCommon.numericPredictors(df, preds0)
     val dfc = df.na.drop(preds :+ outcome) // complete cases (null label fails the fit)
@@ -190,10 +183,7 @@ final case class TreeStep(
         ImportanceExtractor.dtR.importances(m, preds)
       }
     val rescaled = DualFilter.rescale(imps)
-    val scores = preds.map(p => p -> rescaled.get(p).filterNot(_.isNaN))
-    val (excluded, warns) =
-      StepCommon.select(scores, topP, threshold, cutoff, maximize = true, name)
-    FittedSelector(name, outcome, scores, excluded, warns)
+    preds.map(p => p -> rescaled.get(p))
   }
 }
 
@@ -214,7 +204,7 @@ final case class ForestStep(
     importance: String = "permutation",
     maxBins: Int = 32, // RF split-candidate bins; fewer = faster stats passes
     subsample: Double = 1.0 // per-tree subsampling rate (ranger's sample.fraction)
-) extends SelectorStep {
+) extends FilterStep {
   val name = "step_select_forests"
 
   import org.apache.spark.sql.expressions.Window
@@ -244,12 +234,19 @@ final case class ForestStep(
       .select(others.map(col) :+ col("__pv").as(c): _*)
   }
 
-  def fit(df: DataFrame, outcome: String, predictors: Seq[String]): FittedSelector = {
-    StepCommon.preValidate(topP, threshold, name)
+  protected def score(df: DataFrame, outcome: String, predictors: Seq[String]): Seq[(String, Option[Double])] = {
     val preds0 = StepCommon.resolvePredictors(df, outcome, predictors)
     val preds = StepCommon.numericPredictors(df, preds0)
     val classif = StepCommon.isClassification(df, outcome)
     val dfc = df.na.drop(preds :+ outcome) // complete cases (null label fails the fit)
+    val classifier = new RandomForestClassifier()
+      .setFeaturesCol("__features").setLabelCol("__label")
+      .setNumTrees(trees).setMaxDepth(maxDepth).setMaxBins(maxBins)
+      .setSubsamplingRate(subsample).setSeed(seed)
+    val regressor = new RandomForestRegressor()
+      .setFeaturesCol("__features").setLabelCol(outcome)
+      .setNumTrees(trees).setMaxDepth(maxDepth).setMaxBins(maxBins)
+      .setSubsamplingRate(subsample).setSeed(seed)
     val imps: Map[String, Double] =
       if (importance == "permutation") {
         // deterministic train/holdout split by row hash
@@ -264,11 +261,7 @@ final case class ForestStep(
             // label mapping fit ONCE on the full data: a holdout missing an
             // alphabetically-early class must not shift indices
             val indexer = ModelBased.labelIndexer(dfc, outcome)
-            val m = new RandomForestClassifier()
-              .setFeaturesCol("__features").setLabelCol("__label")
-              .setNumTrees(trees).setMaxDepth(maxDepth).setMaxBins(maxBins)
-              .setSubsamplingRate(subsample).setSeed(seed)
-              .fit(ModelBased.assemble(indexer.transform(train), preds))
+            val m = classifier.fit(ModelBased.assemble(indexer.transform(train), preds))
             def acc(d: DataFrame): Double = {
               val scored = m.transform(ModelBased.assemble(indexer.transform(d), preds))
               scored.select(avg((col("prediction") === col("__label")).cast("double")))
@@ -277,11 +270,7 @@ final case class ForestStep(
             val base = acc(hold)
             preds.map(p => p -> (base - acc(permuteColumn(hold, p, seed, permBuckets)))).toMap
           } else {
-            val m = new RandomForestRegressor()
-              .setFeaturesCol("__features").setLabelCol(outcome)
-              .setNumTrees(trees).setMaxDepth(maxDepth).setMaxBins(maxBins)
-              .setSubsamplingRate(subsample).setSeed(seed)
-              .fit(ModelBased.assemble(train, preds))
+            val m = regressor.fit(ModelBased.assemble(train, preds))
             def mse(d: DataFrame): Double = {
               val scored = m.transform(ModelBased.assemble(d, preds))
               scored.select(avg(pow(col("prediction") - col(outcome), 2))).head().getDouble(0)
@@ -292,25 +281,12 @@ final case class ForestStep(
         } finally { train.unpersist(); hold.unpersist() }
       } else if (classif) {
         val (indexed, _) = ModelBased.indexLabel(dfc, outcome)
-        val m = new RandomForestClassifier()
-          .setFeaturesCol("__features").setLabelCol("__label")
-          .setNumTrees(trees).setMaxDepth(maxDepth).setMaxBins(maxBins)
-              .setSubsamplingRate(subsample).setSeed(seed)
-          .fit(ModelBased.assemble(indexed, preds))
-        ImportanceExtractor.rfC.importances(m, preds)
+        ImportanceExtractor.rfC.importances(classifier.fit(ModelBased.assemble(indexed, preds)), preds)
       } else {
-        val m = new RandomForestRegressor()
-          .setFeaturesCol("__features").setLabelCol(outcome)
-          .setNumTrees(trees).setMaxDepth(maxDepth).setMaxBins(maxBins)
-              .setSubsamplingRate(subsample).setSeed(seed)
-          .fit(ModelBased.assemble(dfc, preds))
-        ImportanceExtractor.rfR.importances(m, preds)
+        ImportanceExtractor.rfR.importances(regressor.fit(ModelBased.assemble(dfc, preds)), preds)
       }
     val rescaled = DualFilter.rescale(imps)
-    val scores = preds.map(p => p -> rescaled.get(p).filterNot(_.isNaN))
-    val (excluded, warns) =
-      StepCommon.select(scores, topP, threshold, cutoff, maximize = true, name)
-    FittedSelector(name, outcome, scores, excluded, warns)
+    preds.map(p => p -> rescaled.get(p))
   }
 }
 
@@ -321,17 +297,13 @@ final case class AovStep(
     topP: Option[Double] = None,
     threshold: Option[Double] = None,
     cutoff: Option[Double] = None
-) extends SelectorStep {
+) extends FilterStep {
   val name = "step_select_aov"
-  def fit(df: DataFrame, outcome: String, predictors: Seq[String]): FittedSelector = {
-    StepCommon.preValidate(topP, threshold, name)
+  protected def score(df: DataFrame, outcome: String, predictors: Seq[String]): Seq[(String, Option[Double])] = {
     val preds0 = StepCommon.resolvePredictors(df, outcome, predictors)
     val preds = StepCommon.categoricalPredictors(df, preds0)
     require(!StepCommon.isClassification(df, outcome), s"$name requires a numeric outcome")
     val raw = Anova.scores(df, outcome, preds)
-    val scores = preds.map(p => p -> raw.get(p).filterNot(_.isNaN))
-    val (excluded, warns) =
-      StepCommon.select(scores, topP, threshold, cutoff, maximize = true, name)
-    FittedSelector(name, outcome, scores, excluded, warns)
+    preds.map(p => p -> raw.get(p))
   }
 }

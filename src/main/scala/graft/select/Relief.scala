@@ -48,11 +48,10 @@ final case class ReliefStep(
     neighbours: Int = 5,
     sampleSize: Int = 10,
     seed: Long = 42L
-) extends SelectorStep {
+) extends FilterStep {
   val name = "step_select_relief"
 
-  def fit(df: DataFrame, outcome: String, predictors: Seq[String]): FittedSelector = {
-    StepCommon.preValidate(topP, threshold, name)
+  protected def score(df: DataFrame, outcome: String, predictors: Seq[String]): Seq[(String, Option[Double])] = {
     require(neighbours >= 1, "`neighbours` must be >= 1")
     require(sampleSize >= 1, "`sampleSize` must be >= 1")
     val preds0 = StepCommon.resolvePredictors(df, outcome, predictors)
@@ -199,9 +198,6 @@ final case class ReliefStep(
       }
     }
 
-    val scores = preds.map(p => p -> Some(weights(p)).filterNot(_.isNaN))
-    val (excluded, warns) =
-      StepCommon.select(scores, topP, threshold, cutoff, maximize = true, name)
-    FittedSelector(name, outcome, scores, excluded, warns)
+    preds.map(p => p -> Some(weights(p)))
   }
 }

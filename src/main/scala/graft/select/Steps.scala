@@ -80,8 +80,9 @@ object StepCommon {
     *    through.
     *  - REGRESSION (`equal = TRUE`): numeric outcome AND predictors
     *    equal-frequency binned into nbins (README.md:27–35).
-    * Returns the long form (feature, xb, yb). */
-  def binnedLong(
+    * Returns the wide form: every predictor as a string bin column, plus the
+    * binned outcome as `__y`. */
+  def binnedWide(
       df: DataFrame,
       outcome: String,
       preds: Seq[String],
@@ -108,37 +109,7 @@ object StepCommon {
     val yCol =
       if (classif) col(outcome).cast("string").as("__y")
       else Binning.binByCuts(col(outcome), cuts(outcome)).cast("string").as("__y")
-    val binned = df.select(binnedCols :+ yCol: _*)
-    Melt
-      .categorical(binned, preds, keep = Seq("__y"))
-      .select(col("feature"), col("value").as("xb"), col("__y").as("yb"))
-  }
-
-  /** Pre-scoring validation, in the reference's order (prep validates
-    * BEFORE computing scores, step_select_infgain.R:129–131). Note the
-    * reference quirk: check_criteria runs unconditionally, so cutoff-only
-    * steps abort too — dual_filter itself supports cutoff-only but no step
-    * can reach it. */
-  def preValidate(topP: Option[Double], threshold: Option[Double], stepName: String): Unit = {
-    DualFilter.checkCriteria(topP, threshold, stepName)
-    DualFilter.checkZeroOne(threshold)
-    ()
-  }
-
-  /** Shared criteria validation + dual_filter application. */
-  def select(
-      scores: Seq[(String, Option[Double])],
-      topP: Option[Double],
-      threshold: Option[Double],
-      cutoff: Option[Double],
-      maximize: Boolean,
-      stepName: String
-  ): (Seq[String], Seq[String]) = {
-    DualFilter.checkCriteria(topP, threshold, stepName)
-    DualFilter.checkZeroOne(threshold)
-    val (clamped, warn) = DualFilter.checkTopP(topP, scores.length)
-    val excluded = DualFilter.dualFilter(scores, clamped, threshold, cutoff, maximize)
-    (excluded, warn.toSeq)
+    df.select(binnedCols :+ yCol: _*)
   }
 }
 
@@ -230,6 +201,35 @@ trait SelectorStep extends Serializable {
     TunableParam("cutoff", "double", "unknown (score-scale dependent)"))
 }
 
+/** The prep lifecycle of every step that ends in dual_filter
+  * (step_select_infgain.R:124–179): validate the criteria BEFORE any
+  * scoring (check_criteria, check_zero_one), score, treat NaN as NA, clamp
+  * top_p against the feature count, apply [[DualFilter.dualFilter]] and wrap
+  * the result. A step implements only [[score]]. Note the reference quirk:
+  * check_criteria runs unconditionally, so cutoff-only steps abort too —
+  * dual_filter itself supports cutoff-only but no step can reach it. */
+trait FilterStep extends SelectorStep {
+  def topP: Option[Double]
+  def threshold: Option[Double]
+  def cutoff: Option[Double]
+
+  /** dual_filter's direction: larger scores are better. */
+  protected def maximize: Boolean = true
+
+  /** Per-feature scores in the step's own order (stored as-is on the
+    * fitted step); None or NaN is NA, which dual_filter always excludes. */
+  protected def score(df: DataFrame, outcome: String, predictors: Seq[String]): Seq[(String, Option[Double])]
+
+  final def fit(df: DataFrame, outcome: String, predictors: Seq[String]): FittedSelector = {
+    DualFilter.checkCriteria(topP, threshold, name)
+    DualFilter.checkZeroOne(threshold)
+    val scores = score(df, outcome, predictors).map { case (f, s) => f -> s.filterNot(_.isNaN) }
+    val (clamped, warn) = DualFilter.checkTopP(topP, scores.length)
+    val excluded = DualFilter.dualFilter(scores, clamped, threshold, cutoff, maximize)
+    FittedSelector(name, outcome, scores, excluded, warn.toSeq)
+  }
+}
+
 /** step_select_infgain (type ∈ infogain|gainratio|symuncert, nbins).
   * `binning = "mdl"` (default) applies Fayyad–Irani MDL discretization to
   * numeric predictors in classification mode — FSelectorRcpp's behavior
@@ -241,19 +241,17 @@ final case class InfoGainStep(
     kind: Entropy.Kind = Entropy.InfoGain,
     nbins: Int = 5,
     binning: String = "mdl"
-) extends SelectorStep {
+) extends FilterStep {
   val name = "step_select_infgain"
   override def tunable: Seq[TunableParam] = super.tunable :+
     TunableParam("type", "enum", "infogain | gainratio | symuncert") // parameters.R:75–82
-  def fit(df: DataFrame, outcome: String, predictors: Seq[String]): FittedSelector = {
-    StepCommon.preValidate(topP, threshold, name)
+  protected def score(df: DataFrame, outcome: String, predictors: Seq[String]): Seq[(String, Option[Double])] = {
     val preds = StepCommon.resolvePredictors(df, outcome, predictors)
-    val long = StepCommon.binnedLong(df, outcome, preds, nbins, mdlForClassif = binning == "mdl")
+    val binned = StepCommon.binnedWide(df, outcome, preds, nbins, mdlForClassif = binning == "mdl")
+    val long = Melt.categorical(binned, preds, keep = Seq("__y"))
+      .select(col("feature"), col("value").as("xb"), col("__y").as("yb"))
     val got = Entropy.scores(long, kind).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val scores = preds.map(p => p -> got.get(p).filterNot(_.isNaN))
-    val (excluded, warns) =
-      StepCommon.select(scores, topP, threshold, cutoff, maximize = true, name)
-    FittedSelector(name, outcome, scores, excluded, warns)
+    preds.map(p => p -> got.get(p))
   }
 }
 
@@ -264,7 +262,7 @@ final case class InfoGainStep(
   *
   * Scale shape: ONE distributed pass computes I(Xᵢ;Y) for all i AND the
   * full pairwise redundancy matrix I(Xᵢ;Xⱼ) (batched explode over the
-  * cached binned table; the shuffle carries ≤ p²·nbins² count rows); the
+  * binned table; the shuffle carries ≤ p²·nbins² count rows); the
   * greedy replay itself is driver arithmetic — no per-round Spark jobs.
   */
 final case class MrmrStep(
@@ -272,41 +270,27 @@ final case class MrmrStep(
     threshold: Option[Double] = None,
     cutoff: Option[Double] = None,
     nbins: Int = 5
-) extends SelectorStep {
+) extends FilterStep {
   val name = "step_select_mrmr"
-  def fit(df: DataFrame, outcome: String, predictors: Seq[String]): FittedSelector = {
-    StepCommon.preValidate(topP, threshold, name)
+  protected def score(df: DataFrame, outcome: String, predictors: Seq[String]): Seq[(String, Option[Double])] = {
     val preds = StepCommon.resolvePredictors(df, outcome, predictors)
-    val numeric = StepCommon.numericPredictors(df, preds)
-    val classif = StepCommon.isClassification(df, outcome)
-    val toCut = if (classif) numeric else numeric :+ outcome
     // A/B-measured round 6 and left PLAIN: both fanOut(binned) (the prior
     // shape) and a cached fanned projection shared by exactCuts' three
     // jobs regressed q_mrmr here (2.2 -> 2.6-2.8 s) — the pairwise
     // explode's map-side combine is cheap enough per row that the extra
     // exchange (and the cache fill + in-memory rescans) cost more than
     // the under-split scans they replace.
-    val cuts = if (toCut.nonEmpty) Binning.exactCuts(df, toCut.distinct, nbins) else Map.empty[String, Array[Double]]
-    val binned = df
-      .select(
-        preds.map { p =>
-          if (numeric.contains(p)) Binning.binByCuts(col(p), cuts(p)).cast("string").as(p)
-          else col(p).cast("string").as(p)
-        } :+ (if (classif) col(outcome).cast("string").as("__y")
-              else Binning.binByCuts(col(outcome), cuts(outcome)).cast("string").as("__y")): _*
-      )
-    // cache only when the batched pairwise pass will rescan (chunked >1024
-    // pairs) — with one chunk the single scan makes materialization a net loss
-    val wantCache = (preds.size + 1).toLong * preds.size / 2 > 1024
+    val binned = StepCommon.binnedWide(df, outcome, preds, nbins)
+    // cache only when the batched pairwise pass will rescan (more than one
+    // pair chunk) — with one chunk the single scan makes materialization a
+    // net loss
+    val wantCache = !Entropy.fitsOneChunk(preds.size + 1)
     if (wantCache) binned.cache()
     try {
       // ONE batched job computes every pair statistic the greedy loop can
-      // touch — relevance I(Xᵢ;Y) (same xb=predictor orientation as the old
-      // per-round melt) plus the full redundancy matrix I(Xᵢ;Xⱼ), which a
-      // full-ranking mRMR needs in its entirety anyway. The loop below is
-      // then pure driver arithmetic over p² doubles: p−1 small Spark jobs
-      // (one per greedy round) collapse into one (the Boruta batching
-      // pattern; round-4 verdict task).
+      // touch — relevance I(Xᵢ;Y) plus the full redundancy matrix I(Xᵢ;Xⱼ),
+      // which a full-ranking mRMR needs in its entirety anyway. The loop
+      // below is then pure driver arithmetic over p² doubles.
       val pairStats = Entropy.pairwiseScoresAll(binned, preds :+ "__y", Entropy.InfoGain)
       def pairMi(a: String, b: String): Option[Double] =
         pairStats.get((a, b)).orElse(pairStats.get((b, a)))
@@ -328,10 +312,7 @@ final case class MrmrStep(
           pairMi(best, p).filterNot(_.isNaN).foreach(v => redundancySum(p) += v)
         }
       }
-      val allScores = scores.toList ++ preds.filterNot(p => scores.exists(_._1 == p)).map(_ -> None)
-      val (excluded, warns) =
-        StepCommon.select(allScores, topP, threshold, cutoff, maximize = true, name)
-      FittedSelector(name, outcome, allScores, excluded, warns)
+      scores.toList ++ preds.filterNot(p => scores.exists(_._1 == p)).map(_ -> None)
     } finally if (wantCache) binned.unpersist()
   }
 }
@@ -344,20 +325,17 @@ final case class XtabStep(
     cutoff: Option[Double] = None,
     fisher: Boolean = false,
     fdr: Boolean = true
-) extends SelectorStep {
+) extends FilterStep {
   val name = "step_select_xtab"
-  def fit(df: DataFrame, outcome: String, predictors: Seq[String]): FittedSelector = {
-    StepCommon.preValidate(topP, threshold, name)
+  override protected def maximize = false
+  protected def score(df: DataFrame, outcome: String, predictors: Seq[String]): Seq[(String, Option[Double])] = {
     val preds0 = StepCommon.resolvePredictors(df, outcome, predictors)
     val preds = StepCommon.categoricalPredictors(df, preds0)
     require(preds.nonEmpty, "step_select_xtab requires nominal predictors")
     val long = Melt
       .categorical(df, preds, keep = Seq(outcome))
       .select(col("feature"), col("value").as("xb"), col(outcome).cast("string").as("yb"))
-    val scores = ChiSq.xtabScores(long, fisher, fdr)
-    val (excluded, warns) =
-      StepCommon.select(scores, topP, threshold, cutoff, maximize = false, name)
-    FittedSelector(name, outcome, scores, excluded, warns)
+    ChiSq.xtabScores(long, fisher, fdr)
   }
 }
 
@@ -377,10 +355,9 @@ final case class CorrStep(
     // unshrunk unless a lambda is pinned (shrinking a marginal-only score is
     // a monotone rescale that cannot change the selection).
     lambda: Option[Double] = None
-) extends SelectorStep {
+) extends FilterStep {
   val name = s"step_select_corr_$method"
-  def fit(df: DataFrame, outcome: String, predictors: Seq[String]): FittedSelector = {
-    StepCommon.preValidate(topP, threshold, name)
+  protected def score(df: DataFrame, outcome: String, predictors: Seq[String]): Seq[(String, Option[Double])] = {
     val preds0 = StepCommon.resolvePredictors(df, outcome, predictors)
     val preds = StepCommon.numericPredictors(df, preds0)
     require(!StepCommon.isClassification(df, outcome), s"$name requires a numeric outcome")
@@ -395,10 +372,7 @@ final case class CorrStep(
       case "car"      => Correlation.carScores(df, preds, outcome, lambda).map { case (k, v) => k -> Some(v) }
       case other      => throw new IllegalArgumentException(s"unknown method $other")
     }
-    val scores = preds.map(p => p -> raw.getOrElse(p, None).map(math.abs).filterNot(_.isNaN))
-    val (excluded, warns) =
-      StepCommon.select(scores, topP, threshold, cutoff, maximize = true, name)
-    FittedSelector(name, outcome, scores, excluded, warns)
+    preds.map(p => p -> raw.getOrElse(p, None).map(math.abs))
   }
 }
 
@@ -408,10 +382,9 @@ final case class RocStep(
     topP: Option[Double] = None,
     threshold: Option[Double] = None,
     cutoff: Option[Double] = None
-) extends SelectorStep {
+) extends FilterStep {
   val name = "step_select_roc"
-  def fit(df: DataFrame, outcome: String, predictors: Seq[String]): FittedSelector = {
-    StepCommon.preValidate(topP, threshold, name)
+  protected def score(df: DataFrame, outcome: String, predictors: Seq[String]): Seq[(String, Option[Double])] = {
     val preds0 = StepCommon.resolvePredictors(df, outcome, predictors)
     val preds = StepCommon.numericPredictors(df, preds0)
     require(StepCommon.isClassification(df, outcome), s"$name requires a categorical outcome")
@@ -423,10 +396,7 @@ final case class RocStep(
     val got =
       try Auc.scores(long, pairs, h).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       finally h.release()
-    val scores = preds.map(p => p -> got.get(p).filterNot(_.isNaN))
-    val (excluded, warns) =
-      StepCommon.select(scores, topP, threshold, cutoff, maximize = true, name)
-    FittedSelector(name, outcome, scores, excluded, warns)
+    preds.map(p => p -> got.get(p))
   }
 }
 
@@ -438,8 +408,7 @@ final case class RocStep(
   * better-ranked one (SU(X_i;X_j) >= SU(X_j;Y)). Threshold-only — no
   * dual_filter. A cutpoint outside (0, 1) — or NaN — aborts with the
   * reference's message (step_select_fcbf.R:87–92). */
-final case class FcbfStep(minimumSu: Double = 0.025, cutpoint: Double = 0.5,
-    allPairsMaxP: Int = 44) extends SelectorStep {
+final case class FcbfStep(minimumSu: Double = 0.025, cutpoint: Double = 0.5) extends SelectorStep {
   require(!cutpoint.isNaN && cutpoint > 0 && cutpoint < 1,
     "`cutpoint` must be a number between 0-1")
   val name = "step_select_fcbf"
@@ -473,81 +442,59 @@ final case class FcbfStep(minimumSu: Double = 0.025, cutpoint: Double = 0.5,
     val allNull = preds.filter(nonNull(_) == 0L)
     val usable = preds.filterNot(allNull.contains)
     val warns = allNull.map(p => s"Column '$p' is all NULL and was removed before FCBF")
-    val split = numeric.foldLeft(sel) { case (d, c) =>
-      cutsAndCounts(c)._2 match {
-        case None      => d.withColumn(c, lit(null: String))
-        case Some(cut) => d.withColumn(c, Binning.medianSplitCol(col(c), cut))
-      }
-    }
-    val work = split
+    val work = Binning.splitAtCuts(sel, numeric.map(c => c -> cutsAndCounts(c)._2))
       .select(usable.map(p => col(p).cast("string").as(p)) :+ col(outcome).cast("string").as("__y"): _*)
-    // Small p (all pairs fit one chunk): compute SU(Xᵢ;Y) AND the complete
-    // redundancy matrix SU(Xᵢ;Xⱼ) in ONE batched job and run the whole
-    // elimination driver-side — no cache, single scan. Large p: wave-batch
-    // (below) so at most O(keepers·p) pair stats are ever computed.
-    // default 44: C(45,2) = 990 pairs over usable+outcome stay within
-    // pairwiseScores' 1024-pair chunk, so the uncached single-scan rationale
-    // holds; 45 would give C(46,2) = 1035 → two chunks → two full scans
-    val allPairsUpfront = usable.size <= allPairsMaxP
-    if (allPairsUpfront) {
-      val pairStats = Entropy.pairwiseScoresAll(work, usable :+ "__y", Entropy.SymUncert)
-      val su = usable.flatMap(p => pairStats.get((p, "__y")).map(p -> _)).toMap
-      def redOf(fq: String, fp: String): Option[Double] =
-        pairStats.get((fq, fp)).orElse(pairStats.get((fp, fq)))
-      var ranked = usable
-        .flatMap(p => su.get(p).filterNot(_.isNaN).filter(_ >= minimumSu).map(p -> _))
-        .sortBy(-_._2)
-        .toList
-      var selected = List.empty[String]
-      while (ranked.nonEmpty) {
-        val (fp, _) = ranked.head
-        selected = fp :: selected
-        ranked = ranked.tail.filterNot { case (fq, suQy) => redOf(fq, fp).exists(_ >= suQy) }
-      }
-      val keep = selected.toSet
-      val scores = preds.map(p => p -> su.get(p).filterNot(_.isNaN))
-      return FittedSelector(name, outcome, scores, excluded = preds.filterNot(keep.contains), warns)
-    }
-    work.cache()
+    // When every pair over usable + outcome fits one pair chunk, SU(Xᵢ;Y)
+    // AND the complete redundancy matrix come from ONE batched job over
+    // the uncached input (a single scan). Otherwise the input is cached,
+    // SU(Xᵢ;Y) is one job, and the loop below computes redundancies per
+    // wave, so at most O(keepers·p) pair stats are ever computed.
+    val allPairs =
+      if (Entropy.fitsOneChunk(usable.size + 1))
+        Some(Entropy.pairwiseScoresAll(work, usable :+ "__y", Entropy.SymUncert))
+      else { work.cache(); None }
     try {
-      val su = Entropy.scoresAgainst(work, "__y", usable, Entropy.SymUncert)
+      val su = allPairs match {
+        case Some(m) => usable.flatMap(p => m.get((p, "__y")).map(p -> _)).toMap
+        case None    => Entropy.scoresAgainst(work, "__y", usable, Entropy.SymUncert)
+      }
       var ranked = usable
         .flatMap(p => su.get(p).filterNot(_.isNaN).filter(_ >= minimumSu).map(p -> _))
         .sortBy(-_._2)
         .toList
       var selected = List.empty[String]
-      // Wave-batched redundancy elimination: one keeper per round used to
-      // mean one small scoresAgainst job per retained feature. The pairwise SU
-      // values are selection-order-independent, so we precompute, in ONE
-      // batched job, SU(wᵢ, f) for the next `wave` candidates wᵢ against
-      // everything ranked after them, then replay the exact sequential
-      // FCBF semantics driver-side (a wave member dropped by an earlier
-      // one is skipped; its precomputed stats go unused). Job count falls
-      // from #keepers to ceil(#keepers/wave) without touching selections.
+      // Wave-batched redundancy elimination: the pairwise SU values are
+      // selection-order-independent, so each wave takes SU(wᵢ, f) for the
+      // next `wave` candidates wᵢ against everything ranked after them
+      // (without all pairs: ONE batched job per wave), then replays the
+      // exact sequential FCBF semantics driver-side (a wave member dropped
+      // by an earlier one is skipped; its stats go unused). Job count is
+      // ceil(#keepers/wave), not #keepers.
       val wave = 8
       while (ranked.nonEmpty) {
         val heads = ranked.take(wave).map(_._1)
-        val pairs = for {
-          (w, i) <- heads.zipWithIndex
-          (f, _) <- ranked.drop(i + 1)
-        } yield (f, w) // orientation (f, w): xb = candidate, yb = keeper —
-                       // identical to scoresAgainst(work, keeper, rest, SymUncert)
-        val redSu = Entropy.pairwiseScores(work, pairs, Entropy.SymUncert)
-        var processed = 0
+        val red: ((String, String)) => Option[Double] = allPairs match {
+          case Some(m) => k => m.get(k).orElse(m.get(k.swap))
+          case None =>
+            val pairs = for {
+              (w, i) <- heads.zipWithIndex
+              (f, _) <- ranked.drop(i + 1)
+            } yield (f, w) // orientation (f, w): xb = candidate, yb = keeper —
+                           // identical to scoresAgainst(work, keeper, rest, SymUncert)
+            Entropy.pairwiseScores(work, pairs, Entropy.SymUncert).get
+        }
         var cur = ranked
-        while (cur.nonEmpty && processed < wave && heads.contains(cur.head._1)) {
+        while (cur.nonEmpty && heads.contains(cur.head._1)) {
           val (fp, _) = cur.head
-          processed = heads.indexOf(fp) + 1
           selected = fp :: selected
-          cur = cur.tail.filterNot { case (fq, suQy) => redSu.get((fq, fp)).exists(_ >= suQy) }
+          cur = cur.tail.filterNot { case (fq, suQy) => red((fq, fp)).exists(_ >= suQy) }
         }
         ranked = cur
       }
       val keep = selected.toSet
       val scores = preds.map(p => p -> su.get(p).filterNot(_.isNaN))
-      val excluded = preds.filterNot(keep.contains)
-      FittedSelector(name, outcome, scores, excluded, warns)
-    } finally work.unpersist()
+      FittedSelector(name, outcome, scores, excluded = preds.filterNot(keep.contains), warns)
+    } finally if (allPairs.isEmpty) work.unpersist()
     } finally sel.unpersist(blocking = false)
   }
 }

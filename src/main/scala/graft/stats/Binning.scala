@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   *    comparison against the collected cuts. Fully scalable: no global sort,
   *    pure map-side `when` chain. Rows tied at a cut point all land in the
   *    lower bin (deterministic).
-  *  - [[medianSplit]] — the reference's FCBF discretize_var
+  *  - [[quantileSplit]] — the reference's FCBF discretize_var
   *    (/root/reference/R/step_select_fcbf.R:256–270): values <= type-7
-  *    median → 'l', > median → 'h', NULL stays NULL
+  *    quantile (the median by default) → 'l', above → 'h', NULL stays NULL
   *    (tests: /root/reference/tests/testthat/test_discretize_var.R:1–13).
   */
 object Binning {
@@ -406,27 +406,23 @@ object Binning {
   /** Quantile-split each numeric column to 'l'/'h' string columns in place:
     * the reference's discretize_var at an arbitrary `cutpoint` quantile
     * (step_select_fcbf.R:256–270 — `stats::quantile(x, cutpoint)` is R
-    * type-7, which Spark's `percentile` matches exactly). Same rules as the
-    * median case: values <= cut go 'l' (ties low), NULL stays NULL, NAs are
-    * ignored when computing the cut. All cuts in ONE distributed pass;
-    * all-NULL columns yield all-NULL output (null percentile).
+    * type-7, which Spark's `percentile` matches exactly). Values <= cut go
+    * 'l' (ties low), NULL stays NULL, NAs are ignored when computing the
+    * cut. All cuts in ONE distributed pass; all-NULL columns yield all-NULL
+    * output (null percentile).
     */
   def quantileSplit(df: DataFrame, cols: Seq[String], cutpoint: Double): DataFrame = {
     require(cutpoint > 0 && cutpoint < 1, s"cutpoint must be in (0, 1), got $cutpoint")
     if (cols.isEmpty) return df
     val cuts = quantileType7(df, cols, cutpoint)
-    cols.foldLeft(df) { case (d, c) =>
-      cuts(c) match {
-        case None      => d.withColumn(c, lit(null: String))
-        case Some(cut) => d.withColumn(c, medianSplitCol(col(c), cut))
-      }
-    }
+    splitAtCuts(df, cols.map(c => c -> cuts(c)))
   }
 
-  /** Median-split each numeric column to 'l'/'h' string columns in place
-    * (FCBF preprocessing at the default cutpoint = 0.5,
-    * step_select_fcbf.R:256–270).
-    */
-  def medianSplit(df: DataFrame, cols: Seq[String]): DataFrame =
-    quantileSplit(df, cols, 0.5)
+  /** [[quantileSplit]] over precomputed cuts: each (column, cut) pair in
+    * order, a None cut (all-NULL column) giving an all-NULL column. */
+  def splitAtCuts(df: DataFrame, cuts: Seq[(String, Option[Double])]): DataFrame =
+    cuts.foldLeft(df) {
+      case (d, (c, None))      => d.withColumn(c, lit(null: String))
+      case (d, (c, Some(cut))) => d.withColumn(c, medianSplitCol(col(c), cut))
+    }
 }

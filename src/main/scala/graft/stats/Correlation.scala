@@ -3,6 +3,7 @@ package graft.stats
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.NullSafeCorr
 
 /** Correlation-based scores.
   *
@@ -21,12 +22,12 @@ import org.apache.spark.sql.functions._
   */
 object Correlation {
 
-  /** Pearson corr(x_i, y) for all features in one pass. */
+  /** Pearson corr(x_i, y) for all features in one pass; None if n < 2 or a side is constant. */
   def pearson(df: DataFrame, features: Seq[String], outcome: String): Map[String, Option[Double]] = {
     if (features.isEmpty) return Map.empty
     val row = df.agg(
-      corr(col(features.head), col(outcome)).as(features.head),
-      features.tail.map(f => corr(col(f), col(outcome)).as(f)): _*
+      NullSafeCorr.of(col(features.head), col(outcome)).as(features.head),
+      features.tail.map(f => NullSafeCorr.of(col(f), col(outcome)).as(f)): _*
     ).head()
     features.zipWithIndex.map { case (f, i) =>
       f -> (if (row.isNullAt(i)) None else Some(row.getDouble(i)))
@@ -60,11 +61,8 @@ object Correlation {
     val handle = new graft.runtime.CacheHandle
     val (stats, _) = spearmanStats(df, features, outcome, handle)
     try {
-      val got = stats.collect().map { r =>
-        // corr yields NULL for degenerate groups (n<2 / zero variance);
-        // surface it as NaN, the shape the old 0/0 two-pass produced
-        r.getString(0) -> (if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
-      }.toMap
+      // NULL (n < 2 or a constant side) is the feature's NA
+      val got = stats.collect().collect { case r if !r.isNullAt(1) => r.getString(0) -> r.getDouble(1) }.toMap
       features.map(f => f -> got.get(f)).toMap
     } finally handle.release(blocking = false)
   }
@@ -144,7 +142,7 @@ object Correlation {
     // Correlation.pearson over window midranks = the same Corr aggregate);
     // dropping the second pass also drops the localCheckpoint
     // materialization and the means broadcast join the old shape needed.
-    val stats = ranked.groupBy("feature").agg(corr(col("rf"), col("ry")).as("rho"))
+    val stats = ranked.groupBy("feature").agg(NullSafeCorr.of(col("rf"), col("ry")).as("rho"))
     (stats, rankTable)
   }
 

@@ -93,6 +93,11 @@ object Entropy {
     scores(long, kind).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
   }
 
+  /** Column pairs per exploded chunk of [[pairwiseScores]]. */
+  val PairChunk = 1024
+  /** All pairs of `nCols` columns fit one chunk, so one input scan. */
+  def fitsOneChunk(nCols: Int): Boolean = nCols.toLong * (nCols - 1) / 2 <= PairChunk
+
   /** Scores for an EXPLICIT list of column pairs in ONE distributed pass —
     * the batching primitive behind mRMR/FCBF (the Boruta round-4 pattern:
     * one plan computes many rounds' pair statistics instead of one small
@@ -105,15 +110,15 @@ object Entropy {
     * deterministic anyway. Pairs whose columns share no complete cases are
     * absent from the result (same contract as [[scoresAgainst]]).
     *
-    * The per-row pair array is chunked (1024 pairs) so the generated
-    * projection stays inside JIT/codegen method limits; chunks are unioned
-    * into ONE job (callers pass a cached input, so extra chunk scans hit
-    * the in-memory table). */
+    * The per-row pair array is chunked ([[PairChunk]] pairs) so the
+    * generated projection stays inside JIT/codegen method limits; chunks
+    * are unioned into ONE job, but each chunk scans the input again (see
+    * [[fitsOneChunk]]). */
   def pairwiseScores(
       df: DataFrame, pairs: Seq[(String, String)], kind: Kind): Map[(String, String), Double] = {
     if (pairs.isEmpty) return Map.empty
     val sep = 1.toChar.toString // control char, never in column identifiers
-    val longs = pairs.distinct.grouped(1024).map { chunk =>
+    val longs = pairs.distinct.grouped(PairChunk).map { chunk =>
       val kvs = chunk.map { case (a, b) =>
         struct(lit(a + sep + b).as("feature"),
           col(a).cast("string").as("xb"), col(b).cast("string").as("yb"))

@@ -107,10 +107,10 @@ class StatsSpec extends AnyFunSuite {
 
   test("median split matches discretize_var semantics") {
     val d = Seq[java.lang.Double](8.0, 7.0, 2.0, 5.0, null, 3.0, 1.0).toDF("v")
-    val got = Binning.medianSplit(d, Seq("v")).collect().map(r => Option(r.getString(0)))
+    val got = Binning.quantileSplit(d, Seq("v"), 0.5).collect().map(r => Option(r.getString(0)))
     assert(got.toSeq == Seq(Some("h"), Some("h"), Some("l"), Some("h"), None, Some("l"), Some("l")))
     val tie = Seq(1.0, 1.0, 1.0, 1.0, 1.0, 21.0).toDF("v")
-    val got2 = Binning.medianSplit(tie, Seq("v")).collect().map(_.getString(0))
+    val got2 = Binning.quantileSplit(tie, Seq("v"), 0.5).collect().map(_.getString(0))
     assert(got2.toSeq == Seq("l", "l", "l", "l", "l", "h"))
   }
 

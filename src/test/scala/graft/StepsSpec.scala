@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.select._
-import graft.stats.{Anova, Binning}
+import graft.stats.{Anova, Binning, Entropy}
 
 class StepsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -88,10 +88,11 @@ class StepsSpec extends AnyFunSuite {
       val want = if (i == 7) None else Some(if (v <= cut) "l" else "h")
       assert(got(i.toLong) == want, s"id=$i v=$v cut=$cut")
     }
-    // and the default is the median: quantileSplit(0.5) == medianSplit
+    // and the default is the median: quantileSplit(0.5) == a split at
+    // Spark's percentile median
     val viaHalf = Binning.quantileSplit(d, Seq("x"), 0.5).collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    val viaMedian = Binning.medianSplit(d, Seq("x")).collect()
+    val viaMedian = Binning.splitAtCuts(d, Seq("x" -> Some(Binning.exactMedian(d, "x")))).collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(viaHalf == viaMedian)
   }
@@ -336,25 +337,66 @@ class StepsSpec extends AnyFunSuite {
     }
     binned.unpersist()
 
-    // --- FCBF: keeper sequence replays exactly, via BOTH batched paths
-    // (all-pairs-upfront default, and wave-batching forced with
-    // allPairsMaxP = 0) ---
-    val fcbfFit = FcbfStep(minimumSu = 0.0005).fit(df, "y", feats)
-    val fcbfWaveFit = FcbfStep(minimumSu = 0.0005, allPairsMaxP = 0).fit(df, "y", feats)
-    assert(fcbfWaveFit.excluded == fcbfFit.excluded,
-      "wave-batched and all-pairs paths must select identically")
-    val split = Binning.quantileSplit(df.select(feats.map(col) :+ col("y"): _*), feats, 0.5)
-    val work = split.select(
-      feats.map(f => col(f).cast("string").as(f)) :+ col("y").cast("string").as("__y"): _*)
-    work.cache(); work.count()
-    val naiveKeep = TestRankRef.fcbfNaiveKeepers(work, feats, minimumSu = 0.0005)
-    val gotKeep = feats.filterNot(fcbfFit.excluded.contains)
-    assert(gotKeep.sorted == naiveKeep.sorted,
-      s"FCBF keepers must match naive: $gotKeep vs $naiveKeep")
+    // --- FCBF: each batched path's keepers == the naive sequential
+    // oracle. This fixture's pairs fit one pair chunk (the one-job
+    // all-pairs path); the wide fixture adds seeded noise columns until
+    // they do not (the per-wave path) ---
+    def fcbfNaiveCheck(d: org.apache.spark.sql.DataFrame, fs: Seq[String]): List[String] = {
+      val fit = FcbfStep(minimumSu = 0.0005).fit(d, "y", fs)
+      val work = Binning.quantileSplit(d.select(fs.map(col) :+ col("y"): _*), fs, 0.5).select(
+        fs.map(f => col(f).cast("string").as(f)) :+ col("y").cast("string").as("__y"): _*)
+      work.cache(); work.count()
+      val naiveKeep = TestRankRef.fcbfNaiveKeepers(work, fs, minimumSu = 0.0005)
+      work.unpersist()
+      val gotKeep = fs.filterNot(fit.excluded.contains)
+      assert(gotKeep.sorted == naiveKeep.sorted,
+        s"FCBF keepers must match naive: $gotKeep vs $naiveKeep")
+      assert(fit.excluded.nonEmpty, "fixture must also drop redundant features")
+      naiveKeep
+    }
+    assert(Entropy.fitsOneChunk(feats.size + 1), "fixture must take the all-pairs path")
+    fcbfNaiveCheck(df, feats)
+    df.unpersist()
+
+    val noiseRng = new scala.util.Random(8)
+    val noise = (0 until 26).map(i => s"n$i")
+    val wideFeats = feats ++ noise
+    val wide = rows.map { case (base, y) => (base, Seq.fill(noise.size)(noiseRng.nextDouble()), y) }
+      .toDF("arr", "noise", "y").select(
+        (0 until p).map(i => col("arr")(i).as(s"f$i")) ++
+          (0 until dupes).map(i => (floor(col("arr")(i) * 50) / 50).as(s"r$i")) ++
+          noise.indices.map(i => col("noise")(i).as(noise(i))) :+ col("y"): _*)
+    wide.cache(); wide.count()
+    assert(!Entropy.fitsOneChunk(wideFeats.size + 1), "wide fixture must take the wave path")
+    val naiveKeep = fcbfNaiveCheck(wide, wideFeats)
     assert(naiveKeep.size > 8,
       s"fixture must retain > one wave of keepers to exercise multi-wave batching (${naiveKeep.size})")
-    assert(fcbfFit.excluded.nonEmpty, "fixture must also drop redundant features")
-    work.unpersist(); df.unpersist()
+    wide.unpersist()
+  }
+
+  test("CorrStep: a constant feature or outcome scores NA instead of aborting") {
+    val reg = df.withColumn("y", col("f1") * 2 + col("f3") * 0.1).withColumn("flat", lit(3.0))
+    for (m <- Seq("pearson", "spearman")) {
+      val fitted = CorrStep(topP = Some(1), method = m).fit(reg, "y", Seq("f1", "flat"))
+      assert(fitted.scores.toMap.apply("flat").isEmpty, m)
+      assert(fitted.excluded == Seq("flat"), m)
+      val flatY = CorrStep(topP = Some(1), method = m).fit(reg, "flat", Seq("f1", "f2"))
+      assert(flatY.scores.forall(_._2.isEmpty), m)
+    }
+    // the informative feature's score is still Spark's corr, bit for bit
+    val pearson = CorrStep(topP = Some(1)).fit(reg, "y", Seq("f1", "flat"))
+    assert(pearson.scores.toMap.apply("f1") == Some(math.abs(reg.agg(corr("f1", "y")).head().getDouble(0))))
+  }
+
+  test("VipStep validates the criteria before fitting the user's model") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val fn = (_: org.apache.spark.sql.DataFrame, _: String, ps: Seq[String]) => {
+      calls.incrementAndGet(); ps.map(_ -> 1.0).toMap
+    }
+    val err = intercept[IllegalArgumentException](
+      VipStep(fn, threshold = Some(1.5)).fit(df, "species", Seq("f1", "f2")))
+    assert(err.getMessage.contains("`threshold` should be on (0, 1)."))
+    assert(calls.get == 0, "importanceFn must not run before validation")
   }
 
   test("pipeline fits steps in order on progressively reduced schema") {
