@@ -50,7 +50,8 @@ class JobBudgetSpec extends AnyFunSuite {
     ("MrmrStep", MrmrStep(topP = Some(4)), "cls", 9),
     ("FcbfStep", FcbfStep(minimumSu = 0.001), "cls", 10),
     ("InfoGainStep", InfoGainStep(topP = Some(4)), "cls", 7),
-    ("CorrStep(spearman)", CorrStep(topP = Some(4), method = "spearman"), "yn", 13))
+    ("CorrStep(spearman)", CorrStep(topP = Some(4), method = "spearman"), "yn", 13),
+    ("RocStep", RocStep(topP = Some(4)), "cls", 11))
 
   for ((label, step, outcome, pinned) <- budgets)
     test(s"$label fit runs the same pinned number of Spark jobs at p = 8 and p = 16") {

@@ -81,6 +81,23 @@ class PlanSpec extends AnyFunSuite {
     assert(three == one, s"exchange count must be feature-count-invariant: p=1 -> $one, p=3 -> $three")
   }
 
+  test("AUC shuffles do not grow with the feature count (one melted rank build, not p)") {
+    val li = spark.read.parquet(s"$sf/lineitem.parquet")
+    def exchanges(features: Seq[String]): Int = {
+      val long = graft.core.Melt.numeric(li, features, keep = Seq("l_returnflag"))
+        .select(col("feature"), col("value"), col("l_returnflag").as("y"))
+      val pairs = graft.stats.Auc.classPairs(li.select(col("l_returnflag")))
+      val h = new graft.runtime.CacheHandle
+      try "Exchange hashpartitioning".r
+        .findAllIn(graft.stats.Auc.scores(long, pairs, h).queryExecution.executedPlan.toString)
+        .length
+      finally h.release()
+    }
+    val one = exchanges(Seq("l_quantity"))
+    val three = exchanges(Seq("l_quantity", "l_discount", "l_tax"))
+    assert(three == one, s"exchange count must be feature-count-invariant: p=1 -> $one, p=3 -> $three")
+  }
+
   test("repetition metrics shuffle ONCE (id-partitioning serves counts, window, and pivot)") {
     // the naive plan exchanges the gram-counts table three times (groupBy
     // (id,n,gram) → window (id,n) → groupBy (id)); the pinned plan
