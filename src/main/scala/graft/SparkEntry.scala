@@ -80,6 +80,21 @@ object SparkEntry {
       .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
 
+  /** The similarity queries' probe: the embedding of `vec_id = 0`. */
+  private def queryVector(emb: DataFrame): Seq[Double] =
+    emb.where(col("vec_id") === 0)
+      .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+
+  /** The as-of queries' sides: click events (the carried values) and
+    * purchase events (the probes, renamed to `probe_ts` / `purchase_id`). */
+  private def clicksAndPurchases(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val ev = t(s, dir, "events")
+    val clicks = ev.where(col("event_type") === "click").select("user_id", "ts", "value", "event_id")
+    val purchases = ev.where(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts").as("probe_ts"), col("event_id").as("purchase_id"))
+    (clicks, purchases)
+  }
+
   private def eventsWindowed(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     t(s, dir, "events").select(
@@ -104,10 +119,7 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- temporal: as-of join + windowed features (north_rule core) ----
     "q_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val clicks = ev.where(col("event_type") === "click").select("user_id", "ts", "value", "event_id")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("probe_ts"), col("event_id").as("purchase_id"))
+      val (clicks, purchases) = clicksAndPurchases(s, dir)
       AsOf.sortMerge(clicks, purchases, "user_id", "ts", "probe_ts", Seq("value"),
         tiebreak = Some("event_id"))
         .select(col("purchase_id"), col("user_id"), col("probe_ts"), col("value").as("last_click_value"))
@@ -116,10 +128,7 @@ object SparkEntry {
     // tolerance variant: a carried click older than 10 minutes is as good
     // as absent (the point-in-time feature-freshness bound)
     "q_asof_tolerance" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val clicks = ev.where(col("event_type") === "click").select("user_id", "ts", "value", "event_id")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("probe_ts"), col("event_id").as("purchase_id"))
+      val (clicks, purchases) = clicksAndPurchases(s, dir)
       AsOf.sortMerge(clicks, purchases, "user_id", "ts", "probe_ts", Seq("value"),
         toleranceSeconds = Some(600), tiebreak = Some("event_id"))
         .select(col("purchase_id"), col("user_id"), col("probe_ts"), col("value").as("last_click_value"))
@@ -645,16 +654,14 @@ object SparkEntry {
     // ---- similarity search ----
     "q_cosine_sims" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+      val q = queryVector(emb)
       Similarity.cosineToQuery(emb, "embedding", q)
         .select(col("vec_id"), round(col("cosine"), 6).as("cosine"))
         .orderBy("vec_id")
     }),
     "q_knn_brute" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+      val q = queryVector(emb)
       Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
         .select(col("vec_id"), round(col("cosine"), 6).as("cosine"))
     }),
@@ -662,8 +669,7 @@ object SparkEntry {
     // restores recall lost to single-probe while keeping the scan pruned
     "q_knn_lsh" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+      val q = queryVector(emb)
       val planes = Similarity.hyperplanes(6, q.length)
       Similarity.lshTopK(emb, "vec_id", "embedding", q, 10, planes, probeHamming = 2)
         .select(col("vec_id"), round(col("cosine"), 6).as("cosine"))
@@ -672,11 +678,8 @@ object SparkEntry {
     // search probes the 3 nearest cells and exact-reranks only those
     "q_knn_ivf" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
-      val centroids = emb.where(col("vec_id") < 8).orderBy("vec_id")
-        .select(col("embedding")).collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
+      val q = queryVector(emb)
+      val centroids = first8Centroids(emb)
       Similarity.ivfTopK(emb, "vec_id", "embedding", q, 10, centroids, nprobe = 3)
         .select(col("vec_id"), round(col("cosine"), 6).as("cosine"))
     }),
@@ -686,8 +689,7 @@ object SparkEntry {
     // cross-engine, not just the codes themselves
     "q_knn_quantized" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
+      val q = queryVector(emb)
       val store = emb.select(col("vec_id"),
         Quantize.quantize(col("embedding")).as("codes"),
         Quantize.scale(col("embedding")).as("scale"))
@@ -702,11 +704,8 @@ object SparkEntry {
     // (dequantized-space) results
     "q_knn_quantized_ivf" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toSeq
-      val centroids = emb.where(col("vec_id") < 8).orderBy("vec_id")
-        .select(col("embedding")).collect()
-        .map(r => deqDriver(r.getSeq[Float](0).map(_.toDouble).toSeq)).toSeq
+      val q = queryVector(emb)
+      val centroids = first8Centroids(emb).map(deqDriver)
       val store = emb.select(col("vec_id"),
         Quantize.quantize(col("embedding")).as("codes"),
         Quantize.scale(col("embedding")).as("scale"))
@@ -834,10 +833,7 @@ object SparkEntry {
         .fit(t(s, dir, "lineitem"), "l_linestatus",
           Seq("l_quantity", "l_discount", "l_tax", "l_extendedprice")), s)),
     "q_asof_strict" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val clicks = ev.where(col("event_type") === "click").select("user_id", "ts", "value", "event_id")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("probe_ts"), col("event_id").as("purchase_id"))
+      val (clicks, purchases) = clicksAndPurchases(s, dir)
       AsOf.sortMerge(clicks, purchases, "user_id", "ts", "probe_ts", Seq("value"),
         strict = true, tiebreak = Some("event_id"))
         .select(col("purchase_id"), col("value").as("last_click_value"))

@@ -292,7 +292,8 @@ object Snapshot {
         Store.CompactionResult(e.partition, e.files.size, moved.size, e.rows))
     }
 
-    val rewrittenResults = Store.boundedParallel(fragmented, maxConcurrent)(rewriteOne)
+    val rewrittenResults =
+      graft.runtime.DriverPool.boundedParallel(fragmented, maxConcurrent)(rewriteOne)
 
     val rewrittenByPart = rewrittenResults.map { case (e, _) => e.partition -> e }.toMap
     val next = entries.map(e => rewrittenByPart.getOrElse(e.partition, e))

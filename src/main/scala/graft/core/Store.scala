@@ -195,24 +195,8 @@ object Store {
 
       // bounded parallel rewrites: leaf partitions are disjoint directory
       // trees, so their rewrite+swap sequences are independent
-      boundedParallel(targets, maxConcurrent)(compactOne).flatten
+      graft.runtime.DriverPool.boundedParallel(targets, maxConcurrent)(compactOne).flatten
     } finally fs.delete(lock, false)
-  }
-
-  /** Run `f` over `items` on a bounded driver thread pool (each item may
-    * launch its own Spark jobs); results keep input order. Shared by both
-    * compactors ([[compact]], [[Snapshot.compact]]). */
-  private[core] def boundedParallel[A, B](items: Seq[A], maxConcurrent: Int)(f: A => B): Seq[B] = {
-    if (items.isEmpty) return Nil
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(maxConcurrent, math.max(1, items.size)))
-    try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val futs = items.map(a => Future(f(a)))
-      futs.map(fu => Await.result(fu, Duration.Inf))
-    } finally pool.shutdown()
   }
 
   /** The pages schema for schema-on-read sources. */

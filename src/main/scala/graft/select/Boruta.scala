@@ -196,16 +196,7 @@ final case class BorutaStep(
           allFeats.zip(m.featureImportances.toArray).toMap
         }
       }
-      val roundImps: Seq[Map[String, Double]] = {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(6, maxRuns))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try {
-          val futs = (1 to maxRuns).map(round => Future(fitRound(round)))
-          futs.map(Await.result(_, Duration.Inf))
-        } finally pool.shutdown()
-      }
+      val roundImps = graft.runtime.DriverPool.boundedParallel(1 to maxRuns, 6)(fitRound)
       for (imps <- roundImps) {
         val shadowImps = preds.map(p => imps(s"__sh_$p"))
         val shadowMax = shadowImps.max

@@ -1,7 +1,6 @@
 package graft.stats
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** ROC AUC per numeric feature vs a categorical outcome
@@ -23,8 +22,8 @@ object Auc {
 
   /** long: (feature, value: double, y: string). Returns (feature, auc) with
     * direction-auto pairwise mean over the given class pairs. `handle` owns
-    * the per-(feature, pair, value) counts cache the two-phase rank build
-    * references twice (default arg = session-LRU lifetime, the registered-
+    * the bucketed per-(feature, pair, value) counts cache of the midrank
+    * build (default arg = session-LRU lifetime, the registered-
     * query convention; callers that fit repeatedly pass one and release). */
   def scores(long: DataFrame, classPairs: Seq[(String, String)],
              handle: graft.runtime.CacheHandle = new graft.runtime.CacheHandle): DataFrame = {
@@ -45,41 +44,14 @@ object Auc {
         struct(lit(s"$a|$b").as("pair"), (col("y") === a).cast("long").as("isPos"))
       )
     }
-    // CACHED: the two-phase rank build references this table twice (bases
-    // aggregation + the per-value join) and Catalyst re-executes
-    // re-referenced subtrees — unmaterialized, the whole melt + two
-    // groupBys ran twice (measured: q_auc 1.7 -> 3.5 s). cache() rather
-    // than a lazy localCheckpoint, also measured: the LogicalRDD leaf
-    // loses the size estimate that keeps the bases join broadcast
-    // (q_auc 1.9 -> 3.2 s on the checkpoint variant).
-    val byValue = handle.track(byY
+    val byValue = byY
       .withColumn("tag", explode(array(pairStructs: _*)))
       .where(col("tag").isNotNull)
       .groupBy(col("feature"), col("tag.pair").as("pair"), col("value"))
       .agg(sum("c").as("cnt"), sum(col("tag.isPos") * col("c")).as("cntPos"))
-      .cache())
-
-    // TWO-PHASE midranks over the counts table (the spearman shape): a
-    // near-unique feature otherwise cumulates its whole distinct-value set
-    // through ONE window task per (feature, pair). The value's monotone
-    // bit image yields range buckets for free; per-(feature, pair, bucket)
-    // totals cumulate through a tiny window and the within-bucket prefix
-    // windows run in parallel. Exact long sums — midranks bit-identical.
-    val bucketed = byValue.withColumn("__bkt",
-      graft.functions.DoubleBits.bucket(col("value"), 20))
-    val wb = Window.partitionBy("feature", "pair").orderBy("__bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bases = bucketed.groupBy("feature", "pair", "__bkt").agg(sum("cnt").as("__bc"))
-      .select(col("feature"), col("pair"), col("__bkt"),
-        coalesce(sum("__bc").over(wb), lit(0L)).as("__base"))
-    val wv = Window.partitionBy("feature", "pair", "__bkt").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = bucketed
-      .join(bases, Seq("feature", "pair", "__bkt"))
-      .withColumn(
-        "midrank",
-        col("__base") + coalesce(sum("cnt").over(wv), lit(0L)) + (col("cnt") + 1) / 2.0
-      )
+    // midranks per (feature, pair), the Spearman build
+    val (withBases, midrank) = Ranks.midranks(byValue, Seq("feature", "pair"), handle)
+    val ranked = withBases.withColumn("midrank", midrank)
 
     ranked
       .groupBy("feature", "pair")

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *    tiebreak column so the assignment is deterministic and identical across
   *    engines. NOTE: the rank window runs per feature over DISTINCT values
   *    (tiny for binned/low-cardinality inputs, its regime); near-unique
-  *    columns should use the spearman-style two-phase bucketed prefix.
+  *    columns should use the two-phase bucketed build, [[Ranks.midranks]].
   *  - [[exactCuts]] + [[binByCuts]] — compute exact quantile cut points
   *    (one distributed pass, relativeError = 0), then bin by value
   *    comparison against the collected cuts. Fully scalable: no global sort,
@@ -56,12 +56,12 @@ object Binning {
     // __before and __n in ONE window pass over the counts table — a second
     // aggregation would re-execute the whole upstream scan (Catalyst does
     // not share re-referenced subtrees). Round-6 measurement: the
-    // two-phase bucketed prefix (Correlation.spearmanStats' shape) was
+    // two-phase bucketed prefix (Ranks.midranks) was
     // tried here and REVERTED — the entropy-path inputs are binned/
     // low-cardinality, so the counts table is tiny and the per-feature
     // window trivial; the extra checkpoint+exchanges cost ~0.4 s flat.
     // For near-unique columns (where the serial window IS the hazard)
-    // use the spearman pattern.
+    // use Ranks.midranks.
     val cumTable = counts.select(
       col("feature").as("__f"), col("value").as("__v"),
       coalesce(sum("__cnt").over(wv), lit(0L)).as("__before"),

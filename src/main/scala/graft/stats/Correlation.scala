@@ -1,7 +1,6 @@
 package graft.stats
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.NullSafeCorr
 
@@ -88,36 +87,12 @@ object Correlation {
       .where(col("value").isNotNull)
       .groupBy("feature", "value")
       .agg(count(lit(1)).as("cnt"))
-    // TWO-PHASE midranks over the counts table. The single
-    // Window.partitionBy(feature) this replaces serialized each feature's
-    // whole distinct-value set through ONE task — for a near-unique
-    // outcome that is a |rows|-sized sort on one core at any scale (the
-    // "skew hazard at extreme scale" note in Binning). Here the value's
-    // order-preserving bit image yields monotone range buckets for free
-    // (no quantile probe, no extra job): per-(feature, bucket) totals
-    // cumulate through a TINY per-feature window over bucket rows
-    // (≤ 2^20 rows per feature regardless of data size), bases join
-    // back, and the within-bucket prefix windows run in parallel. The
-    // summed cnt set per value is identical (exact longs), so midranks
-    // are bit-identical to the single-window formulation.
-    // CACHED: referenced twice (the per-value rank rows AND the bases
-    // aggregation) — uncached, the whole melt + counts groupBy executed
-    // twice inside the rank-table build (visible as two full scan→melt→agg
-    // chains in the physical plan)
-    val bucketed = handle.track(
-      counts.withColumn("__bkt", graft.functions.DoubleBits.bucket(col("value"), 20)).cache())
-    val wb = Window.partitionBy("feature").orderBy("__bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bases = bucketed.groupBy("feature", "__bkt").agg(sum("cnt").as("__bc"))
-      .select(col("feature"), col("__bkt"),
-        coalesce(sum("__bc").over(wb), lit(0L)).as("__base"))
-    val wv = Window.partitionBy("feature", "__bkt").orderBy(col("value"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val rankTable = handle.track(bucketed
-      .join(bases, Seq("feature", "__bkt"))
-      .select(col("feature"), col("value"),
-        (col("__base") + coalesce(sum("cnt").over(wv), lit(0L)) +
-          (col("cnt") + 1) / 2.0).as("midrank"))
+    // midranks per feature (Ranks caches the bucketed counts); the rank
+    // table is CACHED too: both the feature-rank and the outcome-rank join
+    // reference it
+    val (withBases, midrank) = Ranks.midranks(counts, Seq("feature"), handle)
+    val rankTable = handle.track(withBases
+      .select(col("feature"), col("value"), midrank.as("midrank"))
       .cache())
     val yRank = rankTable.where(col("feature") === outcome)
       .select(col("value").as("__yv"), col("midrank").as("ry"))

@@ -1,7 +1,6 @@
 package graft.text
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sequence packing — the standard pretraining step that concatenates
@@ -39,28 +38,17 @@ object Packing {
     // exact integer division (SQL `div`): `floor(col / k)` divides as DOUBLE,
     // and above 2^53 (reachable with monotonically_increasing_id, which packs
     // the partition index into the high bits) double rounding can move a
-    // boundary id into the neighboring bucket
-    val bucketed = df.withColumn("__pbkt", expr(s"`$id` div ${bucketSize}L"))
-    // phase 1: exact driver-side prefix sum over one row per OCCUPIED
-    // bucket (TwoPhase bounds the driver transfer and aborts on sparse or
-    // null ids; null token counts weigh 0 — such docs occupy no chunk and
-    // keep null first/last_seq)
-    val baseDf = TwoPhase
-      .prefixBases(bucketed, col("__pbkt"), col(tokensCol), maxBuckets = 1 << 22)
-      .withColumnRenamed("__tp_bkt", "__pbkt")
-    // phase 2: parallel within-bucket cumsum + broadcast base offset
-    val w = Window.partitionBy("__pbkt").orderBy(col(id))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed
-      .join(broadcast(baseDf), "__pbkt")
-      .withColumn("global_start",
-        col("__tp_base") + coalesce(sum(coalesce(col(tokensCol), lit(0L))).over(w), lit(0L)))
+    // boundary id into the neighboring bucket. TwoPhase bounds the driver
+    // transfer and aborts on sparse or null ids; null token counts weigh 0
+    // — such docs occupy no chunk and keep null first/last_seq.
+    TwoPhase
+      .runningSum(df, keys = Nil, bucket = expr(s"`$id` div ${bucketSize}L"),
+        order = Seq(col(id)), weight = col(tokensCol), maxBuckets = 1 << 22, out = "global_start")
       .withColumn("first_seq",
         when(col(tokensCol) > 0, floor(col("global_start") / budget)))
       .withColumn("last_seq",
         when(col(tokensCol) > 0,
           floor((col("global_start") + col(tokensCol) - 1) / budget)))
-      .drop("__pbkt", "__tp_base")
   }
 
   /** Per-DOCUMENT chunking — the other standard sequence-prep shape (long

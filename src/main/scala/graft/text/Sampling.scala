@@ -157,8 +157,8 @@ object Sampling {
     * any parallelism; and NO global sort: the hash's top bits range-bucket
     * the rows (bucket order IS hash order), per-bucket counts are cumulated
     * driver-side into base offsets (one tiny row per bucket), and ranks are
-    * a parallel within-bucket row_number plus the broadcast base — the same
-    * two-phase prefix-sum shape as [[graft.text.Packing]]. Ties on the hash
+    * a parallel within-bucket running count plus the broadcast base — the
+    * same [[TwoPhase.runningSum]] as [[graft.text.Packing]]. Ties on the hash
     * break by the key itself, so ranks are a total order for unique keys. */
   def shuffleRank(df: DataFrame, key: Column, seed: Long = 42L, bucketBits: Int = 12): DataFrame =
     rankByHashOrder(df, xxhash64(key, lit(seed)), key, hashBits = 64, bucketBits)
@@ -181,18 +181,13 @@ object Sampling {
     require(bucketBits >= 1 && bucketBits <= 22 && bucketBits < hashBits,
       "bucketBits must be in [1, min(22, hashBits - 1)]")
     // arithmetic (sign-preserving) shift: bucket order equals hash order for
-    // both the signed 64-bit and the non-negative 48-bit hash
-    val withH = df
-      .withColumn("__sh", hash)
-      .withColumn("__sb", shiftright(col("__sh"), hashBits - bucketBits))
-    val baseDf = TwoPhase
-      .prefixBases(withH, col("__sb"), lit(1L), maxBuckets = 1 << bucketBits)
-      .withColumnRenamed("__tp_bkt", "__sb")
-    val w = Window.partitionBy("__sb").orderBy(col("__sh"), tiebreak)
-    withH
-      .join(broadcast(baseDf), "__sb")
-      .withColumn("shuffle_rank", col("__tp_base") + row_number().over(w) - 1)
-      .drop("__sb", "__sh", "__tp_base")
+    // both the signed 64-bit and the non-negative 48-bit hash; the rank is
+    // the running count of earlier rows
+    TwoPhase
+      .runningSum(df.withColumn("__sh", hash), keys = Nil,
+        bucket = shiftright(col("__sh"), hashBits - bucketBits), order = Seq(col("__sh"), tiebreak),
+        weight = lit(1L), maxBuckets = 1 << bucketBits, out = "shuffle_rank")
+      .drop("__sh")
   }
 
   /** Per-domain quota: keep at most `k` rows per `domain`, preferring the
@@ -261,6 +256,8 @@ object Sampling {
     * — at corpus scale that beats caching the corpus, and mirrors the
     * documented dedupLines trade-off.
     *
+    * It is [[budgetSelectStratified]] over one constant stratum.
+    *
     * Returns the kept rows: the input columns plus `budget_start` (exact
     * tokens preceding the document in selection order). */
   def budgetSelect(
@@ -270,35 +267,8 @@ object Sampling {
       id: Column,
       budget: Long,
       buckets: Int = 1024
-  ): DataFrame = {
-    require(budget >= 1, "budget must be >= 1 token")
-    require(buckets >= 1 && buckets <= (1 << 22), "buckets must be in [1, 2^22]")
-    val valid = df
-      .withColumn("__bs_s", score.cast("double"))
-      .withColumn("__bs_t", coalesce(tokens.cast("long"), lit(0L)))
-      .where(col("__bs_s").isNotNull && !isnan(col("__bs_s")))
-    val bounds =
-      if (buckets == 1) Array.empty[Double]
-      else valid.stat.approxQuantile(
-        "__bs_s", (1 until buckets).map(_.toDouble / buckets).toArray, 0.01)
-        .distinct.sorted
-    // negated bucket index: TwoPhase cumulates in ASCENDING key order, and
-    // the selection consumes tokens from the HIGHEST score bucket down
-    val bucketed = valid.withColumn("__bs_b",
-      if (bounds.isEmpty) lit(0L)
-      else -graft.functions.SortedBucket.of(col("__bs_s"), bounds).cast("long"))
-    val baseDf = TwoPhase
-      .prefixBases(bucketed, col("__bs_b"), col("__bs_t"), maxBuckets = buckets)
-      .withColumnRenamed("__tp_bkt", "__bs_b")
-    val w = Window.partitionBy("__bs_b").orderBy(col("__bs_s").desc, id)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed
-      .join(broadcast(baseDf), "__bs_b")
-      .withColumn("budget_start",
-        col("__tp_base") + coalesce(sum(col("__bs_t")).over(w), lit(0L)))
-      .where(col("budget_start") < budget)
-      .drop("__bs_b", "__bs_s", "__bs_t", "__tp_base")
-  }
+  ): DataFrame =
+    budgetSelectStratified(df, lit(""), score, tokens, id, Map("" -> budget), buckets)
 
   /** Stratified token-budget selection — the DATA-MIXING step: each
     * stratum (source, domain tier, language) gets its own token budget,
@@ -309,8 +279,8 @@ object Sampling {
     * take, boundary doc kept, null/NaN scores never selected, null tokens
     * weigh 0); strata absent from `budgets` are dropped entirely.
     *
-    * Scale shape: the same sketch + two-phase prefix sum, with the
-    * driver cumsum RESET per stratum — the bases table is one row per
+    * Scale shape: the same sketch + two-phase prefix sum, keyed by
+    * stratum so the driver cumsum RESETS per stratum — the bases table is one row per
     * occupied (stratum, score-bucket), bounded by construction at
     * |budgets| × `buckets` rows, and the within-(stratum, bucket) window
     * keeps every partition small regardless of stratum skew. One shared
@@ -333,7 +303,6 @@ object Sampling {
     require(budgets.values.forall(_ >= 1), "every budget must be >= 1 token")
     require(buckets >= 1 && buckets.toLong * budgets.size <= (1L << 22),
       "strata x buckets must stay within the bounded driver transfer (2^22)")
-    val spark = df.sparkSession
     val valid = df
       .withColumn("__bs_st", stratum.cast("string"))
       .withColumn("__bs_s", score.cast("double"))
@@ -345,32 +314,17 @@ object Sampling {
       else valid.stat.approxQuantile(
         "__bs_s", (1 until buckets).map(_.toDouble / buckets).toArray, 0.01)
         .distinct.sorted
-    val bucketed = valid.withColumn("__bs_b",
+    // negated bucket index: TwoPhase cumulates in ASCENDING bucket order,
+    // and the selection consumes tokens from the HIGHEST score bucket down
+    val bucket =
       if (bounds.isEmpty) lit(0L)
-      else -graft.functions.SortedBucket.of(col("__bs_s"), bounds).cast("long"))
-    // phase 1: one row per occupied (stratum, bucket) — bounded by
-    // construction; cumsum resets per stratum (TwoPhase is single-keyed,
-    // so the reset lives here, same conventions: nulls impossible by the
-    // filter above, bucket order = descending score)
-    val totals = bucketed.groupBy("__bs_st", "__bs_b")
-      .agg(sum(col("__bs_t")).as("__w"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
-    val bases = totals.groupBy(_._1).toSeq.flatMap { case (st, rows) =>
-      var acc = 0L
-      rows.sortBy(_._2).map { case (_, b, w) => val out = (st, b, acc); acc += w; out }
-    }
-    val baseDf = spark.createDataFrame(bases).toDF("__bs_st", "__bs_b", "__tp_base")
-    val budgetDf = spark.createDataFrame(budgets.toSeq).toDF("__bs_st", "__budget")
-    val w = Window.partitionBy("__bs_st", "__bs_b")
-      .orderBy(col("__bs_s").desc, id)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed
-      .join(broadcast(baseDf), Seq("__bs_st", "__bs_b"))
+      else -graft.functions.SortedBucket.of(col("__bs_s"), bounds).cast("long")
+    val budgetDf = df.sparkSession.createDataFrame(budgets.toSeq).toDF("__bs_st", "__budget")
+    TwoPhase
+      .runningSum(valid, keys = Seq("__bs_st"), bucket, order = Seq(col("__bs_s").desc, id),
+        weight = col("__bs_t"), maxBuckets = buckets * budgets.size, out = "budget_start")
       .join(broadcast(budgetDf), Seq("__bs_st"))
-      .withColumn("budget_start",
-        col("__tp_base") + coalesce(sum(col("__bs_t")).over(w), lit(0L)))
       .where(col("budget_start") < col("__budget"))
-      .drop("__bs_st", "__bs_b", "__bs_s", "__bs_t", "__tp_base", "__budget")
+      .drop("__bs_st", "__bs_s", "__bs_t", "__budget")
   }
 }

@@ -802,6 +802,42 @@ class CurationSpec extends AnyFunSuite {
     assert(got.view.mapValues(_.toLong).toMap == naive, "two-phase rank == naive global rank")
   }
 
+  test("TwoPhase.runningSum == local per-key running sum; null bucket or key aborts") {
+    import graft.text.TwoPhase
+    // keys k0..k4 (k4 holds 3 rows, all in one bucket), ~10% null weights,
+    // order (v, id) total; bucket = v div 16 agrees with that order
+    val rng = new scala.util.Random(23)
+    val rows = (0L until 600L).map { id =>
+      val key = if (id < 3) "k4" else s"k${rng.nextInt(4)}"
+      val v = if (key == "k4") 5L else rng.nextInt(400).toLong
+      val w = if (rng.nextDouble() < 0.1) None else Some(rng.nextInt(50).toLong)
+      (id, key, v, w)
+    }
+    val want = rows.groupBy(_._2).values.flatMap { g =>
+      var acc = 0L
+      g.sortBy(r => (r._3, r._1)).map { r => val out = r._1 -> acc; acc += r._4.getOrElse(0L); out }
+    }.toMap
+    val df = rows.toDF("id", "key", "v", "w")
+    def run(d: org.apache.spark.sql.DataFrame, keys: Seq[String] = Seq("key")) =
+      TwoPhase.runningSum(d, keys, expr("v div 16"), Seq(col("v"), col("id")), col("w"),
+        maxBuckets = 1 << 10, out = "before")
+    for (parts <- Seq(1, 3, 7)) {
+      val out = run(df.repartition(parts))
+      assert(out.columns.toSeq == Seq("id", "key", "v", "w", "before"))
+      val got = out.collect().map(r => r.getLong(0) -> r.getLong(4)).toMap
+      assert(got == want, s"running sum at $parts partitions")
+    }
+    val nullBucket = intercept[IllegalArgumentException](
+      run(df.withColumn("v", when(col("id") === 7, lit(null)).otherwise(col("v")))).collect())
+    assert(nullBucket.getMessage.contains("ordering key column contains nulls"))
+    val nullKey = intercept[IllegalArgumentException](
+      run(df.withColumn("key", when(col("id") === 7, lit(null)).otherwise(col("key")))).collect())
+    assert(nullKey.getMessage.contains("key columns contain nulls"))
+    val sparse = intercept[IllegalArgumentException](
+      TwoPhase.runningSum(df, Seq("key"), col("id"), Seq(col("id")), col("w"), 16, "before"))
+    assert(sparse.getMessage.contains("over 16 occupied buckets"))
+  }
+
   test("packSequences: exact offsets, straddling docs, zero-token docs, bucket invariance") {
     import graft.text.Packing
     val docs = Seq((0L, 300L), (1L, 300L), (2L, 0L), (3L, 500L), (5L, 124L), (10L, 1L))

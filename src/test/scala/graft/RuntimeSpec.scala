@@ -9,6 +9,23 @@ class RuntimeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  test("DriverPool.boundedParallel: first failure skips unstarted items, awaits running ones") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    val started = new ConcurrentLinkedQueue[Int]
+    @volatile var slowDone = false
+    val err = intercept[IllegalStateException](
+      graft.runtime.DriverPool.boundedParallel(0 until 10, 2) { i =>
+        started.add(i)
+        if (i == 0) { Thread.sleep(300); slowDone = true }
+        if (i == 1) throw new IllegalStateException("item 1 failed")
+        i
+      })
+    assert(err.getMessage == "item 1 failed")
+    assert(slowDone, "the running item must finish before the failure is rethrown")
+    assert(started.toArray.toSet == Set(0, 1), s"started: $started")
+    assert(graft.runtime.DriverPool.boundedParallel(0 until 10, 3)(_ * 2) == (0 until 10).map(_ * 2))
+  }
+
   test("checkpoint JSON round-trips exactly") {
     val f = FittedSelector(
       "step_select_infgain", "label",
