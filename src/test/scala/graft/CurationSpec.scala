@@ -818,8 +818,8 @@ class CurationSpec extends AnyFunSuite {
       g.sortBy(r => (r._3, r._1)).map { r => val out = r._1 -> acc; acc += r._4.getOrElse(0L); out }
     }.toMap
     val df = rows.toDF("id", "key", "v", "w")
-    def run(d: org.apache.spark.sql.DataFrame, keys: Seq[String] = Seq("key")) =
-      TwoPhase.runningSum(d, keys, expr("v div 16"), Seq(col("v"), col("id")), col("w"),
+    def run(d: org.apache.spark.sql.DataFrame) =
+      TwoPhase.runningSum(d, Seq("key"), expr("v div 16"), Seq(col("v"), col("id")), col("w"),
         maxBuckets = 1 << 10, out = "before")
     for (parts <- Seq(1, 3, 7)) {
       val out = run(df.repartition(parts))
