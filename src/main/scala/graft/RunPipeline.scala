@@ -60,7 +60,7 @@ object RunPipeline {
       lineage = Lineage.inputFiles(stored2).take(3).mkString(","))
 
     val kept = fitted.foldLeft(stored2)((d, f) => f.transform(d)).columns.toSeq
-    println(s"""{"pages":$nPages,"features":${features.count()},""" +
+    println(s"""{"pages":$nPages,"features":${stored2.count()},""" +
       s""""excluded":${fitted.flatMap(_.excluded).distinct.length},""" +
       s""""kept_columns":"${kept.mkString(",")}"}""")
     spark.stop()

@@ -141,7 +141,7 @@ object Snapshot {
     val (fs, root) = fsRoot(spark, path)
     require(currentVersion(fs, root).isEmpty,
       s"snapshot store already exists at $path — append/replace goes through a new commit, not overwrite")
-    val withDt = df.withColumn("dt", to_date(col("warc_ts")))
+    val withDt = df.withColumn("dt", Store.utcDay(col("warc_ts")))
     val (out, cols) =
       if (urlBuckets > 0)
         (withDt.withColumn("ub", pmod(xxhash64(col("url")), lit(urlBuckets))), Seq("dt", "ub"))
@@ -179,7 +179,7 @@ object Snapshot {
         s"layout mismatch: store partitions are ${if (storeBucketed) "dt/ub" else "dt"}-" +
           s"partitioned but append was called with urlBuckets=$urlBuckets")
     }
-    val withDt = df.withColumn("dt", to_date(col("warc_ts")))
+    val withDt = df.withColumn("dt", Store.utcDay(col("warc_ts")))
     val (out, cols) =
       if (urlBuckets > 0)
         (withDt.withColumn("ub", pmod(xxhash64(col("url")), lit(urlBuckets))), Seq("dt", "ub"))

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table layout for the pages corpus — the Iceberg layout from SURVEY §1.4
@@ -17,13 +17,32 @@ object Store {
     * Day partitioning makes label-time predicates prune whole directories;
     * bucketing co-locates a url's revisits for the as-of/window exchange. */
   def writePages(df: DataFrame, path: String, urlBuckets: Int = 0): Unit = {
-    val withDt = df.withColumn("dt", to_date(col("warc_ts")))
+    val withDt = df.withColumn("dt", utcDay(col("warc_ts")))
     val (out, cols) =
       if (urlBuckets > 0)
         (withDt.withColumn("ub", pmod(xxhash64(col("url")), lit(urlBuckets))), Seq("dt", "ub"))
       else (withDt, Seq("dt"))
-    out.write.mode(SaveMode.Overwrite).partitionBy(cols: _*).parquet(path)
+    writePartitioned(out, cols, path)
   }
+
+  /** The UTC calendar day of a timestamp — the one `dt` derivation for every
+    * writer and every prune bound in `core`. `to_date` would use the
+    * session time zone, so a store written under one zone and pruned under
+    * another would cut at the wrong day boundary and silently drop rows. */
+  private[graft] def utcDay(ts: Column): Column =
+    date_from_unix_date(floor(unix_seconds(ts) / 86400).cast("int"))
+
+  /** Overwrite `path` partitioned by `cols`, with rows clustered by those
+    * columns first — the hash distribution Iceberg applies to a partitioned
+    * table. Without it every write task opens one file in every partition
+    * it touches (tasks × days small files). REBALANCE rather than
+    * `repartition(cols)`: AQE splits a partition larger than
+    * `advisoryPartitionSizeInBytes` across several tasks (several files)
+    * and coalesces small ones, so a hot day is never funnelled through a
+    * single task. */
+  private def writePartitioned(df: DataFrame, cols: Seq[String], path: String): Unit =
+    df.hint("rebalance", cols.map(col): _*)
+      .write.mode(SaveMode.Overwrite).partitionBy(cols: _*).parquet(path)
 
   def readPages(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -36,14 +55,14 @@ object Store {
     */
   def pagesUpTo(spark: SparkSession, path: String, maxTs: java.sql.Timestamp): DataFrame =
     readPages(spark, path)
-      .where(col("dt") <= to_date(lit(maxTs)) && col("warc_ts") <= lit(maxTs))
+      .where(col("dt") <= utcDay(lit(maxTs)) && col("warc_ts") <= lit(maxTs))
 
   /** Feature-vector sink with lineage: writes the data partitioned by label
     * day plus a `_metrics` JSON table of per-partition row counts/digests
     * (north_rule: metrics alongside outputs). */
   def writeFeatures(df: DataFrame, path: String, labelTs: String = "label_ts"): Unit = {
-    val withDt = df.withColumn("dt", to_date(col(labelTs)))
-    withDt.write.mode(SaveMode.Overwrite).partitionBy("dt").parquet(path)
+    val withDt = df.withColumn("dt", utcDay(col(labelTs)))
+    writePartitioned(withDt, Seq("dt"), path)
     graft.runtime.Lineage.writeMetrics(
       graft.runtime.Lineage.partitionMetrics(withDt, Seq(labelTs)), path + "_metrics")
   }

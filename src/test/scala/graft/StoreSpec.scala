@@ -7,10 +7,37 @@ import graft.core.{PagesGen, Store}
 class StoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** An incremental writer's layout: the store's `dt` (and `ub`) partitions
+    * written straight from `df`'s partitions, so every task leaves one small
+    * file in every day it touches. `Store.writePages` clusters by partition
+    * first, so compaction fixtures build their fragmentation here. */
+  def writeFragmented(df: org.apache.spark.sql.DataFrame, dir: String, urlBuckets: Int = 0): Unit = {
+    val withDt = df.withColumn("dt", Store.utcDay(col("warc_ts")))
+    val (out, cols) =
+      if (urlBuckets > 0)
+        (withDt.withColumn("ub", pmod(xxhash64(col("url")), lit(urlBuckets))), Seq("dt", "ub"))
+      else (withDt, Seq("dt"))
+    out.write.mode("overwrite").partitionBy(cols: _*).parquet(dir)
+  }
+
+  /** Parquet file count of every leaf partition directory under `dir`,
+    * keyed by its path relative to `dir` (`dt=...` or `dt=.../ub=...`). */
+  def filesPerLeaf(dir: String): Map[String, Int] = {
+    def leaves(d: java.io.File, rel: String): Seq[(String, Int)] = {
+      val subs = d.listFiles().filter(f => f.isDirectory && f.getName.contains("=")).toSeq
+      if (subs.isEmpty) Seq(rel -> d.listFiles().count(_.getName.endsWith(".parquet")))
+      else subs.flatMap(s => leaves(s, if (rel.isEmpty) s.getName else s"$rel/${s.getName}"))
+    }
+    leaves(new java.io.File(dir), "").toMap
+  }
+
   test("day-partitioned store prunes partitions for time-bounded scans") {
     val dir = java.nio.file.Files.createTempDirectory("pages-store").toString + "/pages"
     val pages = PagesGen.pages(spark, 5000, 500, days = 30)
-    Store.writePages(pages, dir)
+    Store.writePages(pages.repartition(16), dir)
+    // one file per day partition however many tasks the input had
+    val layout = filesPerLeaf(dir)
+    assert(layout.size >= 30 && layout.values.forall(_ == 1), s"one file per dt leaf: $layout")
 
     val all = Store.readPages(spark, dir)
     val cut = new java.sql.Timestamp(
@@ -46,7 +73,7 @@ class StoreSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("pages-compact").toString + "/pages"
     val pages = PagesGen.pages(spark, 2000, 200, days = 4)
     // simulate an incremental writer: many tiny files per day partition
-    Store.writePages(pages.repartition(16), dir)
+    writeFragmented(pages.repartition(16), dir)
     val before = Store.readPages(spark, dir)
       .select("url", "warc_ts", "text").collect().sortBy(r => (r.getString(0), r.getTimestamp(1).getTime))
     def fileCount(part: String) =
@@ -74,7 +101,7 @@ class StoreSpec extends AnyFunSuite {
   test("compaction: bucketed leaves, interrupted-swap recovery, clean failures") {
     val dir = java.nio.file.Files.createTempDirectory("pages-compact2").toString + "/pages"
     val pages = PagesGen.pages(spark, 1200, 120, days = 2)
-    Store.writePages(pages.repartition(8), dir, urlBuckets = 2)
+    writeFragmented(pages.repartition(8), dir, urlBuckets = 2)
     val before = Store.readPages(spark, dir)
       .select("url", "warc_ts", "text").collect()
       .map(_.toString).sorted.toSeq
@@ -106,7 +133,7 @@ class StoreSpec extends AnyFunSuite {
   test("compaction: lock file serializes concurrent writers") {
     val dir = java.nio.file.Files.createTempDirectory("pages-lock").toString + "/pages"
     val pages = core.PagesGen.pages(spark, 600, 60, days = 2)
-    Store.writePages(pages.repartition(6), dir)
+    writeFragmented(pages.repartition(6), dir)
     // a held lock makes a second compact fail fast instead of colliding
     val lock = new java.io.File(dir, ".compact_lock")
     assert(lock.createNewFile())
@@ -124,7 +151,7 @@ class StoreSpec extends AnyFunSuite {
   test("compaction: concurrent partition rewrites preserve content") {
     val dir = java.nio.file.Files.createTempDirectory("pages-par").toString + "/pages"
     val pages = core.PagesGen.pages(spark, 4000, 400, days = 8)
-    Store.writePages(pages.repartition(12), dir)
+    writeFragmented(pages.repartition(12), dir)
     val before = Store.readPages(spark, dir)
       .select("url", "warc_ts", "text").collect().map(_.toString).sorted.toSeq
     val nParts = new java.io.File(dir).listFiles().count(_.getName.startsWith("dt="))
@@ -262,9 +289,12 @@ class StoreSpec extends AnyFunSuite {
   test("feature sink writes metrics alongside the data") {
     val dir = java.nio.file.Files.createTempDirectory("feat-store").toString + "/features"
     val labels = PagesGen.labels(spark, 1000, 100)
-    Store.writeFeatures(labels, dir)
+    Store.writeFeatures(labels.repartition(16), dir)
     val metrics = spark.read.json(dir + "_metrics")
     assert(metrics.agg(sum("n_rows")).head().getLong(0) == 1000L)
+    val layout = filesPerLeaf(dir)
+    assert(layout.nonEmpty && layout.keys.forall(_.startsWith("dt=")) && layout.values.forall(_ == 1),
+      s"one file per dt leaf: $layout")
     assert(metrics.columns.contains("digest"))
     val data = spark.read.parquet(dir)
     assert(data.count() == 1000L)
@@ -299,9 +329,31 @@ class StoreSpec extends AnyFunSuite {
   test("round-trip through the bucketed layout preserves content") {
     val dir = java.nio.file.Files.createTempDirectory("pages-bucketed").toString + "/pages"
     val pages = PagesGen.pages(spark, 2000, 200)
-    Store.writePages(pages, dir, urlBuckets = 4)
+    Store.writePages(pages.repartition(16), dir, urlBuckets = 4)
     val back = Store.readPages(spark, dir).drop("dt", "ub")
     assert(graft.runtime.Lineage.contentDigest(back.select("url", "warc_ts", "text", "lang")) ==
       graft.runtime.Lineage.contentDigest(pages.select("url", "warc_ts", "text", "lang")))
+    // one file per dt=/ub= leaf however many tasks the input had
+    val layout = filesPerLeaf(dir)
+    assert(layout.nonEmpty && layout.keys.forall(_.matches("dt=[^/]+/ub=[0-3]")) &&
+      layout.values.forall(_ == 1), s"one file per dt/ub leaf: $layout")
+  }
+
+  test("pagesUpTo prunes on the UTC day whatever the reader's session time zone") {
+    val dir = java.nio.file.Files.createTempDirectory("pages-tz").toString + "/pages"
+    val pages = PagesGen.pages(spark, 5000, 500, days = 30)
+    Store.writePages(pages, dir) // the test session writes in UTC
+    val cut = new java.sql.Timestamp(
+      (PagesGen.baseEpoch + 10L * 86400 + 6L * 3600) * 1000) // day 10 plus 6 h
+    val want = pages.where(col("warc_ts") <= lit(cut)).count()
+    val key = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(key)
+    try {
+      for (zone <- Seq("UTC", "America/Los_Angeles")) {
+        spark.conf.set(key, zone)
+        val got = Store.pagesUpTo(spark, dir, cut).count()
+        assert(got == want, s"pagesUpTo under $zone returned $got rows, expected $want")
+      }
+    } finally spark.conf.set(key, saved)
   }
 }
