@@ -348,7 +348,7 @@ object Snapshot {
         // sweep each staging UUID dir by the NEWEST mtime anywhere inside
         // it: an in-flight append/compact keeps writing files, so a long
         // write phase never looks stale (the root dir's own mtime froze at
-        // staging creation — the Checkpoints.gc overwrite lesson), while a
+        // staging creation, and overwriting a file does not touch it), while a
         // crashed run's residue genuinely ages out
         // a concurrent compact/append may delete its own staging dir at
         // any point during this walk (that's its normal cleanup) — a

@@ -58,8 +58,9 @@ object Store {
       .where(col("dt") <= utcDay(lit(maxTs)) && col("warc_ts") <= lit(maxTs))
 
   /** Feature-vector sink with lineage: writes the data partitioned by label
-    * day plus a `_metrics` JSON table of per-partition row counts/digests
-    * (north_rule: metrics alongside outputs). */
+    * day plus a `_metrics` JSON table with one row per `dt` partition (row
+    * count, label-time bounds, content digest; north_rule: metrics
+    * alongside outputs). */
   def writeFeatures(df: DataFrame, path: String, labelTs: String = "label_ts"): Unit = {
     val withDt = df.withColumn("dt", utcDay(col(labelTs)))
     writePartitioned(withDt, Seq("dt"), path)
@@ -217,54 +218,4 @@ object Store {
       graft.runtime.DriverPool.boundedParallel(targets, maxConcurrent)(compactOne).flatten
     } finally fs.delete(lock, false)
   }
-
-  /** The pages schema for schema-on-read sources. */
-  val pagesSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("warc_ts", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("html", org.apache.spark.sql.types.BinaryType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType)))
-
-  /** Additional source formats: the same pages shape from JSON-lines or CSV
-    * exports (html carried base64 in text formats — decoded on read). All
-    * readers converge on the canonical schema, so every downstream operator
-    * is source-agnostic. */
-  def readPagesJson(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(pagesSchema.copy(fields = pagesSchema.fields.map(f =>
-        if (f.name == "html") f.copy(dataType = org.apache.spark.sql.types.StringType) else f)))
-      .json(path)
-      .withColumn("html", unbase64(col("html")))
-      .select("url", "warc_ts", "html", "text", "lang")
-
-  def readPagesCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("multiLine", "true")
-      .option("escape", "\"")
-      // Spark CSV trims whitespace by default — that silently breaks the
-      // byte-identity-per-url invariant (caught by the digest round-trip test)
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
-      .schema(pagesSchema.copy(fields = pagesSchema.fields.map(f =>
-        if (f.name == "html") f.copy(dataType = org.apache.spark.sql.types.StringType) else f)))
-      .csv(path)
-      .withColumn("html", unbase64(col("html")))
-      .select("url", "warc_ts", "html", "text", "lang")
-
-  /** Export helpers for the text formats (html base64-encoded). */
-  def writePagesJson(df: DataFrame, path: String): Unit =
-    df.withColumn("html", base64(col("html")))
-      .write.mode(SaveMode.Overwrite).json(path)
-
-  def writePagesCsv(df: DataFrame, path: String): Unit =
-    df.withColumn("html", base64(col("html")))
-      .write.mode(SaveMode.Overwrite)
-      .option("header", "true").option("escape", "\"")
-      // the CSV WRITER also trims by default — same byte-identity hazard
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
-      .csv(path)
 }

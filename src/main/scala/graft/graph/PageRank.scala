@@ -185,8 +185,7 @@ object PageRank {
       ranks = next
       // every 8th iteration, materialize: bounds the replay depth after a
       // cache eviction to 8 O(E) joins and keeps the pending-cache chain
-      // short on long runs; costs one driver action per 8 sweeps (for the
-      // hours-per-sweep regime use pageRankResumable, which re-roots).
+      // short on long runs; costs one driver action per 8 sweeps.
       if (it % 8 == 0 && it < iters) {
         next.count()
         if (anchor != null) anchor.unpersist(blocking = false)
@@ -195,111 +194,6 @@ object PageRank {
     }
     finish(g, ranks)
   }
-
-  /** [[pageRank]] with per-iteration checkpoints (the north-rule resume
-    * contract for the LONG iterative job — at 10¹² nodes each sweep is
-    * hours, and the rank state is O(N), so losing a run to a crash is the
-    * expensive failure). After each iteration the integer rank table is
-    * written as parquet under `checkpointDir/iter_<k>` and then marked
-    * complete via [[graft.runtime.IterativeCheckpoint]] (marker AFTER data:
-    * an unmarked partial write is ignored and overwritten on resume). A
-    * restarted run reloads the highest MARKED iteration and continues —
-    * exact longs, so the resumed run is bit-identical to the uninterrupted
-    * one (GraphSpec). The marker fingerprints the GRAPH, not just its
-    * shape — (n, scaleBits, edge count, an order-independent exact digest
-    * of the edge multiset) — so a checkpoint directory from a different
-    * edge set aborts instead of silently continuing the wrong run. After
-    * each write the live rank lineage is RE-ROOTED on the just-written
-    * parquet, so pruning the previous iteration can never strand a cache
-    * recomputation (cache loss walks back to durable data, not to a
-    * deleted file). */
-  def pageRankResumable(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      iters: Int,
-      checkpointDir: String,
-      scaleBits: Int = 50,
-      handle: graft.runtime.CacheHandle = new graft.runtime.CacheHandle,
-      hotSourceDegree: Long = 1L << 18
-  ): DataFrame = {
-    import graft.runtime.IterativeCheckpoint
-    require(iters >= 1, "pageRank needs at least one iteration")
-    val (g, _) = prepare(edges, srcCol, dstCol, scaleBits, handle,
-      saltHotAbove = hotSourceDegree)
-    val spark = edges.sparkSession
-    // order-independent exact edge digest: decimal(38,0) sum of per-edge
-    // hashes (the runtime/Lineage accumulation convention — a long sum
-    // would overflow ANSI-fatally at corpus scale)
-    val fpRow = g.e.agg(count(lit(1)),
-      sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)"))).collect()(0)
-    val mk = marker(g, scaleBits, fpRow.getLong(0), fpRow.getDecimal(1).toBigInteger.toString)
-    var done = 0
-    var ranks: DataFrame = null
-    IterativeCheckpoint.latest(spark, checkpointDir).foreach { case (it, json) =>
-      require(it <= iters, s"checkpoint is at iteration $it but only $iters requested")
-      require(json == mk, s"checkpoint $json does not match this graph ($mk)")
-      done = it
-      ranks = handle.track(
-        spark.read.parquet(s"$checkpointDir/iter_$it").select("node", "r").cache())
-      ranks.count()
-    }
-    if (done == 0) {
-      ranks = handle.track(g.nodes.select(col("node"), lit(g.k / g.n).as("r")).cache())
-    }
-    // a resumed run may find older iterations a crash left behind — prune
-    // everything below the one we resumed from (see prune ordering below)
-    prune(spark, checkpointDir, below = done)
-    for (it <- done + 1 to iters) {
-      val stepped = step(g, ranks, handle) // lazy; the write below is the
-      // one action that computes it (and fills the cache en route)
-      // data first (overwrite clears any unmarked partial), marker second
-      stepped.write.mode("overwrite").parquet(s"$checkpointDir/iter_$it")
-      IterativeCheckpoint.save(spark, checkpointDir, it, mk)
-      // RE-ROOT on the durable copy before pruning: the new cache's
-      // lineage bottoms on iter_<it>'s parquet, so losing cache blocks
-      // after iter_<it-1> is deleted recomputes from disk, never from the
-      // pruned file. Superseded caches unpersist immediately (O(iters·N)
-      // pin + per-action CacheManager scan otherwise).
-      stepped.unpersist(blocking = false)
-      ranks.unpersist(blocking = false)
-      ranks = handle.track(
-        spark.read.parquet(s"$checkpointDir/iter_$it").select("node", "r").cache())
-      // the rank table is O(N) — keep only the newest iteration's data.
-      // Deletion is marker FIRST, then parquet: a crash in between leaves
-      // an unmarked orphan dir, reclaimed by the next prune (prune lists
-      // DATA directories as well as markers for exactly this reason);
-      // never a marked iteration whose data is gone.
-      prune(spark, checkpointDir, below = it)
-    }
-    finish(g, ranks)
-  }
-
-  /** Delete every iteration artifact below `below` — markers AND data
-    * directories, including unmarked orphans from a crash mid-delete or
-    * mid-write (marker first, then data; see call sites). */
-  private def prune(spark: org.apache.spark.sql.SparkSession,
-      checkpointDir: String, below: Int): Unit = {
-    val root = new org.apache.hadoop.fs.Path(checkpointDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val Marker = "iter_(\\d+)\\.json".r
-    val Data = "iter_(\\d+)".r
-    fs.listStatus(root).foreach { st =>
-      val k = st.getPath.getName match {
-        case Marker(j) => Some(j.toInt)
-        case Data(j)   => Some(j.toInt)
-        case _         => None
-      }
-      k.filter(_ < below).foreach { j =>
-        graft.runtime.IterativeCheckpoint.deleteMarker(spark, checkpointDir, j)
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"iter_$j"), true)
-      }
-    }
-  }
-
-  private def marker(g: Graph, scaleBits: Int, edgeCount: Long, digest: String): String =
-    s"""{"n":${g.n},"scaleBits":$scaleBits,"edges":$edgeCount,"digest":"$digest"}"""
 
   /** HITS hubs-and-authorities (Kleinberg) in EXACT INTEGER arithmetic —
     * the second link-centrality signal curation uses (authorities ≈

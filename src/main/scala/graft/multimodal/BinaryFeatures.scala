@@ -387,15 +387,4 @@ object BinaryFeatures {
       }
     }
   }
-
-  /** Frame sampling stub for video-like payloads: REAL byte-range slicing
-    * (every k-th chunk of `chunk` bytes — the seek pattern a real demuxer
-    * would use), fake frame decode. */
-  def sampleChunks(df: DataFrame, bytesCol: String, every: Int, chunk: Int, maxChunks: Int): DataFrame =
-    df.withColumn(
-      "chunks",
-      filter(
-        transform(sequence(lit(0), lit(maxChunks - 1)),
-          i => substring(col(bytesCol), i * every * chunk + 1, lit(chunk))),
-        c => length(c) > 0))
 }

@@ -14,7 +14,16 @@ import graft.select.{FittedSelector, SelectorStep}
   * Resume contract: `fitOrResume` replays completed steps from their
   * checkpoints (byte-identical state — no recompute, no drift) and runs the
   * remaining ones, so fit(k steps) interrupted after j steps redoes only
-  * k − j. An `input_lineage` field records what the step was fitted on.
+  * k − j. A checkpoint replays only for the fit it belongs to: its
+  * `fingerprint` field hashes the step's case-class rendering (every
+  * parameter), the outcome, the requested predictors, the columns the step
+  * was fitted on and the caller's `lineage` string. A rerun with another
+  * `topP`, method, predictor list or input store finds a different or
+  * missing fingerprint, refits that step and says so in the step's
+  * `warnings`. A step whose
+  * rendering is not stable across JVMs never replays: `VipStep`'s
+  * function-valued `importanceFn` prints as a lambda identity, so a VipStep
+  * always refits on resume, which is the safe direction.
   */
 object Checkpoints {
 
@@ -27,7 +36,7 @@ object Checkpoints {
       case c => c.toString
     }
 
-  def toJson(f: FittedSelector, lineage: String): String = {
+  def toJson(f: FittedSelector, fingerprint: String): String = {
     val scores = f.scores.map {
       case (k, Some(v)) => s""""${esc(k)}":$v"""
       case (k, None)    => s""""${esc(k)}":null"""
@@ -35,7 +44,7 @@ object Checkpoints {
     val excluded = f.excluded.map(e => s""""${esc(e)}"""").mkString("[", ",", "]")
     val warnings = f.warnings.map(w => s""""${esc(w)}"""").mkString("[", ",", "]")
     s"""{"step":"${esc(f.step)}","outcome":"${esc(f.outcome)}","scores":$scores,""" +
-      s""""excluded":$excluded,"warnings":$warnings,"input_lineage":"${esc(lineage)}"}"""
+      s""""excluded":$excluded,"warnings":$warnings,"fingerprint":"${esc(fingerprint)}"}"""
   }
 
   /** Reader for the checkpoint shape written above, on the json4s parser
@@ -73,6 +82,13 @@ object Checkpoints {
     FittedSelector(str("step"), str("outcome"), scores, arr("excluded"), arr("warnings"))
   }
 
+  /** The `fingerprint` field of a checkpoint (None when absent). */
+  private def fingerprintOf(json: String): Option[String] =
+    org.json4s.jackson.JsonMethods.parse(json) \ "fingerprint" match {
+      case org.json4s.JString(v) => Some(v)
+      case _                     => None
+    }
+
   private def write(path: Path, content: String): Unit = {
     Files.createDirectories(path.getParent)
     val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
@@ -80,76 +96,18 @@ object Checkpoints {
     Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Checkpoint-store GC: under `<root>/<pipelineId>` each fit owns one
-    * subdirectory of step JSONs (the layout fitOrResume is pointed at, one
-    * dir per fit). Keeps the `keepLatest` most-recent fits (directory mtime,
-    * name tiebreak) and deletes the rest — a multi-day run re-fitting on a
-    * schedule otherwise accumulates unbounded (if individually tiny) JSON.
-    * Returns the deleted fit directories.
-    *
-    * `graceMillis` protects in-flight fits: a fit modified within the grace
-    * window is never evicted regardless of rank. "Modified" is the MAX mtime
-    * of the fit directory and its contained step files — overwriting an
-    * existing step JSON updates the file's mtime but not necessarily the
-    * parent directory's, so a long resumed fit that rewrites rather than
-    * creates step files would look stale under the bare directory mtime.
-    * A SLOW fit can still look stale (its max mtime is its last step-file
-    * write while a long step computes), so when scheduled fits may overlap,
-    * set the grace above the longest plausible single-step duration; mtime
-    * order alone cannot distinguish "slow and running" from "old and dead".
-    */
-  def gc(
-      root: String,
-      pipelineId: String,
-      keepLatest: Int,
-      graceMillis: Long = 3600L * 1000
-  ): Seq[String] = {
-    require(keepLatest >= 1, "keepLatest must be >= 1")
-    require(graceMillis >= 0, "graceMillis must be >= 0")
-    val cutoff = System.currentTimeMillis() - graceMillis
-    val base = Paths.get(root, pipelineId)
-    if (!Files.isDirectory(base)) return Nil
-    val children = {
-      val s = Files.list(base)
-      try {
-        val it = s.iterator()
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-        while (it.hasNext) buf += it.next()
-        buf.toSeq
-      } finally s.close()
-    }
-    // a fit's effective mtime = max over the directory and its step files
-    // (fits hold a handful of JSONs, so the listing is cheap)
-    def fitMtime(p: Path): Long = {
-      var m = Files.getLastModifiedTime(p).toMillis
-      val s = Files.list(p)
-      try {
-        val it = s.iterator()
-        while (it.hasNext) m = math.max(m, Files.getLastModifiedTime(it.next()).toMillis)
-      } finally s.close()
-      m
-    }
-    val fits = children.filter(Files.isDirectory(_))
-      .map(p => (p, fitMtime(p)))
-      .sortBy { case (p, m) => (m, p.getFileName.toString) }
-    val evict = fits.dropRight(keepLatest)
-      .collect { case (p, m) if m < cutoff => p }
-    evict.foreach { d =>
-      val w = Files.walk(d)
-      try {
-        val all = {
-          val it = w.iterator(); val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-          while (it.hasNext) buf += it.next()
-          buf.toSeq
-        }
-        all.sortBy(-_.getNameCount).foreach(Files.delete)
-      } finally w.close()
-    }
-    evict.map(_.toString)
+  private def fingerprint(step: SelectorStep, outcome: String, preds: Seq[String],
+      columns: Seq[String], lineage: String): String = {
+    val text = Seq(step.toString, outcome, preds.mkString("\u0001"),
+      columns.mkString("\u0001"), lineage).mkString("\u0000")
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
   }
 
-  /** Fit a pipeline with per-step checkpointing; completed steps are loaded
-    * from `dir` instead of recomputed. */
+  /** Fit a pipeline with per-step checkpointing; completed steps whose
+    * checkpoint in `dir` carries this fit's fingerprint are loaded instead
+    * of recomputed. */
   def fitOrResume(
       spark: SparkSession,
       dir: String,
@@ -161,18 +119,28 @@ object Checkpoints {
     var cur = df
     steps.zipWithIndex.map { case ((step, preds), i) =>
       val path = Paths.get(dir, f"step_$i%03d_${step.name}.json")
-      def refit(): FittedSelector = {
-        val f = step.fit(cur, outcome, preds)
-        write(path, toJson(f, lineage))
+      val fp = fingerprint(step, outcome, preds, cur.columns.toSeq, lineage)
+      def refit(warning: Option[String]): FittedSelector = {
+        val fresh = step.fit(cur, outcome, preds)
+        val f = fresh.copy(warnings = fresh.warnings ++ warning)
+        write(path, toJson(f, fp))
         f
       }
-      val fitted =
-        if (Files.exists(path))
-          // a corrupt/truncated checkpoint (disk-full mid-escape, partial
-          // write outside the atomic path) falls back to refitting the step
-          // rather than aborting the whole resume
-          scala.util.Try(fromJson(Files.readString(path))).getOrElse(refit())
-        else refit()
+      // a corrupt/truncated checkpoint (disk-full mid-escape, partial write
+      // outside the atomic path) falls back to refitting the step rather
+      // than aborting the whole resume
+      val saved =
+        if (!Files.exists(path)) None
+        else scala.util.Try {
+          val json = Files.readString(path)
+          (fromJson(json), fingerprintOf(json))
+        }.toOption
+      val fitted = saved match {
+        case Some((f, Some(`fp`))) => f
+        case Some(_) => refit(Some(
+          s"checkpoint ${path.getFileName} belongs to another fit (parameters or input changed); refitted"))
+        case None => refit(None)
+      }
       cur = fitted.transform(cur)
       fitted
     }

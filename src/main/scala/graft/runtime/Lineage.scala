@@ -7,11 +7,13 @@ import org.apache.spark.sql.functions._
   * "per-partition lineage and row-count/score metrics are written alongside
   * commit-level checkpoints").
   *
-  * [[partitionMetrics]] computes, per Spark partition of the given frame:
-  * row count, min/max of the ordering key, and an ORDER-INSENSITIVE content
-  * digest (sum of per-row xxhash64 in a ring — associative, so identical
-  * data in any order produces the same digest). Comparing two runs' metric
-  * tables row-by-row proves resume-equivalence without moving data.
+  * [[partitionMetrics]] computes, per store partition (`dt` day) of the
+  * given frame: row count, min/max of the ordering key, and an
+  * ORDER-INSENSITIVE content digest (sum of per-row xxhash64 in a ring —
+  * associative, so identical data in any order produces the same digest).
+  * Each row matches one `dt=` directory and none depends on how the frame
+  * was split into tasks, so comparing two runs' metric tables row-by-row
+  * proves resume-equivalence without moving data.
   *
   * [[inputFiles]] records the exact source files a frame read — the scan
   * lineage needed to re-derive any output partition.
@@ -28,11 +30,11 @@ object Lineage {
       lit(Long.MaxValue).cast("decimal(38,0)")
     ).cast("long")
 
-  /** DataFrame(partition_id, n_rows, min_key, max_key, digest). */
+  /** DataFrame(dt, n_rows, min_key, max_key, digest), one row per `dt`
+    * value of `df` (the store's day partition column). */
   def partitionMetrics(df: DataFrame, keyCols: Seq[String]): DataFrame = {
     val digest = digestExpr(df).as("digest")
-    df.withColumn("__pid", spark_partition_id())
-      .groupBy(col("__pid").as("partition_id"))
+    df.groupBy(col("dt"))
       .agg(
         count(lit(1)).as("n_rows"),
         min(struct(keyCols.map(col): _*)).as("min_key"),
@@ -84,7 +86,9 @@ object Lineage {
     }
   }
 
-  /** Write a metrics table next to an output path (single small file). */
+  /** Write a metrics table next to an output path (single small file, rows
+    * sorted, so equal tables are byte-equal files). */
   def writeMetrics(metrics: DataFrame, outPath: String): Unit =
-    metrics.coalesce(1).write.mode("overwrite").json(outPath)
+    metrics.coalesce(1).sortWithinPartitions(metrics.columns.map(col).toIndexedSeq: _*)
+      .write.mode("overwrite").json(outPath)
 }

@@ -318,7 +318,10 @@ final case class MrmrStep(
 }
 
 /** step_select_xtab — χ²/Fisher p-values + optional BH FDR; small p = good
-  * ⇒ dual_filter(maximize = FALSE) (step_select_xtab.R:93–149). */
+  * ⇒ dual_filter(maximize = FALSE) (step_select_xtab.R:93–149). A predictor
+  * with no test (all NULL, or a single level) scores NA and is excluded —
+  * colino's errors → NA rule; BH's n counts only the non-NA p-values, as
+  * R's `p.adjust` does. */
 final case class XtabStep(
     topP: Option[Double] = None,
     threshold: Option[Double] = None,
@@ -335,7 +338,10 @@ final case class XtabStep(
     val long = Melt
       .categorical(df, preds, keep = Seq(outcome))
       .select(col("feature"), col("value").as("xb"), col(outcome).cast("string").as("yb"))
-    ChiSq.xtabScores(long, fisher, fdr)
+    // the melt drops NULL cells, so an all-NULL predictor never reaches
+    // xtabScores: score every requested predictor, absent ones as NA
+    val got = ChiSq.xtabScores(long, fisher, fdr).toMap
+    preds.map(p => p -> got.get(p).flatten)
   }
 }
 

@@ -256,78 +256,6 @@ object Similarity {
     (cents, sizes)
   }
 
-  /** [[kmeans]] with per-iteration checkpoints (the north-rule resume
-    * contract applied to the long iterative job): after each Lloyd
-    * iteration the centroids + cell sizes are written atomically to
-    * `checkpointDir/iter_<k>.json` ([[graft.runtime.IterativeCheckpoint]] —
-    * Hadoop FS, so the directory can be HDFS/S3). A restarted run resumes
-    * from the highest complete iteration and, because [[kmeans]] is
-    * bit-deterministic at any parallelism, produces EXACTLY the
-    * uninterrupted run's centroids (spec-pinned). Doubles round-trip
-    * through `doubleToLongBits`, so resume is exact to the bit, not to a
-    * decimal print. A checkpoint directory from a different run (wrong k/d)
-    * aborts rather than silently mixing states. */
-  def kmeansResumable(
-      df: DataFrame,
-      vecCol: String,
-      init: Seq[Seq[Double]],
-      iters: Int,
-      checkpointDir: String
-  ): (Seq[Seq[Double]], Map[Int, Long]) = {
-    import graft.runtime.IterativeCheckpoint
-    val spark = df.sparkSession
-    val dim = init.headOption.map(_.length).getOrElse(0)
-    def encode(iter: Int, cents: Seq[Seq[Double]], sizes: Map[Int, Long]): String = {
-      val cs = cents.map(_.map(d =>
-        java.lang.Double.doubleToLongBits(d).toString).mkString("[", ",", "]"))
-        .mkString("[", ",", "]")
-      val ss = sizes.toSeq.sortBy(_._1).map { case (c, n) => s"[$c,$n]" }
-        .mkString("[", ",", "]")
-      s"""{"iter":$iter,"k":${init.size},"dim":$dim,"cents":$cs,"sizes":$ss}"""
-    }
-    def decode(json: String): (Seq[Seq[Double]], Map[Int, Long]) = {
-      import org.json4s._
-      val ast = org.json4s.jackson.JsonMethods.parse(json)
-      def num(v: JValue): Long = v match {
-        case JInt(i)  => i.toLong
-        case JLong(l) => l
-        case other    => throw new IllegalArgumentException(s"corrupt kmeans checkpoint: $other")
-      }
-      val k = num(ast \ "k"); val d = num(ast \ "dim")
-      require(k == init.size && d == dim,
-        s"checkpoint shape (k=$k, dim=$d) does not match init (k=${init.size}, dim=$dim)")
-      val cents = (ast \ "cents") match {
-        case JArray(rows) => rows.map {
-          case JArray(xs) => xs.map(x => java.lang.Double.longBitsToDouble(num(x))).toSeq
-          case other      => throw new IllegalArgumentException(s"corrupt centroid row: $other")
-        }.toSeq
-        case other => throw new IllegalArgumentException(s"corrupt cents: $other")
-      }
-      val sizes = (ast \ "sizes") match {
-        case JArray(ps) => ps.map {
-          case JArray(Seq(c, n)) => num(c).toInt -> num(n)
-          case other             => throw new IllegalArgumentException(s"corrupt size pair: $other")
-        }.toMap
-        case other => throw new IllegalArgumentException(s"corrupt sizes: $other")
-      }
-      (cents, sizes)
-    }
-    val resumed = IterativeCheckpoint.latest(spark, checkpointDir)
-    var done = 0
-    var cents = init
-    var sizes = Map.empty[Int, Long]
-    resumed.foreach { case (k, json) =>
-      require(k <= iters, s"checkpoint is at iteration $k but only $iters requested")
-      val (c, s) = decode(json); done = k; cents = c; sizes = s
-    }
-    for (k <- done + 1 to iters) {
-      val (c, s) = kmeans(df, vecCol, cents, iters = 1)
-      cents = c; sizes = s
-      IterativeCheckpoint.save(spark, checkpointDir, k, encode(k, cents, sizes))
-    }
-    (cents, sizes)
-  }
-
   /** Deterministic IVF centroid seeding: the k vectors with the smallest
     * seeded id-hash — a hash-random sample that is identical at any
     * parallelism (no RNG, no data-order dependence). Lloyd refinement is

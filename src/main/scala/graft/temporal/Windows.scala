@@ -5,13 +5,12 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Windowed feature builders over an entity/time stream (key, ts) — the
-  * north_rule feature set: lag/lead, rolling counts, backfill
-  * (carry-forward), gap-based sessionization, revisit dedup.
+  * north_rule feature set: lag, rolling counts, backfill (carry-forward),
+  * gap-based sessionization, revisit dedup.
   *
   * Leakage discipline: every feature that feeds a label at time t uses a
   * frame ending at the CURRENT ROW (`ROWS/RANGE ... AND CURRENT ROW`) — no
-  * future rows are ever visible. `lead` is exposed for label construction
-  * only, never as a model feature.
+  * future rows are ever visible.
   *
   * Scale shape: all builders share ONE partitioning —
   * hash-exchange on `key`, sort by ts within partitions — so Catalyst plans a
@@ -31,9 +30,6 @@ object Windows {
 
   def lagCol(c: Column, k: Int, key: String, ts: String): Column =
     lag(c, k).over(byKey(key, ts))
-
-  def leadCol(c: Column, k: Int, key: String, ts: String): Column =
-    lead(c, k).over(byKey(key, ts))
 
   /** Rolling count of rows in the trailing `seconds` window INCLUDING the
     * current row: RANGE BETWEEN seconds PRECEDING AND CURRENT ROW over the

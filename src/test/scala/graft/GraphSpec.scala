@@ -74,44 +74,6 @@ class GraphSpec extends AnyFunSuite {
     h.release()
   }
 
-  test("pageRankResumable: bit-exact resume from a marked checkpoint; marker guard") {
-    val h = new graft.runtime.CacheHandle
-    def ranksOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = ranksOf(PageRank.pageRank(edges.toDF("s", "d"), "s", "d", 4, 40, h))
-
-    val d1 = java.nio.file.Files.createTempDirectory("pr-full").toString
-    assert(ranksOf(PageRank.pageRankResumable(
-      edges.toDF("s", "d"), "s", "d", 4, d1, 40, h)) == want)
-
-    // crash after 2 of 4, resume — continues from the marked parquet
-    val d2 = java.nio.file.Files.createTempDirectory("pr-part").toString
-    PageRank.pageRankResumable(edges.toDF("s", "d"), "s", "d", 2, d2, 40, h).collect()
-    assert(ranksOf(PageRank.pageRankResumable(
-      edges.toDF("s", "d"), "s", "d", 4, d2, 40, h)) == want)
-
-    // a checkpoint from a different graph shape aborts
-    intercept[IllegalArgumentException] {
-      PageRank.pageRankResumable(
-        edges.take(3).toDF("s", "d"), "s", "d", 4, d2, 40, h)
-    }
-    // and so does one from DIFFERENT EDGES with the same node set and
-    // count — the marker digests the edge multiset, not just the shape
-    val retargeted = edges.updated(2, (1L, 0L)) // (1,2) -> (1,0)
-    intercept[IllegalArgumentException] {
-      PageRank.pageRankResumable(retargeted.toDF("s", "d"), "s", "d", 4, d2, 40, h)
-    }
-
-    // pruning: only the newest iteration's marker + rank table survive
-    // (the rank table is O(N); keeping every sweep is the storage hazard)
-    val kept = graft.runtime.IterativeCheckpoint.iterations(spark, d2)
-    assert(kept == Seq(4), s"only the last iteration stays marked, got $kept")
-    val dataDirs = new java.io.File(d2).listFiles().map(_.getName)
-      .filter(_.startsWith("iter_")).filterNot(_.endsWith(".json")).toSeq
-    assert(dataDirs == Seq("iter_4"), s"older rank tables pruned, got $dataDirs")
-    h.release()
-  }
-
   /** Local replay of the integer HITS recurrence (downshift normalization). */
   private def localHits(
       edges: Seq[(Long, Long)], iters: Int, s: Int): Map[Long, (Long, Long)] = {

@@ -86,91 +86,41 @@ class RuntimeSpec extends AnyFunSuite {
     assert(java.nio.file.Files.exists(f0))
   }
 
-  test("checkpoint gc keeps the newest N fits per pipeline id, returns evictions") {
+  test("fitOrResume refits a step whose checkpoint belongs to another fit") {
     import java.nio.file.{Files, Paths}
     import java.nio.file.attribute.FileTime
-    val root = Files.createTempDirectory("gctest").toString
-    val fits = (0 until 5).map { i =>
-      val d = Paths.get(root, "pipe_a", f"fit_$i%02d")
-      Files.createDirectories(d)
-      Files.writeString(d.resolve("step_000_x.json"), "{}")
-      // a fit's age is max(dir mtime, step-file mtimes) — backdate both
-      Files.setLastModifiedTime(d.resolve("step_000_x.json"),
-        FileTime.fromMillis(1000000L + i * 60000))
-      Files.setLastModifiedTime(d, FileTime.fromMillis(1000000L + i * 60000))
-      d
-    }
-    // an unrelated pipeline must be untouched
-    val other = Paths.get(root, "pipe_b", "fit_00")
-    Files.createDirectories(other)
-    val deleted = Checkpoints.gc(root, "pipe_a", keepLatest = 2)
-    assert(deleted.toSet == fits.take(3).map(_.toString).toSet, s"got $deleted")
-    assert(fits.drop(3).forall(Files.isDirectory(_)), "newest 2 must survive")
-    assert(fits.take(3).forall(!Files.exists(_)))
-    assert(Files.isDirectory(other))
-    // idempotent; missing pipeline id is a no-op
-    assert(Checkpoints.gc(root, "pipe_a", 2).isEmpty)
-    assert(Checkpoints.gc(root, "nope", 1).isEmpty)
-    intercept[IllegalArgumentException](Checkpoints.gc(root, "pipe_a", 0))
-    // grace window: a recently-touched fit is never evicted even when it
-    // ranks beyond keepLatest (a slow in-flight fit must not be deleted)
-    val recent = Paths.get(root, "pipe_a", "fit_recent_but_lowrank")
-    Files.createDirectories(recent)
-    // rank it OLDEST by name... mtime is now, so rank is newest by mtime;
-    // instead make the surviving fits even newer so recent ranks beyond keep
-    Seq(fits(3), fits(4)).foreach(d =>
-      Files.setLastModifiedTime(d, FileTime.fromMillis(System.currentTimeMillis() + 60000)))
-    assert(Checkpoints.gc(root, "pipe_a", 2).isEmpty,
-      "within-grace fit must survive despite ranking beyond keepLatest")
-    assert(Checkpoints.gc(root, "pipe_a", 2, graceMillis = 0L) == Seq(recent.toString),
-      "grace 0 evicts it")
-    // a long in-flight fit that OVERWRITES existing step files bumps only
-    // the files' mtimes, not the directory's (Files.writeString to an
-    // existing name) — the max(dir, files) age must still protect it
-    val inflight = Paths.get(root, "pipe_a", "fit_inflight_overwriter")
-    Files.createDirectories(inflight)
-    Files.writeString(inflight.resolve("step_000_x.json"), "{}")
-    Files.setLastModifiedTime(inflight, FileTime.fromMillis(1000000L)) // dir looks ancient
-    assert(Checkpoints.gc(root, "pipe_a", 2).isEmpty,
-      "fresh step-file mtime must protect a fit whose dir mtime is stale")
-  }
+    val rng = new scala.util.Random(5)
+    def frame(noise: Double) = spark.createDataFrame((0 until 200).map { _ =>
+      val a = rng.nextGaussian(); val b = rng.nextGaussian(); val c = rng.nextGaussian()
+      (a, b, c, a * 2 + b * 0.5 + c * noise + rng.nextGaussian() * 0.1)
+    }).toDF("a", "b", "c", "y")
+    val df = frame(0.0)
+    def steps(topP: Double): Seq[(SelectorStep, Seq[String])] =
+      Seq((CorrStep(topP = Some(topP), method = "pearson"), Seq("a", "b", "c")))
+    val dir = Files.createTempDirectory("ckpt-fp").toString
+    val ck = Paths.get(dir, "step_000_step_select_corr_pearson.json")
+    val first = Checkpoints.fitOrResume(spark, dir, steps(2), df, "y", "store-v1")
+    assert(first.head.excluded == Seq("c") && first.head.warnings.isEmpty)
 
-  test("kmeansResumable: bit-exact resume from a mid-run checkpoint; shape guard; idempotent save") {
-    import graft.sim.Similarity
-    import graft.runtime.IterativeCheckpoint
-    val rng = new scala.util.Random(3)
-    val vecs = (0 until 300).map(i => (i.toLong, Array.fill(8)(rng.nextFloat())))
-      .toDF("id", "v").repartition(5).cache()
-    vecs.count()
-    val init = (0 until 4).map(_ => Seq.fill(8)(rng.nextDouble()))
-    val want = Similarity.kmeans(vecs, "v", init, iters = 3)
+    // same fit: replayed, the checkpoint is not rewritten
+    Files.setLastModifiedTime(ck, FileTime.fromMillis(1000000L))
+    assert(Checkpoints.fitOrResume(spark, dir, steps(2), df, "y", "store-v1") == first)
+    assert(Files.getLastModifiedTime(ck).toMillis == 1000000L, "a matching checkpoint replays")
 
-    // fresh resumable run == plain kmeans, to the bit
-    val d1 = java.nio.file.Files.createTempDirectory("km-full").toString
-    assert(Similarity.kmeansResumable(vecs, "v", init, 3, d1) == want)
+    // changed topP: refit, with a warning on the step
+    val topP1 = Checkpoints.fitOrResume(spark, dir, steps(1), df, "y", "store-v1")
+    val fresh1 = CorrStep(topP = Some(1), method = "pearson").fit(df, "y", Seq("a", "b", "c"))
+    assert(topP1.head.excluded == fresh1.excluded && topP1.head.scores == fresh1.scores)
+    assert(topP1.head.warnings.exists(_.contains("refitted")), s"${topP1.head.warnings}")
 
-    // crash after iteration 1, resume to 3 — and pass a PERTURBED init of
-    // the same shape: matching `want` proves iteration 1 really came from
-    // the checkpoint, not from re-running the new init
-    val d2 = java.nio.file.Files.createTempDirectory("km-part").toString
-    Similarity.kmeansResumable(vecs, "v", init, 1, d2)
-    val perturbed = init.map(_.map(_ + 100.0))
-    assert(Similarity.kmeansResumable(vecs, "v", perturbed, 3, d2) == want,
-      "resume must continue from the checkpointed centroids")
-
-    // resuming at the target iteration recomputes nothing and returns it
-    assert(Similarity.kmeansResumable(vecs, "v", perturbed, 3, d2) == want)
-
-    // shape guard: a checkpoint from a different k aborts
-    intercept[IllegalArgumentException](
-      Similarity.kmeansResumable(vecs, "v", init.take(2), 3, d2))
-
-    // idempotent save: first writer wins, a duplicate payload is discarded
-    val d3 = java.nio.file.Files.createTempDirectory("km-idem").toString
-    IterativeCheckpoint.save(spark, d3, 1, """{"a":1}""")
-    IterativeCheckpoint.save(spark, d3, 1, """{"a":2}""")
-    assert(IterativeCheckpoint.latest(spark, d3).contains(1 -> """{"a":1}"""))
-    vecs.unpersist()
+    // changed lineage (a rewritten store): refit on the new input
+    val df2 = frame(3.0)
+    val moved = Checkpoints.fitOrResume(spark, dir, steps(1), df2, "y", "store-v2")
+    val fresh2 = CorrStep(topP = Some(1), method = "pearson").fit(df2, "y", Seq("a", "b", "c"))
+    assert(moved.head.scores == fresh2.scores, "a changed lineage must not replay the old scores")
+    assert(moved.head.warnings.exists(_.contains("refitted")))
+    // the refit (warning included) is what the next resume replays
+    assert(Checkpoints.fitOrResume(spark, dir, steps(1), df2, "y", "store-v2") == moved)
   }
 
   test("partition metrics: digests are order-insensitive and detect change") {
@@ -180,8 +130,12 @@ class RuntimeSpec extends AnyFunSuite {
     assert(d1 == d2, "content digest must not depend on row order")
     val d3 = Lineage.contentDigest(df.withColumn("v", col("v") + 1))
     assert(d1 != d3)
-    val pm = Lineage.partitionMetrics(df.repartition(4, col("v")), Seq("id"))
+    val byDt = df.withColumn("dt", col("v"))
+    val pm = Lineage.partitionMetrics(byDt.repartition(4, col("id")), Seq("id"))
     assert(pm.agg(sum("n_rows")).head().getLong(0) == 1000L)
+    assert(pm.count() == 7, "one row per dt value")
+    assert(pm.collect().toSet == Lineage.partitionMetrics(byDt.repartition(1), Seq("id")).collect().toSet,
+      "metrics must not depend on the frame's partitioning")
   }
 
   test("byte-identity guard flags a corrupted url and passes clean data") {

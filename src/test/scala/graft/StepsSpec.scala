@@ -157,6 +157,21 @@ class StepsSpec extends AnyFunSuite {
     assert(m("x_informative").get < m("x_noise").get, "informative has smaller p")
   }
 
+  test("XtabStep: an all-null categorical predictor scores NA and is excluded") {
+    val cat = df.select(
+      when(col("f1") > 2, "hi").otherwise("lo").as("x_informative"),
+      when(col("f3") > 0, "a").otherwise("b").as("x_noise"),
+      lit(null).cast("string").as("x_null"),
+      col("species"))
+    val fitted = XtabStep(topP = Some(2)).fit(cat, "species", Seq("x_informative", "x_noise", "x_null"))
+    assert(fitted.scores.map(_._1) == Seq("x_informative", "x_noise", "x_null"))
+    assert(fitted.scores.toMap.apply("x_null").isEmpty, "no test ⇒ NA score")
+    assert(fitted.excluded == Seq("x_null"))
+    // BH's n counts only the non-NA p-values (R's p.adjust)
+    val without = XtabStep(topP = Some(2)).fit(cat, "species", Seq("x_informative", "x_noise"))
+    assert(fitted.scores.filter(_._2.isDefined).toMap == without.scores.toMap)
+  }
+
   test("RocStep multiclass = mean of pairwise direction-auto AUCs") {
     val fitted = RocStep(topP = Some(2)).fit(df, "species", Seq("f1", "f3"))
     val local = df.select("f1", "species").collect().map(r => (r.getDouble(0), r.getString(1)))

@@ -300,16 +300,25 @@ class StoreSpec extends AnyFunSuite {
     assert(data.count() == 1000L)
   }
 
-  test("json and csv sources round-trip the pages shape byte-identically") {
-    val base = java.nio.file.Files.createTempDirectory("pages-fmt").toString
-    val pages = PagesGen.pages(spark, 500, 50)
-    val want = graft.runtime.Lineage.contentDigest(pages)
-    Store.writePagesJson(pages, s"$base/json")
-    Store.writePagesCsv(pages, s"$base/csv")
-    val viaJson = Store.readPagesJson(spark, s"$base/json")
-    val viaCsv = Store.readPagesCsv(spark, s"$base/csv")
-    assert(graft.runtime.Lineage.contentDigest(viaJson) == want, "json round-trip")
-    assert(graft.runtime.Lineage.contentDigest(viaCsv) == want, "csv round-trip")
+  test("feature sink metrics: one row per dt directory, equal whatever the input's partitioning") {
+    val base = java.nio.file.Files.createTempDirectory("feat-metrics").toString
+    val labels = PagesGen.labels(spark, 1000, 100)
+    def metricsText(parts: Int): String = {
+      val dir = s"$base/p$parts"
+      Store.writeFeatures(labels.repartition(parts), dir)
+      val files = new java.io.File(dir + "_metrics").listFiles().filter(_.getName.endsWith(".json"))
+      assert(files.length == 1, s"one metrics file: ${files.toSeq}")
+      new String(java.nio.file.Files.readAllBytes(files.head.toPath), "UTF-8")
+    }
+    val one = metricsText(1)
+    assert(metricsText(7) == one, "_metrics must not depend on the input's partitioning")
+    val dir = s"$base/p1"
+    val metrics = spark.read.json(dir + "_metrics")
+    val perDir = spark.read.parquet(dir).groupBy(col("dt").cast("string")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val perRow = metrics.select(col("dt"), col("n_rows"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(metrics.count() == perDir.size && perRow == perDir, "one metrics row per dt= directory")
   }
 
   test("nearDuplicates: candidate-then-verify finds planted near-dups only") {
