@@ -1,6 +1,7 @@
 package graft.runtime
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.SparkSession
 
 import graft.select.{FittedSelector, SelectorStep}
@@ -20,7 +21,8 @@ import graft.select.{FittedSelector, SelectorStep}
   * was fitted on and the caller's `lineage` string. A rerun with another
   * `topP`, method, predictor list or input store finds a different or
   * missing fingerprint, refits that step and says so in the step's
-  * `warnings`. A step whose
+  * `warnings`. A checkpoint that cannot be parsed is refitted with a
+  * warning too. A step whose
   * rendering is not stable across JVMs never replays: `VipStep`'s
   * function-valued `importanceFn` prints as a lambda identity, so a VipStep
   * always refits on resume, which is the safe direction.
@@ -36,8 +38,12 @@ object Checkpoints {
       case c => c.toString
     }
 
+  /** JSON has no non-finite numbers, so a NaN or ±Infinity score (AovStep
+    * scores −log10(0) = Infinity when p underflows) is written as the string
+    * `"NaN"`, `"Infinity"` or `"-Infinity"`, which [[fromJson]] reads back. */
   def toJson(f: FittedSelector, fingerprint: String): String = {
     val scores = f.scores.map {
+      case (k, Some(v)) if !v.isFinite => s""""${esc(k)}":"$v""""
       case (k, Some(v)) => s""""${esc(k)}":$v"""
       case (k, None)    => s""""${esc(k)}":null"""
     }.mkString("{", ",", "}")
@@ -74,6 +80,7 @@ object Checkpoints {
           case JInt(i)      => Some(i.toDouble)
           case JDecimal(d)  => Some(d.toDouble)
           case JLong(l)     => Some(l.toDouble)
+          case JString(v @ ("NaN" | "Infinity" | "-Infinity")) => Some(v.toDouble)
           case other        => fail(s"non-numeric score for `$k`: $other")
         })
       }
@@ -127,18 +134,20 @@ object Checkpoints {
         f
       }
       // a corrupt/truncated checkpoint (disk-full mid-escape, partial write
-      // outside the atomic path) falls back to refitting the step rather
-      // than aborting the whole resume
+      // outside the atomic path) falls back to refitting the step, with a
+      // warning, rather than aborting the whole resume
       val saved =
         if (!Files.exists(path)) None
-        else scala.util.Try {
+        else Some(Try {
           val json = Files.readString(path)
           (fromJson(json), fingerprintOf(json))
-        }.toOption
+        })
       val fitted = saved match {
-        case Some((f, Some(`fp`))) => f
-        case Some(_) => refit(Some(
+        case Some(Success((f, Some(`fp`)))) => f
+        case Some(Success(_)) => refit(Some(
           s"checkpoint ${path.getFileName} belongs to another fit (parameters or input changed); refitted"))
+        case Some(Failure(e)) => refit(Some(
+          s"checkpoint ${path.getFileName} is unreadable (${e.getClass.getSimpleName}); refitted"))
         case None => refit(None)
       }
       cur = fitted.transform(cur)

@@ -4,7 +4,7 @@ import java.util.concurrent.Executors
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 /** A bounded driver thread pool for independent units of Spark work
-  * (Boruta's forest rounds, the store compactors' partition rewrites). */
+  * (Boruta's forest rounds). */
 object DriverPool {
 
   /** Run `f` over `items` on at most `maxConcurrent` driver threads (each

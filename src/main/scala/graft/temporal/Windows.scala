@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   * decomposition; order-dependent features (lag) on a pathological key
   * degrade to a single task — gate the stage with
   * [[graft.runtime.Lineage.requireNoHotKeys]] (or inspect
-  * [[graft.runtime.Lineage.hotKeys]]) before windowing.
+  * [[graft.runtime.Lineage.hotKeys]]) before windowing. `RunPipeline` does
+  * not run the gate: `Types.featureVectors` windows over `url` ungated.
   */
 object Windows {
 

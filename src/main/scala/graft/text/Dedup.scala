@@ -213,8 +213,8 @@ object Dedup {
     * corpus signature index — the day-2 operation of a running pipeline:
     * when a fresh crawl arrives, nobody re-deduplicates the whole corpus;
     * the new documents' MinHash signatures are band-joined against the
-    * STORED signature table (e.g. a [[graft.core.Snapshot]] table of
-    * `minHashSignatures` output — k longs per document, ~10⁻⁴ of corpus
+    * STORED signature table (e.g. `minHashSignatures` output persisted with
+    * [[graft.core.Store.writePages]] — k longs per document, ~10⁻⁴ of corpus
     * bytes) and only banding candidates are verified. The corpus TEXT is
     * never touched, which is what makes the operation cheap: cost is
     * O(batch) + the candidate sliver, independent of corpus size.

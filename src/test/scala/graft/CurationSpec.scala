@@ -361,15 +361,15 @@ class CurationSpec extends AnyFunSuite {
     assert(got(103L)._2 == 1.0, "identical text must agree on every component")
     assert(!got.contains(105L), "novel batch doc must not match")
 
-    // day-2 composition: the index read back from a Snapshot store gives
+    // day-2 composition: the index read back from the pages store gives
     // the identical result — signatures are what the store persists
     val dir = java.nio.file.Files.createTempDirectory("sig_index").toString
     try {
       // the store day-partitions on warc_ts; a signature index carries the
       // snapshot timestamp of the crawl it was built from
-      graft.core.Snapshot.write(
+      graft.core.Store.writePages(
         corpusSigs.withColumn("warc_ts", lit("2025-01-01 00:00:00").cast("timestamp")), dir)
-      val stored = graft.core.Snapshot.read(spark, dir).select("doc_id", "sig")
+      val stored = graft.core.Store.readPages(spark, dir).select("doc_id", "sig")
       val viaStore = Dedup.indexMatches(batchSigs, stored, "doc_id", bands, rpb, minAg)
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
       assert(viaStore == got)

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.runtime.{Checkpoints, Lineage}
-import graft.select.{CorrStep, FittedSelector, SelectorStep}
+import graft.select.{AovStep, CorrStep, FittedSelector, SelectorStep}
 
 class RuntimeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -29,11 +29,14 @@ class RuntimeSpec extends AnyFunSuite {
   test("checkpoint JSON round-trips exactly") {
     val f = FittedSelector(
       "step_select_infgain", "label",
-      Seq("a" -> Some(0.123456789), "b" -> None, "c\"quoted" -> Some(-1.5e-8)),
+      Seq("a" -> Some(0.123456789), "b" -> None, "c\"quoted" -> Some(-1.5e-8),
+        "d" -> Some(Double.PositiveInfinity), "e" -> Some(Double.NegativeInfinity)),
       Seq("b", "c\"quoted"), Seq("warn: top_p clamped"))
     val json = Checkpoints.toJson(f, "file:/data/x.parquet")
     val back = Checkpoints.fromJson(json)
     assert(back == f)
+    val nan = f.copy(scores = Seq("n" -> Some(Double.NaN)))
+    assert(Checkpoints.fromJson(Checkpoints.toJson(nan, "")).scores.head._2.exists(_.isNaN))
   }
 
   test("checkpoint JSON round-trips commas, newlines, and control chars in strings") {
@@ -121,6 +124,29 @@ class RuntimeSpec extends AnyFunSuite {
     assert(moved.head.warnings.exists(_.contains("refitted")))
     // the refit (warning included) is what the next resume replays
     assert(Checkpoints.fitOrResume(spark, dir, steps(1), df2, "y", "store-v2") == moved)
+  }
+
+  test("fitOrResume replays an infinite score; an unreadable checkpoint refits with a warning") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.FileTime
+    // a factor that separates y exactly: p underflows to 0, so the AOV
+    // score is -log10(0) = Infinity
+    val df = (0 until 60).map(i => (s"g${i % 3}", (i % 3) * 10.0 + (i % 2) * 0.5))
+      .toDF("g", "y")
+    val steps: Seq[(SelectorStep, Seq[String])] = Seq((AovStep(topP = Some(1)), Seq("g")))
+    val dir = Files.createTempDirectory("ckpt-inf").toString
+    val ck = Paths.get(dir, "step_000_step_select_aov.json")
+    val first = Checkpoints.fitOrResume(spark, dir, steps, df, "y")
+    assert(first.head.scores == Seq("g" -> Some(Double.PositiveInfinity)), s"${first.head.scores}")
+
+    Files.setLastModifiedTime(ck, FileTime.fromMillis(1000000L))
+    assert(Checkpoints.fitOrResume(spark, dir, steps, df, "y") == first)
+    assert(Files.getLastModifiedTime(ck).toMillis == 1000000L, "an infinite score must replay")
+
+    Files.writeString(ck, Files.readString(ck).dropRight(5))
+    val refit = Checkpoints.fitOrResume(spark, dir, steps, df, "y")
+    assert(refit.head.scores == first.head.scores)
+    assert(refit.head.warnings.exists(_.contains("unreadable")), s"${refit.head.warnings}")
   }
 
   test("partition metrics: digests are order-insensitive and detect change") {

@@ -2,9 +2,13 @@
 """List src/main definitions that only specs can reach.
 
 A public `def` or `object` in src/main/scala is reported when its name
-occurs nowhere in src/main/scala or layerbench/src except on the line that
-defines it. Such a name is called by no query, no main and no benchmark
-workload: only src/test reaches it, or nothing does.
+occurs nowhere in the code of src/main/scala or layerbench/src except on a
+line that defines a `def` or `object` of that name. Such a name is called
+by no query, no main and no benchmark workload: only src/test reaches it,
+or nothing does. Comments and the text of string literals are not code;
+the `$name`/`${...}` parts of an interpolated string are. Any definition
+line is skipped, not only the definition's own, so two objects that each
+define `compact` do not count as uses of each other.
 
 The check is lexical (word-boundary matches on names), so it errs towards
 silence: a name shared with any other identifier counts as reached.
@@ -28,6 +32,8 @@ DEF = re.compile(
     r"^\s*((?:(?:final|case|implicit|lazy|sealed|abstract|override|"
     r"private(?:\[\w+\])?|protected(?:\[\w+\])?)\s+)*)(def|object)\s+([A-Za-z_]\w*)")
 SKIP_NAMES = {"apply", "unapply", "main", "toString", "equals", "hashCode", "entry"}
+CHAR_LIT = re.compile(r"'(?:\\u[0-9a-fA-F]{4}|\\.|[^'\\\n])'")
+INTERP_NAME = re.compile(r"\$[A-Za-z_]\w*")
 
 
 def scala_files(d):
@@ -37,12 +43,70 @@ def scala_files(d):
                 yield os.path.join(dirpath, n)
 
 
-def strip_comments(text):
-    """Blank out /* */ blocks and whole-line // comments so a doc mention is
-    not a use. A trailing // may sit inside a string literal (generated
-    SQL), so it is kept: the check then errs towards silence."""
-    text = re.sub(r"/\*.*?\*/", lambda m: re.sub(r"[^\n]", " ", m.group(0)), text, flags=re.S)
-    return re.sub(r"(?m)^[ \t]*//.*$", "", text)
+def blank(s):
+    """`s` with every character but newlines replaced by a space."""
+    return re.sub(r"[^\n]", " ", s)
+
+
+def code_only(text):
+    """Blank out comments and the text of string and char literals so that a
+    mention in a doc comment, an error message or generated SQL is not a
+    use. In an interpolated string (`s"..."`, `f"..."`) the `$name` and
+    `${...}` parts are code and are kept. Line structure is preserved."""
+    out, i, n = [], 0, len(text)
+    while i < n:
+        c = text[i]
+        if text.startswith("//", i):
+            j = text.find("\n", i)
+            j = n if j < 0 else j
+            out.append(blank(text[i:j])); i = j
+        elif text.startswith("/*", i):  # Scala block comments nest
+            j, depth = i + 2, 1
+            while j < n and depth:
+                if text.startswith("/*", j): depth += 1; j += 2
+                elif text.startswith("*/", j): depth -= 1; j += 2
+                else: j += 1
+            out.append(blank(text[i:j])); i = j
+        elif c == "'":
+            m = CHAR_LIT.match(text, i)
+            j = m.end() if m else i + 1
+            out.append(blank(text[i:j]) if m else c); i = j
+        elif c == '"':
+            interp = i > 0 and (text[i - 1].isalnum() or text[i - 1] == "_")
+            triple = text.startswith('"""', i)
+            j = i + (3 if triple else 1)
+            out.append(" " * (j - i))
+            while j < n:
+                if triple and text.startswith('"""', j):
+                    k = j
+                    while k < n and text[k] == '"':
+                        k += 1
+                    out.append(" " * (k - j)); j = k
+                    break
+                if not triple and text[j] == '"':
+                    out.append(" "); j += 1
+                    break
+                if not triple and text[j] == "\n":  # unterminated: stop at the line end
+                    break
+                if not triple and text[j] == "\\" and j + 1 < n:
+                    out.append(blank(text[j:j + 2])); j += 2
+                elif interp and text.startswith("$$", j):
+                    out.append("  "); j += 2
+                elif interp and text.startswith("${", j):
+                    k, depth = j + 2, 1
+                    while k < n and depth:
+                        depth += {"{": 1, "}": -1}.get(text[k], 0); k += 1
+                    out.append(" " + text[j + 1:k]); j = k
+                elif interp and text[j] == "$":
+                    m = INTERP_NAME.match(text, j)
+                    k = m.end() if m else j + 1
+                    out.append(" " + text[j + 1:k]); j = k
+                else:
+                    out.append(blank(text[j])); j += 1
+            i = j
+        else:
+            out.append(c); i += 1
+    return "".join(out)
 
 
 def main():
@@ -51,7 +115,7 @@ def main():
         if os.path.isdir(d):
             for p in scala_files(d):
                 with open(p, encoding="utf-8") as f:
-                    corpus[p] = strip_comments(f.read()).split("\n")
+                    corpus[p] = code_only(f.read()).split("\n")
 
     defs = []
     for p, lines in corpus.items():
@@ -71,13 +135,14 @@ def main():
     words = {}
     for p, lines in corpus.items():
         for i, line in enumerate(lines):
-            for w in set(re.findall(r"[A-Za-z_]\w*", line)):
+            m = DEF.match(line)
+            defined = m.group(3) if m else None
+            for w in set(re.findall(r"[A-Za-z_]\w*", line)) - {defined}:
                 words.setdefault(w, []).append((p, i))
 
     found = []
     for p, i, kind, name in defs:
-        uses = [loc for loc in words.get(name, []) if loc != (p, i)]
-        if not uses:
+        if name not in words:
             found.append((os.path.relpath(p, ROOT), i + 1, kind, name))
 
     for rel, line, kind, name in sorted(found):
