@@ -57,7 +57,7 @@ object RunPipeline {
       (CorrStep(threshold = Some(0.25), method = "spearman"), Nil))
     val fitted = Checkpoints.fitOrResume(
       spark, s"$workDir/checkpoints", steps, stored2, "label",
-      lineage = Lineage.inputFiles(stored2).take(3).mkString(","))
+      lineage = Store.featureLineage(spark, featPath))
 
     val kept = fitted.foldLeft(stored2)((d, f) => f.transform(d)).columns.toSeq
     println(s"""{"pages":$nPages,"features":${stored2.count()},""" +

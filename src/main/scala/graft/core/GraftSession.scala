@@ -39,6 +39,14 @@ object GraftSession {
       // sort-cheap narrow keys, so the SMJ→SHJ rewrite bought nothing
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // List partition directories on the driver. Past the default
+      // threshold (32 paths) Spark lists them with a job of one task per
+      // directory, and each task deserializes the Hadoop configuration its
+      // closure captures: 10-12 ms of executor CPU per task, ~1 s per read of
+      // a 91-day store (pipeline_tall, 4 cores). A driver listStatus of a
+      // local directory costs a small fraction of one such task. The store
+      // has one `dt=` per day (366 for a year), far below this value.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
       // graft's Catalyst extensions: cosine-chain fusion rule + cosine_sim SQL fn
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     if (localDir != null) b.config("spark.local.dir", localDir) else b

@@ -48,10 +48,12 @@ object Store {
     spark.read.parquet(path)
 
   /** Time-bounded scan: the `dt` predicate prunes day partitions at
-    * planning time (no file listing for excluded days), the `warc_ts`
-    * predicate is pushed to parquet row groups. Use for every
+    * planning time (the excluded days' files are never opened), the
+    * `warc_ts` predicate is pushed to parquet row groups. Use for every
     * "features as of T" computation — nothing after maxTs is even read,
     * which also makes temporal leakage structurally impossible at the scan.
+    * Pruning does not save the listing: `spark.read.parquet` lists every
+    * `dt=` directory when it resolves `path`, before any predicate applies.
     */
   def pagesUpTo(spark: SparkSession, path: String, maxTs: java.sql.Timestamp): DataFrame =
     readPages(spark, path)
@@ -68,5 +70,22 @@ object Store {
     graft.runtime.Lineage.writeMetrics(
       graft.runtime.Lineage.partitionMetrics(df.sparkSession.read.parquet(path), Seq(labelTs)),
       path + "_metrics")
+  }
+
+  /** The lineage of a store [[writeFeatures]] wrote: the text of its
+    * `_metrics` table, one sorted row per `dt` (row count, label-time
+    * bounds, content digest). Equal content gives equal text whatever the
+    * writer's partitioning and whatever the data files are named (each
+    * write names them after its job), so a checkpoint fingerprinted with it
+    * replays after a rewrite of the same features and refits after any
+    * changed row. Read on the driver, with no Spark job. */
+  def featureLineage(spark: SparkSession, path: String): String = {
+    val dir = new org.apache.hadoop.fs.Path(path + "_metrics")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".json")).sortBy(_.getName)
+      .map { p =>
+        val in = fs.open(p)
+        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+      }.mkString
   }
 }

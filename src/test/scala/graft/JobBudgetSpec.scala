@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,19 +30,6 @@ class JobBudgetSpec extends AnyFunSuite {
     df
   }
 
-  def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    org.apache.spark.grafttest.ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; org.apache.spark.grafttest.ListenerBus.drain(sc) }
-    finally sc.removeSparkListener(listener)
-    n.get
-  }
-
   val budgets: Seq[(String, SelectorStep, String, Int)] = Seq(
     ("MrmrStep", MrmrStep(topP = Some(4)), "cls", 9),
     ("FcbfStep", FcbfStep(minimumSu = 0.001), "cls", 10),
@@ -57,7 +41,8 @@ class JobBudgetSpec extends AnyFunSuite {
     test(s"$label fit runs the same pinned number of Spark jobs at p = 8 and p = 16") {
       val counts = Seq(8, 16).map { p =>
         val df = fixture(p)
-        try jobsOf(step.fit(df, outcome, df.columns.filter(_.startsWith("f")).toSeq))
+        val preds = df.columns.filter(_.startsWith("f")).toSeq
+        try TestSpark.jobTasks(step.fit(df, outcome, preds)).length
         finally df.unpersist()
       }
       assert(counts == Seq(pinned, pinned), s"$label jobs at p = 8, 16: $counts")

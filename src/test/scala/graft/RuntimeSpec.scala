@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.core.{PagesGen, Store}
 import graft.runtime.{Checkpoints, Lineage}
 import graft.select.{AovStep, CorrStep, FittedSelector, SelectorStep}
 
@@ -124,6 +125,40 @@ class RuntimeSpec extends AnyFunSuite {
     assert(moved.head.warnings.exists(_.contains("refitted")))
     // the refit (warning included) is what the next resume replays
     assert(Checkpoints.fitOrResume(spark, dir, steps(1), df2, "y", "store-v2") == moved)
+  }
+
+  test("a feature store rewritten with the same rows replays its checkpoints; a changed row refits") {
+    import java.nio.file.Files
+    val rng = new scala.util.Random(9)
+    val feats = (0 until 200).map { i =>
+      val a = rng.nextGaussian(); val b = rng.nextGaussian(); val c = rng.nextGaussian()
+      (new java.sql.Timestamp((PagesGen.baseEpoch + i * 3600L) * 1000), a, b, c,
+        a * 2 + b * 0.5 + rng.nextGaussian() * 0.1)
+    }.toDF("label_ts", "a", "b", "c", "y")
+    val steps: Seq[(SelectorStep, Seq[String])] = Seq(
+      (CorrStep(topP = Some(2), method = "pearson"), Seq("a", "b", "c")),
+      (CorrStep(topP = Some(1), method = "spearman"), Nil))
+    val base = Files.createTempDirectory("ckpt-lineage").toString
+    val store = s"$base/features"
+    // RunPipeline's step 5: write the store, then fit it resumably with the
+    // store's metrics lineage and, for contrast, a file-name lineage
+    def writeAndFit(df: org.apache.spark.sql.DataFrame): (Seq[FittedSelector], Seq[FittedSelector]) = {
+      Store.writeFeatures(df, store)
+      val stored = spark.read.parquet(store).select("a", "b", "c", "y")
+      (Checkpoints.fitOrResume(spark, s"$base/by-metrics", steps, stored, "y",
+        lineage = Store.featureLineage(spark, store)),
+        Checkpoints.fitOrResume(spark, s"$base/by-files", steps, stored, "y",
+          lineage = Lineage.inputFiles(stored).take(3).mkString(",")))
+    }
+    def refitted(fs: Seq[FittedSelector]) = fs.map(_.warnings.exists(_.contains("another fit")))
+    val (first, _) = writeAndFit(feats)
+    assert(first.forall(_.warnings.isEmpty))
+    val (again, againByFiles) = writeAndFit(feats.repartition(3))
+    assert(again == first, "the same rows, rewritten, must replay every step")
+    assert(refitted(againByFiles) == Seq(true, true), "each write names its files anew")
+    val (moved, _) = writeAndFit(feats.withColumn("y",
+      when(col("label_ts") === feats.head().getTimestamp(0), col("y") + 1).otherwise(col("y"))))
+    assert(refitted(moved) == Seq(true, true), s"one changed row must refit: ${moved.map(_.warnings)}")
   }
 
   test("fitOrResume replays an infinite score; an unreadable checkpoint refits with a warning") {

@@ -217,6 +217,19 @@ class StepsSpec extends AnyFunSuite {
     assert(got.forall(t => t.p >= 0 && t.p <= 1))
   }
 
+  test("AovStep with no complete row fails naming the step and the all-NULL predictors") {
+    val four = Seq(("a", 1.0), ("b", 2.0), ("a", 3.0), ("b", 5.0)).toDF("g", "y")
+      .withColumn("g_null", lit(null).cast("string"))
+    def failure(frame: org.apache.spark.sql.DataFrame, preds: Seq[String]): String =
+      intercept[IllegalArgumentException](AovStep(topP = Some(1)).fit(frame, "y", preds)).getMessage
+    val empty = failure(four.where(lit(false)), Seq("g"))
+    assert(empty.contains("step_select_aov") && empty.contains("empty"), empty)
+    val allNull = failure(four, Seq("g", "g_null"))
+    assert(allNull.contains("step_select_aov") && allNull.contains("all-NULL columns: g_null"), allNull)
+    // the complete predictor alone still fits
+    assert(AovStep(topP = Some(1)).fit(four, "y", Seq("g")).scores.map(_._1) == Seq("g"))
+  }
+
   test("LinearStep regression coefficients match independent OLS") {
     val reg = df.withColumn("y", col("f1") * 3 - col("f2") * 0.5 + col("f3"))
     val fitted = LinearStep(topP = Some(2)).fit(reg, "y", Seq("f1", "f2", "f3"))

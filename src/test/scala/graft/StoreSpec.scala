@@ -56,6 +56,20 @@ class StoreSpec extends AnyFunSuite {
     assert(plan.contains("PartitionFilters") && plan.contains("dt"), plan)
   }
 
+  test("a read of a store with more than 32 days starts no listing job") {
+    // Spark lists more than 32 directories (its default discovery
+    // threshold) with a job of one task per directory
+    val dir = java.nio.file.Files.createTempDirectory("pages-90d").toString + "/pages"
+    Store.writePages(PagesGen.pages(spark, 5000, 500, days = 90), dir)
+    assert(filesPerLeaf(dir).size > 32)
+    val cut = new java.sql.Timestamp((PagesGen.baseEpoch + 45L * 86400) * 1000)
+    for ((read, tasks) <- Seq(
+        "readPages" -> TestSpark.jobTasks(Store.readPages(spark, dir)),
+        "pagesUpTo" -> TestSpark.jobTasks(Store.pagesUpTo(spark, dir, cut))))
+      // at most the 1-task footer read that infers the schema
+      assert(tasks.length <= 1 && tasks.forall(_ == 1), s"$read jobs (tasks each): $tasks")
+  }
+
   test("feature sink writes metrics alongside the data") {
     val dir = java.nio.file.Files.createTempDirectory("feat-store").toString + "/features"
     val labels = PagesGen.labels(spark, 1000, 100)
