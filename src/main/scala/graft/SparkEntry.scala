@@ -68,8 +68,7 @@ object SparkEntry {
     docs.crossJoin(broadcast(docs.agg(count(lit(1)).as("__n"))))
       .select(col("doc_id").as("src"),
         explode(array((0 to 2).map { j =>
-          pmod(conv(substring(md5(concat(col("doc_id").cast("string"), lit(s"#$j"))),
-            1, 12), 16, 10).cast("long"), col("__n"))
+          pmod(Dedup.md5Hash48(concat(col("doc_id").cast("string"), lit(s"#$j"))), col("__n"))
         }: _*)).as("dst"))
   }
 
@@ -967,7 +966,7 @@ object SparkEntry {
         .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
         .where(size(col("sh")) > 0)
       def minhash(i: Int) = array_min(transform(col("sh"), sg =>
-        conv(substring(md5(concat(lit(s"$i:"), sg)), 1, 12), 16, 10).cast("long")))
+        Dedup.md5Hash48(concat(lit(s"$i:"), sg))))
       sh.select(col("doc_id") +: (0 until 4).map(i => minhash(i).as(s"h$i")): _*)
         .orderBy("doc_id")
     }),

@@ -47,7 +47,7 @@ object GraftSession {
       // local directory costs a small fraction of one such task. The store
       // has one `dt=` per day (366 for a year), far below this value.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-      // graft's Catalyst extensions: cosine-chain fusion rule + cosine_sim SQL fn
+      // graft's SQL functions: cosine_sim and int8_cosine_sim
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     if (localDir != null) b.config("spark.local.dir", localDir) else b
   }

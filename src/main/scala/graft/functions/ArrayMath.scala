@@ -24,8 +24,8 @@ import org.apache.spark.sql.types._
   * either array → null (a null product poisons the zip_with/aggregate
   * sum); and a LENGTH MISMATCH → null too (zip_with pads the shorter side
   * with nulls, poisoning the sum the same way) — all three exactly as the
-  * built-in chain behaves, so the fusion rule is semantics-preserving on
-  * malformed embeddings, not just well-formed ones.
+  * built-in chain behaves, so the two agree on malformed embeddings, not
+  * just well-formed ones.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -250,12 +250,4 @@ object ArrayMath {
     * fused codegen loop — see [[SignBandSignatures]]. */
   def signBandSigs(vec: Column, planes: Array[Array[Double]], bands: Int): Column =
     ColumnBridge.column(SignBandSignatures(ColumnBridge.expression(vec), planes, bands))
-
-  /** SQL registration: SELECT cosine_sim(emb, other) FROM ... */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_cosine_sim", exprs => Int8CosineSimilarity(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
 }

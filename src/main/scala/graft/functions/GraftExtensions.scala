@@ -2,143 +2,22 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
-
-/** Catalyst optimizer rule: recognize the higher-order-function cosine
-  * chain
-  *   CASE WHEN sqrt(Σ a²) = 0 THEN 0 ELSE (Σ a·b) / (sqrt(Σ a²) · ‖b‖) END
-  * (the shape produced by `aggregate(zip_with(a, b, *)) / (sqrt(...) ...)`,
-  * e.g. Similarity.cosineBuiltin or hand-written SQL) and fuse it into the
-  * single-loop native [[CosineSimilarity]] expression — 16× on the
-  * embedding hot path (BENCH.md) with bit-identical results (same
-  * ascending-index summation). The lambda bodies are verified to be pure
-  * products/sums of the lambda variables, so a scaled or transformed
-  * variant (e.g. `(x, y) -> x*2*y`) is never mis-fused.
-  *
-  * Declared semantic normalization: the UNGUARDED two-column form
-  * `dot/(‖a‖·‖b‖)` evaluates to NaN on a zero-norm vector, while the fused
-  * expression follows the cosine_sim convention of 0.0 — the rule
-  * normalizes the degenerate case to 0.0 (pinned in ExtensionsSpec). The
-  * guarded CASE form is bit-identical everywhere.
-  *
-  * Registered through [[GraftExtensions]]
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`), which also
-  * injects the `cosine_sim` SQL function.
-  */
-object FuseCosineChain extends Rule[LogicalPlan] {
-
-  /** The lambda body must be a PURE product/sum of the lambda's own bound
-    * variables (possibly cast) — `(x, y) -> x * 2 * y` or `t -> f(t)*f(t)`
-    * would otherwise fuse into plain cosine and silently drop the factor. */
-  private def isVar(e: Expression, v: NamedExpression): Boolean = e match {
-    case Cast(inner, DoubleType, _, _) => isVar(inner, v)
-    case n: NamedLambdaVariable        => n.exprId == v.exprId
-    case _                             => false
-  }
-
-  private def bothVars(x: Expression, y: Expression, vars: Seq[NamedExpression]): Boolean =
-    vars match {
-      case Seq(v1, v2) => (isVar(x, v1) && isVar(y, v2)) || (isVar(x, v2) && isVar(y, v1))
-      case Seq(v)      => isVar(x, v) && isVar(y, v)
-      case _           => false
-    }
-
-  /** ArrayAggregate's 4th argument (the optional finish transform, identity
-    * when `aggregate` is called without one) must BE the identity — SQL like
-    * `aggregate(..., 0D, (acc,x) -> acc+x, acc -> acc/2)` transforms the sum
-    * and must never fuse into plain cosine. */
-  private def isIdentityFinish(f: Expression): Boolean = f match {
-    case LambdaFunction(body, vars, _) => vars.nonEmpty && isVar(body, vars.head)
-    case _                             => false
-  }
-
-  /** Σ x·y as ArrayAggregate(ZipWith(a, b, (x,y) -> x*y), 0.0, +) → (a, b). */
-  private object DotAgg {
-    def unapply(e: Expression): Option[(Expression, Expression)] = e match {
-      case ArrayAggregate(
-            ZipWith(a, b, LambdaFunction(Multiply(x, y, _), mv, _)),
-            Literal(zero, DoubleType),
-            LambdaFunction(Add(u, w, _), av, _),
-            fin) if zero == 0.0 && bothVars(x, y, mv) && bothVars(u, w, av) &&
-              isIdentityFinish(fin) =>
-        Some((a, b))
-      case _ => None
-    }
-  }
-
-  /** sqrt(Σ x²) via transform+aggregate → the array expression. */
-  private object NormOf {
-    def unapply(e: Expression): Option[Expression] = e match {
-      case Sqrt(ArrayAggregate(
-            ArrayTransform(a, LambdaFunction(Multiply(x, y, _), mv, _)),
-            Literal(zero, DoubleType),
-            LambdaFunction(Add(u, w, _), av, _),
-            fin)) if zero == 0.0 && x.semanticEquals(y) &&
-              isVar(x, mv.head) && bothVars(u, w, av) && isIdentityFinish(fin) =>
-        Some(a)
-      case _ => None
-    }
-  }
-
-  /** Strip the `transform(v, x -> CAST(x AS double))` wrapper —
-    * CosineSimilarity reads float arrays natively, so the cast array need
-    * not materialize. The Cast's child must be the BARE lambda variable:
-    * `transform(v, x -> CAST(abs(x) AS double))` transforms values and must
-    * NOT be stripped (it would silently fuse cosine over the raw array). */
-  private def stripCast(e: Expression): Expression = e match {
-    case ArrayTransform(base, LambdaFunction(c: Cast, vars, _))
-        if c.dataType == DoubleType &&
-          vars.nonEmpty && isVar(c.child, vars.head) &&
-          base.dataType.isInstanceOf[ArrayType] &&
-          (base.dataType.asInstanceOf[ArrayType].elementType == FloatType ||
-            base.dataType.asInstanceOf[ArrayType].elementType == DoubleType) =>
-      base
-    case other => other
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-    // guarded form: CASE WHEN ‖a‖ = 0 THEN 0 ELSE dot/(‖a‖·nq) END with a
-    // constant query norm (cosineBuiltin against a literal query vector)
-    case CaseWhen(
-          Seq((EqualTo(NormOf(a1), Literal(z1, DoubleType)), Literal(z2, DoubleType))),
-          Some(Divide(DotAgg(a2, b), Multiply(NormOf(a3), nq @ Literal(_, DoubleType), _), _)))
-        if z1 == 0.0 && z2 == 0.0 && a1.semanticEquals(a2) && a2.semanticEquals(a3) &&
-          normMatches(nq, b) =>
-      CosineSimilarity(stripCast(a2), stripCast(b))
-    // unguarded two-column form: dot/(‖a‖·‖b‖)
-    case Divide(DotAgg(a, b1), Multiply(NormOf(a2), NormOf(b2), _), _)
-        if a.semanticEquals(a2) && b1.semanticEquals(b2) =>
-      CosineSimilarity(stripCast(a), stripCast(b1))
-  }
-
-  /** The literal query norm must equal the norm CosineSimilarity recomputes
-    * from the literal array (bit-equal: same ascending summation). */
-  private def normMatches(nq: Literal, b: Expression): Boolean = b match {
-    case CreateArray(elems, _) =>
-      val vals = elems.collect { case Literal(d: Double, DoubleType) => d }
-      vals.length == elems.length && {
-        val n = math.sqrt(vals.map(x => x * x).sum)
-        nq.value == n
-      }
-    case lit: Literal if lit.dataType.isInstanceOf[ArrayType] =>
-      val arr = lit.value.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val n = math.sqrt(arr.toDoubleArray().map(x => x * x).sum)
-      nq.value == n
-    case _ => false
-  }
-}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point:
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`. */
+  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
+  * Injects the native expressions as SQL functions:
+  * `cosine_sim(a, b)` ([[CosineSimilarity]]) and
+  * `int8_cosine_sim(codes, scale, query)` ([[Int8CosineSimilarity]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => FuseCosineChain)
     e.injectFunction((
       new FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
       (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
+    e.injectFunction((
+      new FunctionIdentifier("int8_cosine_sim"),
+      new ExpressionInfo(classOf[Int8CosineSimilarity].getName, "int8_cosine_sim"),
+      (exprs: Seq[Expression]) => Int8CosineSimilarity(exprs(0), exprs(1), exprs(2))))
   }
 }

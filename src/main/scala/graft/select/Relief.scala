@@ -74,12 +74,14 @@ final case class ReliefStep(
         data0.select((preds.map(p => col(p).cast("double").as(p)) :+
           col(outcome).cast("double").as("__y")): _*)
 
-    // per-feature (and, for regression, outcome) ranges in one pass
+    // per-feature (and, for regression, outcome) ranges and the row count
+    // in one pass; with no complete row every range is NULL
     val rangeCols = if (classif) preds else preds :+ "__y"
     val rangeAggs = rangeCols.flatMap(p => Seq(min(col(p)).as(s"mn_$p"), max(col(p)).as(s"mx_$p")))
-    val rr = data.agg(rangeAggs.head, rangeAggs.tail: _*).head()
+    val rr = data.agg(count(lit(1)), rangeAggs: _*).head()
+    if (rr.getLong(0) == 0) throw StepCommon.noCompleteRows(name, df, outcome, preds)
     val ranges: Map[String, Double] = rangeCols.zipWithIndex.map { case (p, i) =>
-      val d = rr.getDouble(2 * i + 1) - rr.getDouble(2 * i)
+      val d = rr.getDouble(2 * i + 2) - rr.getDouble(2 * i + 1)
       p -> (if (d == 0) 1.0 else d)
     }.toMap
 

@@ -61,6 +61,21 @@ object StepCommon {
     outcomeCol.head
   }
 
+  /** The error for a fit of `step` with no row complete across
+    * `predictors` and `outcome`, naming the cause. Runs one aggregation, on
+    * this failing path only. */
+  def noCompleteRows(step: String, df: DataFrame, outcome: String,
+      predictors: Seq[String]): IllegalArgumentException = {
+    val cols = predictors :+ outcome
+    val r = df.agg(count(lit(1)), cols.map(c => count(col(c))): _*).head()
+    val allNull = cols.indices.filter(i => r.getLong(i + 1) == 0).map(cols)
+    val cause =
+      if (r.getLong(0) == 0) "the frame is empty"
+      else if (allNull.nonEmpty) s"all-NULL columns: ${allNull.mkString(", ")}"
+      else "no row has the outcome and every predictor non-NULL"
+    new IllegalArgumentException(s"$step: no complete rows to fit ($cause)")
+  }
+
   def numericPredictors(df: DataFrame, preds: Seq[String]): Seq[String] =
     preds.filter(p => df.schema(p).dataType.isInstanceOf[NumericType])
 

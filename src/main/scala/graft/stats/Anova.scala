@@ -53,7 +53,8 @@ object Anova {
     val row = data.agg(aggs.head, aggs.tail: _*).head()
     val n = row.getLong(row.length - 1)
     // with no complete row every sum above is NULL
-    if (n == 0) throw noCompleteRows(df, outcome, predictors)
+    if (n == 0)
+      throw graft.select.StepCommon.noCompleteRows("step_select_aov", df, outcome, predictors)
 
     val g = Array.ofDim[Double](m, m)
     var k = 0
@@ -88,20 +89,6 @@ object Anova {
         else 1.0 - new FDistribution(dfj.toDouble, dfResid.toDouble).cumulativeProbability(fstat)
       TermResult(predictors(j), dfj, ss, fstat, p)
     }
-  }
-
-  /** The error for a fit with no row complete across `predictors` and
-    * `outcome`, naming the cause. Runs one aggregation, on this path only. */
-  private def noCompleteRows(df: DataFrame, outcome: String,
-      predictors: Seq[String]): IllegalArgumentException = {
-    val cols = predictors :+ outcome
-    val r = df.agg(count(lit(1)), cols.map(c => count(col(c))): _*).head()
-    val allNull = cols.indices.filter(i => r.getLong(i + 1) == 0).map(cols)
-    val cause =
-      if (r.getLong(0) == 0) "the frame is empty"
-      else if (allNull.nonEmpty) s"all-NULL columns: ${allNull.mkString(", ")}"
-      else "no row has the outcome and every predictor non-NULL"
-    new IllegalArgumentException(s"step_select_aov: no complete rows to fit ($cause)")
   }
 
   /** −log10(p) scores (step_select_aov.R:150). */

@@ -72,12 +72,15 @@ object Auc {
 
   /** Every unordered pair of the distinct non-null classes in the
     * single-column frame `ySource`, in sorted order (collected — class
-    * cardinality is small by construction). */
+    * cardinality is small by construction). Fewer than two classes fail
+    * naming step_select_roc and the count found. */
   def classPairs(ySource: DataFrame): Seq[(String, String)] = {
     val classes = ySource.toDF("y")
       .select("y").where(col("y").isNotNull).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    require(classes.length >= 2, "ROC needs at least two outcome classes")
+    if (classes.length < 2)
+      throw new IllegalArgumentException("step_select_roc: ROC needs at least two outcome " +
+        s"classes, found ${classes.length}")
     for { i <- classes.indices; j <- i + 1 until classes.length }
       yield (classes(i), classes(j))
   }

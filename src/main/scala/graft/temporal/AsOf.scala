@@ -1,6 +1,6 @@
 package graft.temporal
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,17 +9,13 @@ import org.apache.spark.sql.functions._
   * (strictly < when `strict`).
   *
   * The reference has no joins at all (colino is single-table — SURVEY §2.3);
-  * this operator is mandated by the north_rule. Two physical strategies:
-  *
-  *  - [[sortMerge]] (default, scales to 10^12 rows): union-tag both sides,
-  *    ONE shuffle on `key`, then a `last(_, ignoreNulls = true)` carry-forward
-  *    window ordered by (ts, side). No row explosion, no range cross-product;
-  *    cost is a single hash exchange + per-key sort — the same exchange also
-  *    serves any downstream per-key window features, so callers should
-  *    compute windowed features on the SAME partitioning before joining.
-  *  - [[broadcastProbe]] for tiny probe sides: broadcast hash join on key
-  *    with a ts-range predicate, then `max_by` per probe row. Avoids
-  *    shuffling the big side entirely when the probe set fits in memory.
+  * this operator is mandated by the north_rule. [[sortMerge]] scales to
+  * 10^12 rows: union-tag both sides, ONE shuffle on `key`, then a
+  * `last(_, ignoreNulls = true)` carry-forward window ordered by (ts, side).
+  * No row explosion, no range cross-product; cost is a single hash exchange
+  * + per-key sort — the same exchange also serves any downstream per-key
+  * window features, so callers should compute windowed features on the SAME
+  * partitioning before joining.
   *
   * Temporal-leakage guarantee: events sort BEFORE the probe at equal ts only
   * in the inclusive (<=) mode; nothing after probeTs is ever visible because
@@ -97,48 +93,5 @@ object AsOf {
         }
       }
     probesOnly.select(finalCols: _*)
-  }
-
-  /** Broadcast variant: probes must be small. Right join keeps probe rows
-    * with no qualifying event (null event cols), matching sortMerge
-    * semantics. Both sides are internally renamed so self-derived frames
-    * (probes carved out of the events table) join without ambiguity. */
-  def broadcastProbe(
-      events: DataFrame,
-      probes: DataFrame,
-      key: String,
-      eventTs: String,
-      probeTs: String,
-      eventCols: Seq[String],
-      strict: Boolean = false,
-      tiebreak: Option[String] = None
-  ): DataFrame = {
-    val probeCols = probes.columns.filterNot(c => c == key || c == probeTs).toSeq
-    val e = events.select(
-      col(key).as("__e_key") +: col(eventTs).as("__e_ts") +:
-        tiebreak.map(col).getOrElse(lit(0L)).as("__e_tb") +:
-        eventCols.map(c => col(c).as(s"__e_$c")): _*)
-    // a unique per-probe-row id so duplicate (key, ts) probe rows each keep
-    // their own output row, exactly like sortMerge (grouping on (key, ts)
-    // alone collapsed them to one arbitrary row). monotonically_increasing_id
-    // is only a disambiguator: it is unique within the one broadcast
-    // materialization this plan evaluates, it is dropped before return, and
-    // — unlike an all-columns ordering — it puts no orderability requirement
-    // on probe payload types (maps etc.).
-    val p = probes
-      .withColumn("__p_id", monotonically_increasing_id())
-      .select(col("__p_id") +: col(key).as("__p_key") +: col(probeTs).as("__p_ts") +:
-        probeCols.map(c => col(c).as(s"__p_$c")): _*)
-    val cond: Column =
-      col("__e_key") === col("__p_key") &&
-        (if (strict) col("__e_ts") < col("__p_ts") else col("__e_ts") <= col("__p_ts"))
-    // max_by over (ts, tiebreak) mirrors sortMerge's greatest-tiebreak rule
-    val aggs =
-      probeCols.map(c => first(col(s"__p_$c")).as(c)) ++
-        eventCols.map(c => max_by(col(s"__e_$c"), struct(col("__e_ts"), col("__e_tb"))).as(c))
-    e.join(broadcast(p), cond, "right")
-      .groupBy(col("__p_id"), col("__p_key").as(key), col("__p_ts").as(probeTs))
-      .agg(aggs.head, aggs.tail: _*)
-      .drop("__p_id")
   }
 }

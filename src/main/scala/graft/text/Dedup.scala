@@ -115,13 +115,15 @@ object Dedup {
   }
 
   /** Portable 48-bit string hash: integer value of the first 12 hex chars of
-    * md5(prefix ++ s). 48 bits keep the value exactly representable in a
-    * double, so external engines (the DuckDB oracle) can recompute it
-    * digit-by-digit without 64-bit overflow. The production paths use
-    * xxhash64 (faster); the *Md5 variants exist to make the MECHANISMS
-    * (minhash, simhash, rolling fingerprint) cross-engine verifiable. */
-  def md5Hash48(prefix: String, s: Column): Column =
-    conv(substring(md5(concat(lit(prefix), s)), 1, 12), 16, 10).cast("long")
+    * md5(s). 48 bits keep the value exactly representable in a double, so
+    * external engines (the DuckDB oracle) can recompute it digit-by-digit
+    * without 64-bit overflow. The samplers, the md5 link graph and the *Md5
+    * text variants all hash through it; the dedup production paths use
+    * xxhash64 (faster), and their *Md5 variants exist to make the
+    * MECHANISMS (minhash, simhash, rolling fingerprint) cross-engine
+    * verifiable. */
+  def md5Hash48(s: Column): Column =
+    conv(substring(md5(s), 1, 12), 16, 10).cast("long")
 
   /** MinHash signatures over the portable md5-derived hash — bit-identical
     * recomputable in any engine with md5. Same shape as
@@ -132,7 +134,7 @@ object Dedup {
     sh.select(
       col(id),
       array((0 until k).map(i =>
-        array_min(transform(col("sh"), sg => md5Hash48(s"$i:", sg)))): _*).as("sig"))
+        array_min(transform(col("sh"), sg => md5Hash48(concat(lit(s"$i:"), sg))))): _*).as("sig"))
   }
 
   /** 48-bit SimHash over tokens using the portable md5 token hash — the
@@ -140,7 +142,7 @@ object Dedup {
     * construction, 48 bits instead of 64). */
   def simHash48Md5(df: DataFrame, id: String, text: String): DataFrame = {
     val toks = df.select(col(id), explode(TextFeatures.tokens(lower(col(text)))).as("tok"))
-      .withColumn("h", md5Hash48("", col("tok")))
+      .withColumn("h", md5Hash48(col("tok")))
     val bitSums = (0 until 48).map { j =>
       sum(when(shiftright(col("h"), j).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"b$j")
     }

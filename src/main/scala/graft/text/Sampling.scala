@@ -26,26 +26,19 @@ object Sampling {
     }
   }
 
-  /** Deterministic split assignment by seeded key hash — the production
-    * path (xxhash64, fastest). `fractions` e.g.
+  /** The 48-bit md5 hash of the key's string form ([[Dedup.md5Hash48]]):
+    * the cross-engine hash shared by every sampler and ranker here, so
+    * split membership and shuffle order can never drift apart and an
+    * external engine (the DuckDB oracle) reproduces each exactly. */
+  private def keyHash(key: Column): Column = Dedup.md5Hash48(key.cast("string"))
+
+  /** The key hash mod 10^6: a uniform integer bucket in [0, 10^6). */
+  private def keyBucket(key: Column): Column = pmod(keyHash(key), lit(1000000L))
+
+  /** Deterministic split assignment by key hash. `fractions` e.g.
     * Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1). */
-  def splitByHash(key: Column, fractions: Seq[(String, Double)], seed: Long = 42L): Column =
-    assign(pmod(xxhash64(key, lit(seed)), lit(1000000L)) / lit(1e6), fractions)
-
-  /** 48-bit md5-prefix integer hash of the key — the repo's standard
-    * cross-engine hash, shared by every md5-portable sampler/ranker here so
-    * the split membership and the shuffle order can never drift apart. */
-  private def md5Hash48(key: Column): Column =
-    conv(substring(md5(key.cast("string")), 1, 12), 16, 10).cast("long")
-
-  /** [0,1) bucket derived from [[md5Hash48]]. */
-  private def md5Bucket(key: Column): Column =
-    pmod(md5Hash48(key), lit(1000000L)) / lit(1e6)
-
-  /** Portable variant: md5 bucket, so an external system can reproduce the
-    * exact membership of every split. */
   def splitByHashMd5(key: Column, fractions: Seq[(String, Double)]): Column =
-    assign(md5Bucket(key), fractions)
+    assign(keyBucket(key) / lit(1e6), fractions)
 
   private def stratumFraction(stratum: Column, fractions: Map[String, Double], default: Double): Column = {
     require((fractions.values ++ Seq(default)).forall(f => f >= 0 && f <= 1),
@@ -56,41 +49,30 @@ object Sampling {
   }
 
   /** Deterministic stratified downsampling predicate: keep a row iff its
-    * seeded key-hash bucket falls below its stratum's fraction — the
-    * standard rebalancing filter (downsample over-represented languages /
-    * domains / sources to target proportions). Pure map-side column logic:
-    * no RNG state, no count pass, membership independent of parallelism and
+    * key-hash bucket falls below its stratum's fraction — the standard
+    * rebalancing filter (downsample over-represented languages / domains /
+    * sources to target proportions). Pure map-side column logic: no RNG
+    * state, no count pass, membership independent of parallelism and
     * stable across reruns (a kept document never flickers out when the
-    * cluster is resized — same property as [[splitByHash]]). Strata absent
-    * from `fractions` keep `default`. */
-  def stratifiedSampleByHash(
-      key: Column,
-      stratum: Column,
-      fractions: Map[String, Double],
-      default: Double = 1.0,
-      seed: Long = 42L
-  ): Column =
-    (pmod(xxhash64(key, lit(seed)), lit(1000000L)) / lit(1e6)) <
-      stratumFraction(stratum, fractions, default)
-
-  /** Portable variant of [[stratifiedSampleByHash]] on the md5 bucket —
-    * exact membership reproducible in any engine (the DuckDB oracle). */
+    * cluster is resized — same property as [[splitByHashMd5]]). Strata
+    * absent from `fractions` keep `default`. */
   def stratifiedSampleMd5(
       key: Column,
       stratum: Column,
       fractions: Map[String, Double],
       default: Double = 1.0
   ): Column =
-    md5Bucket(key) < stratumFraction(stratum, fractions, default)
+    keyBucket(key) / lit(1e6) < stratumFraction(stratum, fractions, default)
 
   /** Weighted sampling without replacement, deterministic: the
     * Efraimidis–Spirakis A-ES scheme (key_i = u_i^(1/w_i), take the k
-    * largest keys) with the uniform u_i drawn from the seeded key hash
-    * instead of RNG state — so, like every sampler here, membership is a
-    * pure function of (key, weight, seed): identical at any parallelism,
-    * across reruns, and resumable mid-pipeline. The standard
-    * quality-weighted corpus subset selection ("sample 10M documents
-    * proportionally to quality score") in one pass.
+    * largest keys) with the uniform u_i drawn from the key hash instead of
+    * RNG state — so, like every sampler here, membership is a pure function
+    * of (key, weight): identical at any parallelism, across reruns, across
+    * engines (`pow` may differ by 1 ulp across libms, which only matters if
+    * two sample keys collide to within that ulp), and resumable
+    * mid-pipeline. The standard quality-weighted corpus subset selection
+    * ("sample 10M documents proportionally to quality score") in one pass.
     *
     * Scale shape: the sample key is a map-side projection; the top-k is
     * `orderBy(...).limit(k)` which Spark plans as TakeOrderedAndProject —
@@ -104,17 +86,15 @@ object Sampling {
     * u > 0 strictly and maximal-weight rows cannot be locked out by u = 0.
     *
     * Returns `df` plus `sample_key`, restricted to the k selected rows. */
-  def weightedSampleByHash(
-      df: DataFrame, key: Column, weight: Column, k: Int, seed: Long = 42L
-  ): DataFrame =
-    weightedSample(df, pmod(xxhash64(key, lit(seed)), lit(1000000L)), key, weight, k)
-
-  /** Portable variant of [[weightedSampleByHash]] on the 48-bit md5 hash —
-    * exact sample membership reproducible in any engine (the DuckDB
-    * oracle; `pow` may differ by 1 ulp across libms, which only matters if
-    * two sample keys collide to within that ulp). */
-  def weightedSampleMd5(df: DataFrame, key: Column, weight: Column, k: Int): DataFrame =
-    weightedSample(df, pmod(md5Hash48(key), lit(1000000L)), key, weight, k)
+  def weightedSampleMd5(df: DataFrame, key: Column, weight: Column, k: Int): DataFrame = {
+    require(k >= 1, "sample size k must be >= 1")
+    val u = (keyBucket(key) + lit(0.5)) / lit(1e6)
+    val sk = when(weight.isNotNull && weight > 0 && key.isNotNull,
+      pow(u, lit(1.0) / weight.cast("double"))).otherwise(lit(0.0))
+    df.withColumn("sample_key", sk)
+      .orderBy(col("sample_key").desc, key)
+      .limit(k)
+  }
 
   /** A-ES weighted sampling with the weight given in LOG₂ SPACE — for
     * importance weights spanning thousands of orders of magnitude (DSIR's
@@ -129,7 +109,7 @@ object Sampling {
     * no global sort. */
   def weightedSampleLogMd5(df: DataFrame, key: Column, log2Weight: Column, k: Int): DataFrame = {
     require(k >= 1, "sample size k must be >= 1")
-    val u = (pmod(md5Hash48(key), lit(1000000L)) + lit(0.5)) / lit(1e6)
+    val u = (keyBucket(key) + lit(0.5)) / lit(1e6)
     val g = when(log2Weight.isNotNull && key.isNotNull,
       log(-log(u)) - log2Weight.cast("double") * math.log(2.0))
       .otherwise(lit(Double.PositiveInfinity))
@@ -138,54 +118,28 @@ object Sampling {
       .limit(k)
   }
 
-  private def weightedSample(
-      df: DataFrame, bucket: Column, key: Column, weight: Column, k: Int
-  ): DataFrame = {
-    require(k >= 1, "sample size k must be >= 1")
-    val u = (bucket + lit(0.5)) / lit(1e6)
-    val sk = when(weight.isNotNull && weight > 0 && key.isNotNull,
-      pow(u, lit(1.0) / weight.cast("double"))).otherwise(lit(0.0))
-    df.withColumn("sample_key", sk)
-      .orderBy(col("sample_key").desc, key)
-      .limit(k)
-  }
-
   /** Deterministic corpus shuffle: a pseudo-random but fully reproducible
-    * GLOBAL ordering (`shuffle_rank` ∈ [0, n)) following the seeded
-    * key-hash order — the standard shuffle-before-packing step that breaks
+    * GLOBAL ordering (`shuffle_rank` ∈ [0, n)) following the key-hash
+    * order — the standard shuffle-before-packing step that breaks
     * crawl/source locality in training order. No RNG state; identical at
-    * any parallelism; and NO global sort: the hash's top bits range-bucket
-    * the rows (bucket order IS hash order), per-bucket counts are cumulated
-    * driver-side into base offsets (one tiny row per bucket), and ranks are
-    * a parallel within-bucket running count plus the broadcast base — the
-    * same [[TwoPhase.runningSum]] as [[graft.text.Packing]]. Ties on the hash
-    * break by the key itself, so ranks are a total order for unique keys. */
-  def shuffleRank(df: DataFrame, key: Column, seed: Long = 42L, bucketBits: Int = 12): DataFrame =
-    rankByHashOrder(df, xxhash64(key, lit(seed)), key, hashBits = 64, bucketBits)
-
-  /** Portable variant of [[shuffleRank]] on the 48-bit md5 hash — the exact
-    * shuffle order is reproducible in any engine (the DuckDB oracle). */
-  def shuffleRankMd5(df: DataFrame, key: Column, bucketBits: Int = 12): DataFrame =
-    rankByHashOrder(df, md5Hash48(key), key, hashBits = 48, bucketBits)
-
-  private def rankByHashOrder(
-      df: DataFrame,
-      hash: Column,
-      tiebreak: Column,
-      hashBits: Int,
-      bucketBits: Int
-  ): DataFrame = {
+    * any parallelism and in any engine; and NO global sort: the hash's top
+    * bits range-bucket the rows (bucket order IS hash order), per-bucket
+    * counts are cumulated driver-side into base offsets (one tiny row per
+    * bucket), and ranks are a parallel within-bucket running count plus the
+    * broadcast base — the same [[TwoPhase.runningSum]] as
+    * [[graft.text.Packing]]. Ties on the hash break by the key itself, so
+    * ranks are a total order for unique keys. */
+  def shuffleRankMd5(df: DataFrame, key: Column, bucketBits: Int = 12): DataFrame = {
     // bucketBits <= 22 bounds the driver-side prefix table at 4M rows (the
     // same cap TwoPhase enforces); the bucket count here is 2^bucketBits by
     // construction, never data-dependent
-    require(bucketBits >= 1 && bucketBits <= 22 && bucketBits < hashBits,
-      "bucketBits must be in [1, min(22, hashBits - 1)]")
-    // arithmetic (sign-preserving) shift: bucket order equals hash order for
-    // both the signed 64-bit and the non-negative 48-bit hash; the rank is
-    // the running count of earlier rows
+    require(bucketBits >= 1 && bucketBits <= 22, "bucketBits must be in [1, 22]")
+    // the hash is non-negative and below 2^48, so its top bucketBits bits
+    // order the buckets as the hash orders the rows; the rank is the
+    // running count of earlier rows
     TwoPhase
-      .runningSum(df.withColumn("__sh", hash), keys = Nil,
-        bucket = shiftright(col("__sh"), hashBits - bucketBits), order = Seq(col("__sh"), tiebreak),
+      .runningSum(df.withColumn("__sh", keyHash(key)), keys = Nil,
+        bucket = shiftright(col("__sh"), 48 - bucketBits), order = Seq(col("__sh"), key),
         weight = lit(1L), maxBuckets = 1 << bucketBits, out = "shuffle_rank")
       .drop("__sh")
   }

@@ -146,12 +146,8 @@ object TextFeatures {
     * so acc·1000003 + h never overflows a long. */
   def rollingFingerprintMd5(text: Column): Column = {
     val p = lit(1000000007L)
-    aggregate(
-      tokens(text),
-      lit(0L),
-      (acc, t) =>
-        pmod(acc * 1000003L + pmod(conv(substring(md5(t), 1, 12), 16, 10).cast("long"), p), p)
-    )
+    aggregate(tokens(text), lit(0L),
+      (acc, t) => pmod(acc * 1000003L + pmod(Dedup.md5Hash48(t), p), p))
   }
 
   /** Corpus vocabulary: the k most frequent lowercased whitespace tokens

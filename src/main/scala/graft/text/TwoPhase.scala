@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The engine's one driver-cumulated running sum ([[Packing.packSequences]],
-  * [[Sampling.shuffleRank]], [[Sampling.budgetSelectStratified]]): exact
+  * [[Sampling.shuffleRankMd5]], [[Sampling.budgetSelectStratified]]): exact
   * global offsets/ranks with NO global sort, by cumulating one tiny row per
   * ordering-bucket on the driver and broadcasting the bases back.
   */
@@ -48,7 +48,7 @@ private[graft] object TwoPhase {
       .collect()
     require(rows.length <= maxBuckets,
       s"over $maxBuckets occupied buckets would be cumulated on the driver — " +
-        "the ordering keys look sparse; densify them first (e.g. Sampling.shuffleRank) " +
+        "the ordering keys look sparse; densify them first (e.g. Sampling.shuffleRankMd5) " +
         "or raise the bucket size")
     val k = keys.length
     rows.foreach { r =>

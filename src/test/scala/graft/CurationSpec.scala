@@ -15,7 +15,7 @@ class CurationSpec extends AnyFunSuite {
   test("splitByHash: total function, deterministic, parallelism-invariant") {
     def splits(parts: Int): Map[Long, String] =
       docs.repartition(parts)
-        .select(col("id"), Sampling.splitByHash(col("id"), fractions).as("s"))
+        .select(col("id"), Sampling.splitByHashMd5(col("id"), fractions).as("s"))
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val a = splits(4)
     assert(a.size == 5000 && a.values.toSet == Set("train", "valid", "test"))
@@ -115,17 +115,6 @@ class CurationSpec extends AnyFunSuite {
     assert(run(7) == got, "top-k must not depend on partitioning")
   }
 
-  test("splitByHash: different seeds give different assignments, same seed identical") {
-    val s1 = docs.select(Sampling.splitByHash(col("id"), fractions, seed = 1).as("s"))
-      .collect().map(_.getString(0)).toSeq
-    val s1b = docs.select(Sampling.splitByHash(col("id"), fractions, seed = 1).as("s"))
-      .collect().map(_.getString(0)).toSeq
-    val s2 = docs.select(Sampling.splitByHash(col("id"), fractions, seed = 2).as("s"))
-      .collect().map(_.getString(0)).toSeq
-    assert(s1 == s1b)
-    assert(s1 != s2, "seed must matter")
-  }
-
   test("splitByHashMd5 matches a local md5 replay of the bucket walk") {
     val got = docs.limit(200)
       .select(col("id"), Sampling.splitByHashMd5(col("id"), fractions).as("s"))
@@ -142,9 +131,9 @@ class CurationSpec extends AnyFunSuite {
 
   test("splitByHash rejects bad fractions") {
     intercept[IllegalArgumentException](
-      Sampling.splitByHash(col("id"), Seq("a" -> 0.5, "b" -> 0.4)))
+      Sampling.splitByHashMd5(col("id"), Seq("a" -> 0.5, "b" -> 0.4)))
     intercept[IllegalArgumentException](
-      Sampling.splitByHash(col("id"), Seq("a" -> 1.5, "b" -> -0.5)))
+      Sampling.splitByHashMd5(col("id"), Seq("a" -> 1.5, "b" -> -0.5)))
   }
 
   test("domainQuota keeps at most k rows per domain, preferring the precedence order") {
@@ -200,13 +189,14 @@ class CurationSpec extends AnyFunSuite {
     }
     val df = rows.toDF("id", "w")
     val k = 25
-    val got = Sampling.weightedSampleByHash(df, col("id"), col("w"), k, seed = 7L)
+    val got = Sampling.weightedSampleMd5(df, col("id"), col("w"), k)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).sortBy(_._1)
 
-    // pull the u buckets from Spark so the xxhash64 convention is shared,
-    // then do the A-ES arithmetic independently in scala
+    // pull the u buckets from Spark so the md5 convention is shared, then
+    // do the A-ES arithmetic independently in scala
     val u = df.select(col("id"),
-        (pmod(xxhash64(col("id"), lit(7L)), lit(1000000L)) + lit(0.5)) / lit(1e6))
+        expr("(pmod(cast(conv(substring(md5(cast(id as string)), 1, 12), 16, 10) as bigint), " +
+          "1000000) + 0.5) / 1e6"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val expected = rows.map { case (i, w) =>
       val key = if (w == null || w.doubleValue <= 0) 0.0 else math.pow(u(i), 1.0 / w.doubleValue)
@@ -218,29 +208,32 @@ class CurationSpec extends AnyFunSuite {
       "null/zero/negative weights must never be selected")
 
     // identical at different parallelism
-    val re = Sampling.weightedSampleByHash(df.repartition(13), col("id"), col("w"), k, seed = 7L)
+    val re = Sampling.weightedSampleMd5(df.repartition(13), col("id"), col("w"), k)
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(re == got.map(_._1).toSeq)
 
     // top-k plans as TakeOrderedAndProject — bounded per-partition heaps,
     // no global sort (GLOBAL-WINDOW-OK does not apply: no window at all)
-    val p = Sampling.weightedSampleByHash(df, col("id"), col("w"), k)
+    val p = Sampling.weightedSampleMd5(df, col("id"), col("w"), k)
       .queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"), s"expected TakeOrderedAndProject:\n$p")
     assert(!p.contains("Exchange rangepartitioning"), s"weighted sample must not global-sort:\n$p")
   }
 
   test("weightedSample: heavier rows win more often (A-ES distribution sanity)") {
-    // two strata: weight 100 vs weight 1, equal counts; across many seeds
-    // the heavy stratum must dominate the sample
-    val df = (0L until 400L).map(i => (i, if (i < 200) 100.0 else 1.0)).toDF("id", "w")
-    val heavyFrac = (1 to 10).map { seed =>
-      val sel = Sampling.weightedSampleByHash(df, col("id"), col("w"), 40, seed)
+    // two strata: weight 100 vs weight 1, equal counts; across many key
+    // ranges (each offset draws fresh hash buckets) the heavy stratum must
+    // dominate the sample
+    val heavyFrac = (1 to 10).map { r =>
+      val base = r * 1000L
+      val df = (base until base + 400L).map(i => (i, if (i < base + 200) 100.0 else 1.0))
+        .toDF("id", "w")
+      val sel = Sampling.weightedSampleMd5(df, col("id"), col("w"), 40)
         .collect().map(_.getLong(0))
-      sel.count(_ < 200).toDouble / sel.length
+      sel.count(_ < base + 200).toDouble / sel.length
     }
     val mean = heavyFrac.sum / heavyFrac.size
-    assert(mean > 0.85, s"heavy stratum should dominate: per-seed fractions $heavyFrac")
+    assert(mean > 0.85, s"heavy stratum should dominate: per-range fractions $heavyFrac")
   }
 
   test("budgetSelect == greedy replay; boundary doc kept; bucket/parallelism-invariant") {
@@ -773,7 +766,7 @@ class CurationSpec extends AnyFunSuite {
     val fr = Map("s0" -> 0.25, "s1" -> 0.75)
     def kept(parts: Int): Set[Long] =
       d.repartition(parts)
-        .where(Sampling.stratifiedSampleByHash(col("id"), col("stratum"), fr, default = 1.0))
+        .where(Sampling.stratifiedSampleMd5(col("id"), col("stratum"), fr, default = 1.0))
         .collect().map(_.getLong(0)).toSet
     val a = kept(3)
     assert(kept(11) == a, "membership must not depend on partitioning")
@@ -782,20 +775,20 @@ class CurationSpec extends AnyFunSuite {
     assert(math.abs(byStratum(1) / 2000.0 - 0.75) < 0.05, s"s1: $byStratum")
     assert(byStratum(2) == 2000, "absent stratum keeps the default fraction 1.0")
     intercept[IllegalArgumentException](
-      Sampling.stratifiedSampleByHash(col("id"), col("stratum"), Map("s0" -> 1.5)))
+      Sampling.stratifiedSampleMd5(col("id"), col("stratum"), Map("s0" -> 1.5)))
   }
 
   test("shuffleRank: bijective 0..n-1, equals naive hash-order rank, parallelism-invariant") {
     val d = (0L until 3000L).map(i => (i, s"p$i")).toDF("id", "payload")
-    def ranks(parts: Int, seed: Long): Map[Long, Long] =
-      Sampling.shuffleRank(d.repartition(parts), col("id"), seed)
+    def ranks(parts: Int): Map[Long, Long] =
+      Sampling.shuffleRankMd5(d.repartition(parts), col("id"))
         .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val got = ranks(4, 42L)
+    val got = ranks(4)
     assert(got.values.toSeq.sorted == (0L until 3000L), "ranks must be a bijection onto 0..n-1")
-    assert(ranks(13, 42L) == got, "rank must not depend on partitioning")
-    assert(ranks(4, 7L) != got, "a different seed must give a different order")
+    assert(ranks(13) == got, "rank must not depend on partitioning")
     // GLOBAL-WINDOW-OK: test-only naive reference on a tiny fixture
-    val naive = d.withColumn("__h", xxhash64(col("id"), lit(42L)))
+    val naive = d.withColumn("__h",
+        expr("cast(conv(substring(md5(cast(id as string)), 1, 12), 16, 10) as bigint)"))
       .withColumn("__r", org.apache.spark.sql.functions.row_number()
         .over(org.apache.spark.sql.expressions.Window.orderBy(col("__h"), col("id"))) - 1)
       .collect().map(r => r.getLong(0) -> r.getInt(3).toLong).toMap

@@ -7,7 +7,7 @@ import graft.sim.Similarity
 
 /** GraftExtensions (SparkSessionExtensions): the TestSpark session is built
   * with spark.sql.extensions=graft.functions.GraftExtensions, so the
-  * optimizer rule and injected SQL function are active session-wide. */
+  * injected SQL functions are available session-wide. */
 class ExtensionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -17,24 +17,6 @@ class ExtensionsSpec extends AnyFunSuite {
     val d = (0 until 100).map(i => (i.toLong, Array.fill(32)(rng.nextFloat()))).toDF("id", "v")
     d.cache(); d.count(); d
   }
-  lazy val query: Seq[Double] = (0 until 32).map(i => (i % 5) / 5.0)
-
-  test("optimizer rule fuses the built-in cosine chain into CosineSimilarity") {
-    val chained = df.select(col("id"), Similarity.cosineBuiltin(col("v"), query).as("c"))
-    val optimized = chained.queryExecution.optimizedPlan.toString
-    assert(optimized.toLowerCase.contains("cosinesimilarity"),
-      s"rule did not fire:\n$optimized")
-    assert(!optimized.contains("aggregate(zipwith") && !optimized.contains("zip_with"),
-      s"chain should be gone:\n$optimized")
-  }
-
-  test("fused plan returns bit-identical results to the unfused expression") {
-    val viaRule = df.select(col("id"), Similarity.cosineBuiltin(col("v"), query).as("c"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val native = df.select(col("id"), ArrayMath.cosineSimTo(col("v"), query).as("c"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(viaRule == native)
-  }
 
   test("injected SQL function cosine_sim is available without registration") {
     df.createOrReplaceTempView("ext_vecs")
@@ -42,98 +24,10 @@ class ExtensionsSpec extends AnyFunSuite {
       "SELECT a.id, cosine_sim(a.v, b.v) c FROM ext_vecs a JOIN ext_vecs b ON b.id = 1")
       .where(col("id") === 1).head().getDouble(1)
     assert(math.abs(got - 1.0) < 1e-12)
-  }
-
-  test("rule does NOT fuse lambdas that are not pure products of the lambda variables") {
-    df.createOrReplaceTempView("ext_vecs3")
-    // (x, y) -> x * 2 * y: fusing this into cosine would silently drop the
-    // factor of 2 from the numerator
-    val sql =
-      """SELECT a.id,
-        |  aggregate(zip_with(CAST(a.v AS array<double>), CAST(b.v AS array<double>), (x, y) -> x * 2 * y), 0D, (acc, x) -> acc + x)
-        |  / (sqrt(aggregate(transform(CAST(a.v AS array<double>), x -> x * x), 0D, (acc, x) -> acc + x))
-        |     * sqrt(aggregate(transform(CAST(b.v AS array<double>), x -> x * x), 0D, (acc, x) -> acc + x))) AS c
-        |FROM ext_vecs3 a JOIN ext_vecs3 b ON b.id = 0""".stripMargin
-    val q = spark.sql(sql)
-    assert(!q.queryExecution.optimizedPlan.toString.toLowerCase.contains("cosinesimilarity"),
-      "scaled lambda must not fuse")
-    // and the value is exactly 2x the true cosine, not the cosine
-    val row0 = df.where(col("id") === 0).head()
-    val q0 = row0.getSeq[Float](row0.fieldIndex("v")).map(_.toDouble).toSeq
-    val cos0 = df.where(col("id") === 0)
-      .select(ArrayMath.cosineSimTo(col("v"), q0)).head().getDouble(0)
-    val got0 = q.where(col("id") === 0).head().getDouble(1)
-    assert(math.abs(got0 - 2.0 * cos0) < 1e-9, s"got $got0 want ${2 * cos0}")
-  }
-
-  test("rule does NOT fuse an aggregate with a non-identity finish lambda") {
-    df.createOrReplaceTempView("ext_vecs5")
-    // aggregate's 4th argument transforms the final sum — fusing would
-    // silently drop the /2 from the numerator
-    val sql =
-      """SELECT a.id,
-        |  aggregate(zip_with(CAST(a.v AS array<double>), CAST(b.v AS array<double>), (x, y) -> x * y), 0D, (acc, x) -> acc + x, acc -> acc / 2)
-        |  / (sqrt(aggregate(transform(CAST(a.v AS array<double>), x -> x * x), 0D, (acc, x) -> acc + x))
-        |     * sqrt(aggregate(transform(CAST(b.v AS array<double>), x -> x * x), 0D, (acc, x) -> acc + x))) AS c
-        |FROM ext_vecs5 a JOIN ext_vecs5 b ON b.id = 0""".stripMargin
-    val q = spark.sql(sql)
-    assert(!q.queryExecution.optimizedPlan.toString.toLowerCase.contains("cosinesimilarity"),
-      "non-identity finish lambda must not fuse")
-    // value: exactly half the true cosine
-    val row0 = df.where(col("id") === 0).head()
-    val q0 = row0.getSeq[Float](row0.fieldIndex("v")).map(_.toDouble).toSeq
-    val cos0 = df.where(col("id") === 0)
-      .select(ArrayMath.cosineSimTo(col("v"), q0)).head().getDouble(0)
-    val got0 = q.where(col("id") === 0).head().getDouble(1)
-    assert(math.abs(got0 - cos0 / 2) < 1e-9, s"got $got0 want ${cos0 / 2}")
-  }
-
-  test("rule does NOT fuse a norm aggregate with a non-identity finish lambda") {
-    df.createOrReplaceTempView("ext_vecs6")
-    // finish lambda inside the NORM: sqrt(aggregate(..., acc -> acc * 4))
-    // doubles the denominator norm — fusing would halve the result wrongly
-    val sql =
-      """SELECT a.id,
-        |  aggregate(zip_with(CAST(a.v AS array<double>), CAST(b.v AS array<double>), (x, y) -> x * y), 0D, (acc, x) -> acc + x)
-        |  / (sqrt(aggregate(transform(CAST(a.v AS array<double>), x -> x * x), 0D, (acc, x) -> acc + x, acc -> acc * 4))
-        |     * sqrt(aggregate(transform(CAST(b.v AS array<double>), x -> x * x), 0D, (acc, x) -> acc + x))) AS c
-        |FROM ext_vecs6 a JOIN ext_vecs6 b ON b.id = 0""".stripMargin
-    val q = spark.sql(sql)
-    assert(!q.queryExecution.optimizedPlan.toString.toLowerCase.contains("cosinesimilarity"),
-      "non-identity norm finish lambda must not fuse")
-    val row0 = df.where(col("id") === 0).head()
-    val q0 = row0.getSeq[Float](row0.fieldIndex("v")).map(_.toDouble).toSeq
-    val cos0 = df.where(col("id") === 0)
-      .select(ArrayMath.cosineSimTo(col("v"), q0)).head().getDouble(0)
-    val got0 = q.where(col("id") === 0).head().getDouble(1)
-    assert(math.abs(got0 - cos0 / 2) < 1e-9, s"got $got0 want ${cos0 / 2}")
-  }
-
-  test("rule does NOT strip a cast whose body transforms the value (abs-then-cast)") {
-    df.createOrReplaceTempView("ext_vecs4")
-    // transform(v, x -> CAST(abs(x) AS double)) is a VALUE transform — fusing
-    // over the raw array would compute cos(a,b) instead of cos(|a|,|b|)
-    val sql =
-      """SELECT a.id,
-        |  aggregate(zip_with(transform(a.v, x -> CAST(abs(x) AS double)), transform(b.v, x -> CAST(abs(x) AS double)), (x, y) -> x * y), 0D, (acc, x) -> acc + x)
-        |  / (sqrt(aggregate(transform(transform(a.v, x -> CAST(abs(x) AS double)), x -> x * x), 0D, (acc, x) -> acc + x))
-        |     * sqrt(aggregate(transform(transform(b.v, x -> CAST(abs(x) AS double)), x -> x * x), 0D, (acc, x) -> acc + x))) AS c
-        |FROM ext_vecs4 a JOIN ext_vecs4 b ON b.id = 0""".stripMargin
-    val q = spark.sql(sql)
-    val plan = q.queryExecution.optimizedPlan.toString
-    // fusing CosineSimilarity(transform(abs), transform(abs)) is fine; what
-    // must NOT happen is stripping the abs-transform down to the raw arrays
-    assert(!plan.contains("cosinesimilarity(v#") || plan.contains("transform"),
-      s"abs-transform must survive in:\n$plan")
-    // value check: vectors here are all-positive floats so |x| = x — use a
-    // planted negative via SQL literals instead
-    val lit = spark.sql(
-      """SELECT
-        |  aggregate(zip_with(transform(array(CAST(1.0 AS FLOAT), CAST(-1.0 AS FLOAT)), x -> CAST(abs(x) AS double)), transform(array(CAST(1.0 AS FLOAT), CAST(1.0 AS FLOAT)), x -> CAST(abs(x) AS double)), (x, y) -> x * y), 0D, (acc, x) -> acc + x)
-        |  / (sqrt(aggregate(transform(transform(array(CAST(1.0 AS FLOAT), CAST(-1.0 AS FLOAT)), x -> CAST(abs(x) AS double)), x -> x * x), 0D, (acc, x) -> acc + x))
-        |     * sqrt(aggregate(transform(transform(array(CAST(1.0 AS FLOAT), CAST(1.0 AS FLOAT)), x -> CAST(abs(x) AS double)), x -> x * x), 0D, (acc, x) -> acc + x))) AS c""".stripMargin)
-      .head().getDouble(0)
-    assert(math.abs(lit - 1.0) < 1e-12, s"cos(|a|,|b|) must be 1.0, got $lit")
+    // int8_cosine_sim: codes (1, 2, 3) at scale 0.5 point along the query
+    val i8 = spark.sql(
+      "SELECT int8_cosine_sim(array(1, 2, 3), 0.5D, array(1.0D, 2.0D, 3.0D)) c").head().getDouble(0)
+    assert(math.abs(i8 - 1.0) < 1e-12)
   }
 
   test("zero-norm query: cosineBuiltin == native (0.0 convention, bit-for-bit)") {
@@ -142,24 +36,5 @@ class ExtensionsSpec extends AnyFunSuite {
     val n = df.select(ArrayMath.cosineSimTo(col("v"), zq)).collect().map(_.getDouble(0))
     assert(b.toSeq == n.toSeq)
     assert(b.forall(_ == 0.0))
-  }
-
-  test("rule fuses the unguarded two-column SQL chain too") {
-    df.createOrReplaceTempView("ext_vecs2")
-    val sql =
-      """SELECT a.id,
-        |  aggregate(zip_with(CAST(a.v AS array<double>), CAST(b.v AS array<double>), (x, y) -> x * y), 0D, (acc, x) -> acc + x)
-        |  / (sqrt(aggregate(transform(CAST(a.v AS array<double>), x -> x * x), 0D, (acc, x) -> acc + x))
-        |     * sqrt(aggregate(transform(CAST(b.v AS array<double>), x -> x * x), 0D, (acc, x) -> acc + x))) AS c
-        |FROM ext_vecs2 a JOIN ext_vecs2 b ON b.id = 0""".stripMargin
-    val q = spark.sql(sql)
-    val optimized = q.queryExecution.optimizedPlan.toString
-    assert(optimized.toLowerCase.contains("cosinesimilarity"), s"two-col fusion missing:\n$optimized")
-    val viaChain = q.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val row0 = df.where(col("id") === 0).head()
-    val q0 = row0.getSeq[Float](row0.fieldIndex("v")).map(_.toDouble).toSeq
-    val native = df.select(col("id"), ArrayMath.cosineSimTo(col("v"), q0).as("c"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    viaChain.foreach { case (k, v) => assert(math.abs(v - native(k)) < 1e-12, s"id=$k") }
   }
 }

@@ -35,13 +35,6 @@ class PlanSpec extends AnyFunSuite {
       s"unused columns must be pruned: $scanLine")
   }
 
-  test("broadcast as-of variant actually broadcasts the probe side") {
-    val ev = spark.read.parquet(s"$sf/events.parquet")
-    val probes = ev.limit(10).select(col("user_id"), col("ts").as("pts"), col("event_id").as("pid"))
-    val p = plan(graft.temporal.AsOf.broadcastProbe(ev, probes, "user_id", "ts", "pts", Seq("value")))
-    assert(p.contains("Broadcast"), s"probe side should broadcast:\n$p")
-  }
-
   test("melted entropy scoring partially aggregates map-side (no row explosion across the wire)") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val long = graft.core.Melt.numeric(li, Seq("l_quantity", "l_tax"), keep = Seq("l_returnflag"))
@@ -114,7 +107,7 @@ class PlanSpec extends AnyFunSuite {
     // the operator's whole point is a count-free, shuffle-free membership
     // predicate — any exchange appearing here means someone broke that
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val kept = docs.where(graft.text.Sampling.stratifiedSampleByHash(
+    val kept = docs.where(graft.text.Sampling.stratifiedSampleMd5(
       col("doc_id"), col("source"), Map("src0" -> 0.5), default = 0.25))
     val p = plan(kept)
     assert(!p.contains("Exchange"), s"stratified sample must not shuffle:\n$p")

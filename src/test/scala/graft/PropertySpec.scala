@@ -268,7 +268,7 @@ class PropertySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val d = (0L until 4000L).map(i => (i, s"s${i % 2}")).toDF("id", "stratum")
     def kept(f: Double): Set[Long] = d
-      .where(graft.text.Sampling.stratifiedSampleByHash(col("id"), col("stratum"), Map("s0" -> f), default = 0.3))
+      .where(graft.text.Sampling.stratifiedSampleMd5(col("id"), col("stratum"), Map("s0" -> f), default = 0.3))
       .collect().map(_.getLong(0)).toSet
     val fracs = Seq(0.1, 0.3, 0.6, 0.9)
     fracs.sliding(2).foreach { case Seq(lo, hi) =>

@@ -25,8 +25,14 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("the reference chain runs: no rule rewrites cosineBuiltin into CosineSimilarity") {
+    val plan = df.select(Similarity.cosineBuiltin(col("v"), query))
+      .queryExecution.optimizedPlan.toString
+    assert(plan.contains("zip_with"), s"the built-in chain must reach execution:\n$plan")
+    assert(!plan.toLowerCase.contains("cosinesimilarity"), s"chain rewritten to native:\n$plan")
+  }
+
   test("native cosine_sim two-column variant and SQL registration") {
-    ArrayMath.register(spark)
     df.createOrReplaceTempView("vecs")
     val viaSql = spark.sql(
       "SELECT a.id, cosine_sim(a.v, b.v) c FROM vecs a JOIN vecs b ON b.id = 0")
@@ -197,7 +203,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("null ELEMENTS poison cosine to null, matching the built-in chain (both fused expressions)") {
-    ArrayMath.register(spark)
     val q = Seq(1.0, 1.0, 1.0)
     val d = spark.sql("SELECT array(1.0D, CAST(NULL AS DOUBLE), 3.0D) v")
     val got = d.select(
@@ -246,8 +251,7 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.cosineInt8(col("codes"), col("scale"), Seq(1.0, 1.0, 1.0)).as("c"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     assert(got(1L).contains(0.0) && got(2L).isEmpty)
-    // SQL registration
-    ArrayMath.register(spark)
+    // the SQL function GraftExtensions injects
     store.createOrReplaceTempView("int8_store")
     val viaSql = spark.sql(
       s"SELECT id, int8_cosine_sim(codes, scale, CAST(array(${qDeq.mkString(",")}) AS ARRAY<DOUBLE>)) c FROM int8_store")

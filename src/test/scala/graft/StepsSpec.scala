@@ -270,6 +270,28 @@ class StepsSpec extends AnyFunSuite {
     assert(m("f1").get > m("f3").get)
   }
 
+  test("ReliefStep with no complete row fails naming the step and the cause") {
+    def failure(frame: org.apache.spark.sql.DataFrame, preds: Seq[String]): String =
+      intercept[IllegalArgumentException](
+        ReliefStep(topP = Some(1), sampleSize = 20).fit(frame, "species", preds)).getMessage
+    val empty = failure(df.where(lit(false)), Seq("f1", "f3"))
+    assert(empty.contains("step_select_relief") && empty.contains("empty"), empty)
+    val allNull = failure(df.withColumn("f_null", lit(null).cast("double")), Seq("f1", "f_null"))
+    assert(allNull.contains("step_select_relief") && allNull.contains("all-NULL columns: f_null"),
+      allNull)
+  }
+
+  test("RocStep with fewer than two outcome classes fails naming the step and the count") {
+    def failure(frame: org.apache.spark.sql.DataFrame): String =
+      intercept[IllegalArgumentException](
+        RocStep(topP = Some(1)).fit(frame, "species", Seq("f1", "f3"))).getMessage
+    for ((frame, found) <- Seq(
+        (df.where(lit(false)), 0), (df.limit(1), 1), (df.where(col("species") === "c0"), 1))) {
+      val msg = failure(frame)
+      assert(msg.contains("step_select_roc") && msg.contains(s"found $found"), msg)
+    }
+  }
+
   test("ReliefStep regression (RReliefF): numeric outcome works, deterministic, informative > noise") {
     // the reference passes numeric outcomes straight to FSelectorRcpp::relief
     // (step_select_relief.R:133–181 — no outcome-type guard)

@@ -46,15 +46,9 @@ class TemporalSpec extends AnyFunSuite {
     assert(got("a").contains(1.0))
   }
 
-  test("broadcast as-of variant agrees with sort-merge") {
-    val sm = collectMap(AsOf.sortMerge(events, probes, "url", "warc_ts", "label_ts", Seq("v")))
-    val bc = collectMap(AsOf.broadcastProbe(events, probes, "url", "warc_ts", "label_ts", Seq("v")))
-    assert(sm == bc)
-  }
-
-  test("broadcastProbe keeps DUPLICATE (key, ts) probe rows as separate outputs, like sortMerge") {
-    // two purchases by one user in the same second with different payloads:
-    // grouping on (key, ts) alone used to collapse them to one arbitrary row
+  test("sortMerge keeps DUPLICATE (key, ts) probe rows as separate outputs") {
+    // two purchases by one user in the same second with different payloads
+    // must each keep their own output row
     val ev = Seq(("u1", ts("2024-01-01 00:00:00"), 5.0)).toDF("url", "warc_ts", "v")
     val dupProbes = Seq(
       ("u1", ts("2024-01-02 00:00:00"), "p1"),
@@ -62,13 +56,10 @@ class TemporalSpec extends AnyFunSuite {
     ).toDF("url", "label_ts", "label")
     val sm = AsOf.sortMerge(ev, dupProbes, "url", "warc_ts", "label_ts", Seq("v"))
       .collect().map(r => r.getString(r.fieldIndex("label"))).sorted.toSeq
-    val bc = AsOf.broadcastProbe(ev, dupProbes, "url", "warc_ts", "label_ts", Seq("v"))
-      .collect().map(r => r.getString(r.fieldIndex("label"))).sorted.toSeq
     assert(sm == Seq("p1", "p2"))
-    assert(bc == sm, s"broadcast variant must emit one row per probe row: $bc")
   }
 
-  test("tiebreak column makes equal-(key, ts) events deterministic in both variants") {
+  test("tiebreak column makes equal-(key, ts) events deterministic") {
     // two events at the SAME (key, ts) — without a tiebreak the carried
     // value is order-dependent; with one, the greatest tiebreak wins
     val tied = Seq(
@@ -78,10 +69,7 @@ class TemporalSpec extends AnyFunSuite {
     val probe = Seq(("u1", ts("2024-01-02 00:00:00"), "x")).toDF("url", "label_ts", "label")
     val sm = collectMap(AsOf.sortMerge(tied, probe, "url", "warc_ts", "label_ts", Seq("v"),
       tiebreak = Some("eid")))
-    val bc = collectMap(AsOf.broadcastProbe(tied, probe, "url", "warc_ts", "label_ts", Seq("v"),
-      tiebreak = Some("eid")))
     assert(sm("x").contains(1.0), "eid 7 > 3, so v=1.0 carries")
-    assert(bc == sm)
   }
 
   test("sessionize: gap > threshold starts a new session") {

@@ -1,14 +1,18 @@
 #!/usr/bin/env python3
 """List src/main definitions that only specs can reach.
 
-A public `def` or `object` in src/main/scala is reported when its name
-occurs nowhere in the code of src/main/scala or layerbench/src except on a
-line that defines a `def` or `object` of that name. Such a name is called
-by no query, no main and no benchmark workload: only src/test reaches it,
-or nothing does. Comments and the text of string literals are not code;
-the `$name`/`${...}` parts of an interpolated string are. Any definition
-line is skipped, not only the definition's own, so two objects that each
-define `compact` do not count as uses of each other.
+A public `def`, `object`, `class` (case classes included) or `trait` in
+src/main/scala is reported when its name occurs nowhere in the code of
+src/main/scala or layerbench/src except on a line that defines a member of
+that name. Such a name is called by no query, no main and no benchmark
+workload: only src/test reaches it, or nothing does. Comments and the text
+of string literals are not code; the `$name`/`${...}` parts of an
+interpolated string are, and so is a fully qualified class name in a string
+(`"graft.functions.GraftExtensions"`, loaded by reflection). On a
+definition line only the name it defines is exempt: the types in a class's
+parameters and `extends` clause still count as uses. Any definition line
+exempts its own name, not only the definition's own line, so two objects
+that each define `compact` do not count as uses of each other.
 
 The check is lexical (word-boundary matches on names), so it errs towards
 silence: a name shared with any other identifier counts as reached.
@@ -30,10 +34,11 @@ SEARCH = [MAIN, os.path.join(ROOT, "layerbench", "src")]
 
 DEF = re.compile(
     r"^\s*((?:(?:final|case|implicit|lazy|sealed|abstract|override|"
-    r"private(?:\[\w+\])?|protected(?:\[\w+\])?)\s+)*)(def|object)\s+([A-Za-z_]\w*)")
+    r"private(?:\[\w+\])?|protected(?:\[\w+\])?)\s+)*)(def|object|class|trait)\s+([A-Za-z_]\w*)")
 SKIP_NAMES = {"apply", "unapply", "main", "toString", "equals", "hashCode", "entry"}
 CHAR_LIT = re.compile(r"'(?:\\u[0-9a-fA-F]{4}|\\.|[^'\\\n])'")
 INTERP_NAME = re.compile(r"\$[A-Za-z_]\w*")
+REFLECTED = re.compile(r'"(?:[a-z_]\w*\.)+([A-Z]\w*)"')
 
 
 def scala_files(d):
@@ -48,11 +53,12 @@ def blank(s):
     return re.sub(r"[^\n]", " ", s)
 
 
-def code_only(text):
+def code_only(text, keep_strings=False):
     """Blank out comments and the text of string and char literals so that a
     mention in a doc comment, an error message or generated SQL is not a
     use. In an interpolated string (`s"..."`, `f"..."`) the `$name` and
-    `${...}` parts are code and are kept. Line structure is preserved."""
+    `${...}` parts are code and are kept. With `keep_strings`, string
+    literals are kept whole. Line structure is preserved."""
     out, i, n = [], 0, len(text)
     while i < n:
         c = text[i]
@@ -72,6 +78,7 @@ def code_only(text):
             j = m.end() if m else i + 1
             out.append(blank(text[i:j]) if m else c); i = j
         elif c == '"':
+            start, mark = i, len(out)
             interp = i > 0 and (text[i - 1].isalnum() or text[i - 1] == "_")
             triple = text.startswith('"""', i)
             j = i + (3 if triple else 1)
@@ -103,6 +110,8 @@ def code_only(text):
                     out.append(" " + text[j + 1:k]); j = k
                 else:
                     out.append(blank(text[j])); j += 1
+            if keep_strings:
+                out[mark:] = [text[start:j]]
             i = j
         else:
             out.append(c); i += 1
@@ -110,12 +119,14 @@ def code_only(text):
 
 
 def main():
-    corpus = {}
+    corpus, reflected = {}, set()
     for d in SEARCH:
         if os.path.isdir(d):
             for p in scala_files(d):
                 with open(p, encoding="utf-8") as f:
-                    corpus[p] = code_only(f.read()).split("\n")
+                    text = f.read()
+                corpus[p] = code_only(text).split("\n")
+                reflected.update(REFLECTED.findall(code_only(text, keep_strings=True)))
 
     defs = []
     for p, lines in corpus.items():
@@ -142,7 +153,7 @@ def main():
 
     found = []
     for p, i, kind, name in defs:
-        if name not in words:
+        if name not in words and name not in reflected:
             found.append((os.path.relpath(p, ROOT), i + 1, kind, name))
 
     for rel, line, kind, name in sorted(found):
