@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Melt, PagesGen}
+import graft.core.Melt
 import graft.multimodal.BinaryFeatures
 import graft.select._
 import graft.sim.{Quantize, Similarity}
@@ -560,7 +560,7 @@ object SparkEntry {
     // fastText-style model-based quality gate, deterministic core: hashed
     // bag-of-words Naive Bayes (md5-48 unigram buckets, add-one log-odds)
     // trained on lang='en' as the seed class, scored map-side via the fused
-    // BucketWeightSum expression; training AND scoring replayed in DuckDB
+    // BucketWeightSum kernel; training AND scoring replayed in DuckDB
     "q_nb_quality" -> ((s, dir) => {
       val d = t(s, dir, "documents")
       val m = graft.text.NbQuality.fit(d, "text", col("lang") === "en", buckets = 4096)

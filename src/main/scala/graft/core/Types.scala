@@ -46,8 +46,8 @@ object Types {
   }
 
   /** The flagship typed pipeline: dedup → leakage-safe window features →
-    * sort-merge as-of join. Same physical plan as the untyped
-    * [[graft.Bench.featurePipeline]] (one url exchange + the as-of union).
+    * sort-merge as-of join (one url exchange + the as-of union).
+    * [[graft.Bench.featurePipeline]] is this pipeline as a DataFrame.
     */
   def featureVectors(
       spark: SparkSession,

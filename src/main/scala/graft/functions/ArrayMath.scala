@@ -247,7 +247,18 @@ object ArrayMath {
       Literal.create(query.toArray, ArrayType(DoubleType, containsNull = false))))
 
   /** all sign-LSH band signatures (array<long>, one per band) in one
-    * fused codegen loop — see [[SignBandSignatures]]. */
-  def signBandSigs(vec: Column, planes: Array[Array[Double]], bands: Int): Column =
-    ColumnBridge.column(SignBandSignatures(ColumnBridge.expression(vec), planes, bands))
+    * fused codegen loop — see [[SignBandSignatures]]. `vecType` is `vec`'s
+    * type, array<float|double>, read from the caller's schema. */
+  def signBandSigs(vec: Column, vecType: DataType, planes: Array[Array[Double]],
+      bands: Int): Column = {
+    val floatElems = NearestCentroid.isFloatVector(vecType, "sign_band_sigs")
+    val (flat, norms, d) = NearestCentroid.matrix(planes, "sign_band_sigs expects >= 1 planes")
+    require(bands >= 1 && planes.length % bands == 0,
+      s"bands ($bands) must divide the plane count (${planes.length})")
+    require(planes.length / bands <= 63,
+      s"planes per band (${planes.length / bands}) must fit a long's bits")
+    // never null: NULL or malformed input gives the all-zero signatures
+    Kernel.call(SignBandSignatures, "sigs", ArrayType(LongType, containsNull = false),
+      propagateNull = false)(flat, norms, d, bands, vec, floatElems)
+  }
 }

@@ -1,16 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.DoubleType
 
 /** Σᵢ weights[hᵢ mod B] over an array<long> of feature hashes — the scoring
   * kernel of the hashed bag-of-words classifier ([[graft.text.NbQuality]]).
   * The weight table rides along as ONE referenced object (the
-  * [[NearestCentroid]] pattern), so scoring a document is a single codegen
+  * [[Kernel]] convention), so scoring a document is a single codegen
   * loop over its token hashes: NO explode, NO join, NO shuffle — the whole
   * classifier gate is map-side at any corpus size.
   *
@@ -18,7 +15,7 @@ import org.apache.spark.sql.types._
   * weightsLit[pmod(h, B)]), ...)`) would need the weight table as a
   * B-wide CreateArray literal — the 65k-wide driver-stack hazard documented
   * on [[SortedBucket]] — and would run interpreted per element besides.
-  * There is no builtin twin; the spec pins this expression against a local
+  * There is no builtin twin; the spec pins this kernel against a local
   * Scala replay and the DuckDB oracle instead (the UnicodeNormalize
   * convention).
   *
@@ -28,54 +25,9 @@ import org.apache.spark.sql.types._
   * array → null, null ELEMENT → null (the poisoned-sum convention of the
   * aggregate/zip_with chains); an EMPTY array sums to 0.0.
   */
-case class BucketWeightSum(child: Expression, weights: Array[Double])
-    extends UnaryExpression {
-
-  // null elements poison the sum to null regardless of child nullability
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != ArrayType(LongType, containsNull = false) &&
-        child.dataType != ArrayType(LongType, containsNull = true))
-      TypeCheckResult.TypeCheckFailure(
-        s"bucket_weight_sum expects array<long>, got ${child.dataType}")
-    else if (weights.isEmpty)
-      TypeCheckResult.TypeCheckFailure("bucket_weight_sum expects a non-empty weight table")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = DoubleType
-
-  override def nullSafeEval(a: Any): Any =
-    BucketWeightSum.sum(weights, a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("bucketWeights", weights, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val bad = ctx.freshName("anyNullElem")
-      s"""
-         |int $n = $a.numElements();
-         |double $s = 0.0;
-         |boolean $bad = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) { $bad = true; break; }
-         |  $s += $wRef[(int) java.lang.Math.floorMod($a.getLong($i), (long) $wRef.length)];
-         |}
-         |if ($bad) { ${ev.isNull} = true; } else { ${ev.value} = $s; }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BucketWeightSum {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
-  def sum(weights: Array[Double], a: ArrayData): Any = {
+  def sum(weights: Array[Double], a: ArrayData): java.lang.Double = {
     val n = a.numElements()
     var s = 0.0
     var i = 0
@@ -87,6 +39,9 @@ object BucketWeightSum {
     s
   }
 
-  def bucketWeightSum(hashes: Column, weights: Array[Double]): Column =
-    ColumnBridge.column(BucketWeightSum(ColumnBridge.expression(hashes), weights))
+  def bucketWeightSum(hashes: Column, weights: Array[Double]): Column = {
+    require(weights.nonEmpty, "bucket_weight_sum expects a non-empty weight table")
+    // null elements poison the sum to null
+    Kernel.call(this, "sum", DoubleType, returnNullable = true)(weights, hashes)
+  }
 }

@@ -1,14 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native expression for character n-grams — the hot inner expression of the
+/** Native kernel for character n-grams — the hot inner expression of the
   * LM-score pipeline (one n-gram per character position: the highest
   * elements-per-row expansion in the engine, ~one per CHARACTER of corpus).
   *
@@ -22,29 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * per character (round-3 lesson, same class as WordShingles); this builds
   * the array in one pass inside whole-stage codegen.
   */
-case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(s"char_ngrams expects string, got ${child.dataType}")
-    else if (n < 1) TypeCheckResult.TypeCheckFailure(s"char_ngrams expects n >= 1, got $n")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(t: Any): Any =
-    CharNgrams.compute(t.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CharNgrams.compute($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object CharNgrams {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** One pass over the character positions; `substringSQL` is the exact
     * kernel of the `Substring`/`Column.substr` expression (1-based,
@@ -63,6 +38,9 @@ object CharNgrams {
 
   /** Column API: array of the character n-grams of `text` (empty when the
     * text is shorter than n; null text propagates null). */
-  def ngrams(text: Column, n: Int): Column =
-    ColumnBridge.column(CharNgrams(ColumnBridge.expression(text.cast("string")), n))
+  def ngrams(text: Column, n: Int): Column = {
+    require(n >= 1, s"char_ngrams expects n >= 1, got $n")
+    Kernel.call(this, "compute", ArrayType(StringType, containsNull = false))(
+      text.cast("string"), n)
+  }
 }

@@ -1,13 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.LongType
 
-/** Native expression: the ORDER-PRESERVING 64-bit integer image of a
+/** Native kernel: the ORDER-PRESERVING 64-bit integer image of a
   * double — `bits ^ ((bits >> 63) >>> 1)` over `doubleToLongBits`
   * (negatives flip their low 63 bits, keeping the sign; positives pass
   * through) — so that `m(a) < m(b)` (SIGNED) iff `a` sorts before `b`
@@ -21,33 +17,13 @@ import org.apache.spark.sql.types._
   * (`shiftright(m, 64 − B)`), unlike a hash (order-destroying) or a
   * quantile probe (a full extra pass). Null → null.
   */
-case class DoubleBits(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != DoubleType)
-      TypeCheckResult.TypeCheckFailure(s"double_bits expects double, got ${child.dataType}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(v: Any): Any =
-    DoubleBits.monotone(v.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.DoubleBits.monotone($v);")
-
-  override protected def withNewChildInternal(newChild: Expression): DoubleBits =
-    copy(child = newChild)
-}
-
 object DoubleBits {
   def monotone(d: Double): Long = {
     val bits = java.lang.Double.doubleToLongBits(d)
     bits ^ ((bits >> 63) >>> 1)
   }
 
-  def of(c: Column): Column = ColumnBridge.column(DoubleBits(ColumnBridge.expression(c)))
+  def of(c: Column): Column = Kernel.call(this, "monotone", LongType)(c)
 
   /** Monotone range bucket from the image's top `bits` bits — ARITHMETIC
     * shift, so the bucket id (in [−2^(bits−1), 2^(bits−1))) stays

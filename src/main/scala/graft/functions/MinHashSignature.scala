@@ -1,13 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native expression for the k-permutation MinHash signature: element i of
+/** Native kernel for the k-permutation MinHash signature: element i of
   * the result is `min over shingles s of xxhash64(i, s)` — bit-identical to
   * the built-in formulation `array_min(transform(sh, s => xxhash64(lit(i),
   * s)))` evaluated k times (asserted in Round2Spec), because it invokes the
@@ -16,7 +14,7 @@ import org.apache.spark.sql.types._
   * The built-in formulation evaluates k interpreted `transform`s per row
   * (higher-order functions are CodegenFallback): k closure dispatches and k
   * intermediate arrays per document, i.e. 32 extra allocations per row at
-  * the default signature width. This expression keeps one running-minimum
+  * the default signature width. This kernel keeps one running-minimum
   * array and reads the shingle bytes once per (shingle, i) pair inside
   * whole-stage codegen — the signature pass over a 100-TB corpus is a
   * single tight loop per document.
@@ -25,44 +23,11 @@ import org.apache.spark.sql.types._
   * production caller filters `size(sh) > 0` first — empty-shingle docs must
   * be dropped before banding or they form a null-band candidate clique).
   */
-case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if k >= 1 => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(StringType, _) =>
-      TypeCheckResult.TypeCheckFailure(s"minhash_sig expects k >= 1, got $k")
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"minhash_sig expects array<string>, got $other")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullable: Boolean = true // empty array → null even for non-null child
-
-  // constant for the expression's lifetime: xxhash64 state after the int
-  // literal i — recomputing k int-hashes per ROW is waste on the hot path
-  @transient private lazy val seeds: Array[Long] = MinHashSignature.seedsFor(k)
-
-  override def nullSafeEval(a: Any): Any =
-    MinHashSignature.compute(a.asInstanceOf[ArrayData], seeds)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val seedsRef = ctx.addReferenceObj("minhashSeeds", seeds, "long[]")
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.MinHashSignature.compute($c, $seedsRef);
-       |${ev.isNull} = (${ev.value} == null);
-     """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MinHashSignature {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** seeds[i] = xxhash64 state after the int literal i — exactly the
-    * XxHash64(Seq(lit(i), s)) child-chaining with default seed 42. */
+    * XxHash64(Seq(lit(i), s)) child-chaining with default seed 42. Computed
+    * once per column, not per row. */
   def seedsFor(k: Int): Array[Long] = {
     val seeds = new Array[Long](k)
     var i = 0
@@ -93,6 +58,10 @@ object MinHashSignature {
   }
 
   /** Column API: k-wide MinHash signature of a shingle array. */
-  def signature(shingles: Column, k: Int): Column =
-    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(shingles), k))
+  def signature(shingles: Column, k: Int): Column = {
+    require(k >= 1, s"minhash_sig expects k >= 1, got $k")
+    // empty array → null even for a non-null input
+    Kernel.call(this, "compute", ArrayType(LongType, containsNull = false),
+      returnNullable = true)(shingles, seedsFor(k))
+  }
 }

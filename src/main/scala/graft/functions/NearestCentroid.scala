@@ -1,9 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 
@@ -22,10 +21,18 @@ import org.apache.spark.sql.types._
   * centroid matrix rides along as ONE flattened referenced object and the
   * k×d loop runs inside whole-stage codegen with no intermediate structs.
   *
+  * [[nearestInt8]] is the same assignment over the COMPRESSED store: the
+  * vector arrives as int8 codes + per-vector scale (see
+  * [[graft.sim.Quantize]]) and is dequantized inside the same fused loop
+  * (xᵢ = (double)codeᵢ · scale — the [[Int8CosineSimilarity]] rule), so IVF
+  * assignment runs directly on int8 storage with no intermediate arrays AND
+  * no O(k) plan. Bit-equal to `greatest()` over `int8_cosine_sim` structs
+  * (spec-pinned).
+  *
   * Bit-parity with the chain (asserted in SimilaritySpec): the vector norm
   * is accumulated ascending once (the chain recomputes the identical value
   * per centroid), each centroid's norm-square is pre-summed ascending at
-  * construction (same adds the chain performs per row), dots accumulate
+  * column construction (same adds the chain performs per row), dots accumulate
   * ascending, and the winner comparison is SQL double ordering
   * (`SQLOrderingUtil.compareDoubles`, NaN largest, -0.0 == 0.0) with ties
   * to the LARGER cell — exactly `greatest` over (sim, cell) structs.
@@ -35,112 +42,51 @@ import org.apache.spark.sql.types._
   * element_at lesson): null array → null; null ELEMENT → null; vector
   * length ≠ centroid dimensionality → null.
   */
-case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
-    extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val elemOk = child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _                                    => false
-    }
-    if (!elemOk)
-      TypeCheckResult.TypeCheckFailure(
-        s"nearest_centroid expects array<float|double>, got ${child.dataType}")
-    else if (centroids.isEmpty || centroids.exists(_.length != centroids.head.length))
-      TypeCheckResult.TypeCheckFailure(
-        "nearest_centroid expects >= 1 centroids of one shared dimensionality")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def dataType: DataType = NearestCentroid.resultType
-
-  @transient private lazy val flat: Array[Double] = centroids.flatten.toArray
-  @transient private lazy val norms: Array[Double] = NearestCentroid.normSums(centroids)
-  private def d: Int = centroids.head.length
-
-  private def floatElems: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(v: Any): Any =
-    NearestCentroid.assign(flat, norms, d, v.asInstanceOf[ArrayData], floatElems)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val flatRef = ctx.addReferenceObj("centroidsFlat", flat, "double[]")
-    val normRef = ctx.addReferenceObj("centroidNorms", norms, "double[]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"""
-         |${ev.value} = graft.functions.NearestCentroid.assign(
-         |  $flatRef, $normRef, $d, $v, $floatElems);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** [[NearestCentroid]] over the COMPRESSED store: the vector arrives as
-  * int8 codes + per-vector scale (see [[graft.sim.Quantize]]) and is
-  * dequantized inside the same fused loop (xᵢ = (double)codeᵢ · scale —
-  * the [[Int8CosineSimilarity]] rule), so IVF assignment runs directly on
-  * int8 storage with no intermediate arrays AND no O(k) plan. Bit-equal to
-  * `greatest()` over `int8_cosine_sim` structs (spec-pinned). */
-case class Int8NearestCentroid(
-    left: Expression, right: Expression, centroids: Array[Array[Double]])
-    extends BinaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val codesOk = left.dataType match {
-      case ArrayType(IntegerType | ShortType | ByteType, _) => true
-      case _                                                => false
-    }
-    if (!codesOk || right.dataType != DoubleType)
-      TypeCheckResult.TypeCheckFailure(
-        s"int8_nearest_centroid expects (array<int|smallint|tinyint>, double), " +
-          s"got (${left.dataType}, ${right.dataType})")
-    else if (centroids.isEmpty || centroids.exists(_.length != centroids.head.length))
-      TypeCheckResult.TypeCheckFailure(
-        "int8_nearest_centroid expects >= 1 centroids of one shared dimensionality")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def dataType: DataType = NearestCentroid.resultType
-
-  @transient private lazy val flat: Array[Double] = centroids.flatten.toArray
-  @transient private lazy val norms: Array[Double] = NearestCentroid.normSums(centroids)
-  private def d: Int = centroids.head.length
-
-  private def codeTag: Int =
-    left.dataType.asInstanceOf[ArrayType].elementType match {
-      case IntegerType => 0
-      case ShortType   => 1
-      case _           => 2
-    }
-
-  override def nullSafeEval(c: Any, s: Any): Any =
-    NearestCentroid.assignInt8(
-      flat, norms, d, c.asInstanceOf[ArrayData], s.asInstanceOf[Double], codeTag)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val flatRef = ctx.addReferenceObj("centroidsFlat", flat, "double[]")
-    val normRef = ctx.addReferenceObj("centroidNorms", norms, "double[]")
-    nullSafeCodeGen(ctx, ev, (c, s) =>
-      s"""
-         |${ev.value} = graft.functions.NearestCentroid.assignInt8(
-         |  $flatRef, $normRef, $d, $c, $s, $codeTag);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 object NearestCentroid {
+
+  /** Column API: struct<cell, sim> of the nearest of `centroids` to the
+    * array<float|double> `v`. `vType` is `v`'s type, read from the caller's
+    * schema: the kernel call cannot see it. */
+  def nearest(v: Column, vType: DataType, centroids: Array[Array[Double]]): Column = {
+    val floatElems = isFloatVector(vType, "nearest_centroid")
+    val (flat, norms, d) = matrix(centroids, "nearest_centroid expects >= 1 centroids")
+    Kernel.call(this, "assign", resultType, returnNullable = true)(flat, norms, d, v, floatElems)
+  }
+
+  /** Column API: [[nearest]] over int8 `codes` of type `codesType`
+    * (array<int|smallint|tinyint>) dequantized by `scale`. */
+  def nearestInt8(codes: Column, codesType: DataType, scale: Column,
+      centroids: Array[Array[Double]]): Column = {
+    val codeTag = codesType match {
+      case ArrayType(IntegerType, _) => 0
+      case ArrayType(ShortType, _)   => 1
+      case ArrayType(ByteType, _)    => 2
+      case _                         => -1
+    }
+    require(codeTag >= 0,
+      s"int8_nearest_centroid expects array<int|smallint|tinyint>, got $codesType")
+    val (flat, norms, d) = matrix(centroids, "int8_nearest_centroid expects >= 1 centroids")
+    Kernel.call(this, "assignInt8", resultType, returnNullable = true)(
+      flat, norms, d, codes, scale, codeTag)
+  }
+
+  /** True for array<float>, false for array<double>; any other type fails
+    * with `fn`'s message. */
+  private[functions] def isFloatVector(vType: DataType, fn: String): Boolean = vType match {
+    case ArrayType(FloatType, _)  => true
+    case ArrayType(DoubleType, _) => false
+    case _ => throw new IllegalArgumentException(s"$fn expects array<float|double>, got $vType")
+  }
+
+  /** A k×d matrix as the kernels take it: rows flattened, per-row
+    * norm-square sums, d. `what` opens the message for an empty or ragged
+    * matrix. */
+  private[functions] def matrix(rows: Array[Array[Double]], what: String)
+      : (Array[Double], Array[Double], Int) = {
+    require(rows.nonEmpty && rows.forall(_.length == rows.head.length),
+      s"$what of one shared dimensionality")
+    (rows.flatten, normSums(rows), rows.head.length)
+  }
 
   val resultType: StructType = StructType(Seq(
     StructField("cell", IntegerType, nullable = false),

@@ -1,12 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
-import org.apache.spark.sql.types._
 
 /** All sign-LSH band signatures of one vector in ONE codegen call:
   * array<long> of length `bands`, where bit j of band b is
@@ -21,12 +15,12 @@ import org.apache.spark.sql.types._
   * whole stage silently falls back to INTERPRETED execution (observed:
   * `CodeGenerator: failed to compile ... grows beyond 64 KB` on
   * q_cosine_neardup). Here the plane matrix rides along as ONE flattened
-  * referenced object (the [[NearestCentroid]] pattern) and the planes×d
+  * referenced object (the [[Kernel]] convention) and the planes×d
   * loop runs inside whole-stage codegen.
   *
   * Bit-parity with the chain (asserted in SimilaritySpec): the vector norm
   * accumulates ascending once (the chain recomputes the identical value per
-  * plane), plane norm-squares are pre-summed ascending at construction
+  * plane), plane norm-squares are pre-summed ascending once per column
   * (the same adds the chain performs per row), dots accumulate ascending
   * (4 planes per pass, independent accumulators — each dot's own order
   * unchanged), and the sign test is SQL double ordering
@@ -36,71 +30,10 @@ import org.apache.spark.sql.types._
   * Null semantics replicate `when(cosine ≥ 0, bit).otherwise(0)`: a NULL
   * cosine (null vector, null element, length ≠ plane dimensionality) takes
   * the otherwise-branch, so every bit is 0 — the result is an ALL-ZERO
-  * signature array, never null (`nullable = false`). A zero vector scores
-  * cosine 0.0 against every plane, so every bit is SET (0.0 ≥ 0), again
-  * exactly as the chain.
+  * signature array, never null (the kernel is called on NULL input too).
+  * A zero vector scores cosine 0.0 against every plane, so every bit is SET
+  * (0.0 ≥ 0), again exactly as the chain.
   */
-case class SignBandSignatures(child: Expression, planes: Array[Array[Double]], bands: Int)
-    extends UnaryExpression {
-
-  // never null: malformed input degrades to the all-zero signature array,
-  // the when(null).otherwise(0) behavior of the reference chain
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val elemOk = child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _                                    => false
-    }
-    if (!elemOk)
-      TypeCheckResult.TypeCheckFailure(
-        s"sign_band_sigs expects array<float|double>, got ${child.dataType}")
-    else if (planes.isEmpty || planes.exists(_.length != planes.head.length))
-      TypeCheckResult.TypeCheckFailure(
-        "sign_band_sigs expects >= 1 planes of one shared dimensionality")
-    else if (bands < 1 || planes.length % bands != 0)
-      TypeCheckResult.TypeCheckFailure(
-        s"bands ($bands) must divide the plane count (${planes.length})")
-    else if (planes.length / bands > 63)
-      TypeCheckResult.TypeCheckFailure(
-        s"planes per band (${planes.length / bands}) must fit a long's bits")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  @transient private lazy val flat: Array[Double] = planes.flatten.toArray
-  @transient private lazy val norms: Array[Double] = NearestCentroid.normSums(planes)
-  private def d: Int = planes.head.length
-
-  private def floatElems: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    SignBandSignatures.sigs(
-      flat, norms, d, bands, v.asInstanceOf[ArrayData], floatElems)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val flatRef = ctx.addReferenceObj("planesFlat", flat, "double[]")
-    val normRef = ctx.addReferenceObj("planeNorms", norms, "double[]")
-    val childGen = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(
-      code = code"""
-        |${childGen.code}
-        |$javaType ${ev.value} = graft.functions.SignBandSignatures.sigs(
-        |  $flatRef, $normRef, $d, $bands,
-        |  ${childGen.isNull} ? null : ${childGen.value}, $floatElems);
-        """.stripMargin,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SignBandSignatures {
 
   /** Band-signature core: `v` may be null/malformed (→ all-zero sigs).

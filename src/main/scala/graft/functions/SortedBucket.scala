@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
-/** Native expression: index of a double value in a SORTED boundary array —
+/** Native kernel: index of a double value in a SORTED boundary array —
   * `upperBound(bounds, v)` = the count of boundaries ≤ v, by binary search
   * (deterministic on duplicate boundaries: always the index past the last
   * equal entry). The range-partitioner primitive of the two-phase
@@ -19,40 +16,30 @@ import org.apache.spark.sql.types._
   * filter first). The boundary array rides along as a referenced object —
   * no per-row allocation.
   */
-case class SortedBucket(child: Expression, bounds: Array[Double]) extends UnaryExpression {
+object SortedBucket {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != DoubleType)
-      TypeCheckResult.TypeCheckFailure(s"sorted_bucket expects double, got ${child.dataType}")
-    else if (bounds.isEmpty || bounds.exists(_.isNaN))
-      TypeCheckResult.TypeCheckFailure("sorted_bucket expects non-empty, NaN-free boundaries")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(v: Any): Any = {
-    val d = v.asInstanceOf[Double]
-    if (d.isNaN) null else SortedBucket.upperBound(bounds, d)
+  /** First index i with bounds(i) > v (== count of boundaries ≤ v); NaN
+    * → null. */
+  def upperBound(bounds: Array[Double], v: Double): java.lang.Integer = {
+    if (v.isNaN) return null
+    var lo = 0
+    var hi = bounds.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (bounds(mid) <= v) lo = mid + 1 else hi = mid
+    }
+    lo
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bounds", bounds, "double[]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"""
-         |if (Double.isNaN($v)) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.functions.SortedBucket.upperBound($ref, $v);
-         |}
-       """.stripMargin)
+  /** Column API: bucket index of `v` in the sorted `bounds`. */
+  def of(v: Column, bounds: Array[Double]): Column = {
+    require(bounds.nonEmpty && !bounds.exists(_.isNaN),
+      "sorted_bucket expects non-empty, NaN-free boundaries")
+    Kernel.call(this, "upperBound", IntegerType, returnNullable = true)(bounds, v.cast("double"))
   }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
-/** Native expression: snap a value UP to the first cut ≥ it — exactly the
+/** Native kernel: snap a value UP to the first cut ≥ it — exactly the
   * `element_at(array(cuts :+ MaxValue), binByCuts(v, cuts))` chain
   * ([[graft.stats.Binning.binByCuts]] semantics: values equal to a cut go
   * low, i.e. snap to themselves; above every cut → Double.MaxValue; NaN →
@@ -62,32 +49,7 @@ case class SortedBucket(child: Expression, bounds: Array[Double]) extends UnaryE
   * quantizer's 65k candidates that expression tree overflows the driver
   * stack in Catalyst's transforms before codegen even gets to reject it.
   */
-case class SnapUp(child: Expression, cuts: Array[Double]) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != DoubleType)
-      TypeCheckResult.TypeCheckFailure(s"snap_up expects double, got ${child.dataType}")
-    else if (cuts.exists(_.isNaN))
-      TypeCheckResult.TypeCheckFailure("snap_up expects NaN-free cuts")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = DoubleType
-
-  override def nullSafeEval(v: Any): Any =
-    SnapUp.snap(cuts, v.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cuts", cuts, "double[]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.SnapUp.snap($ref, $v);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SnapUp {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** First cut ≥ v, else Double.MaxValue (NaN → MaxValue too). */
   def snap(cuts: Array[Double], v: Double): Double = {
@@ -102,25 +64,8 @@ object SnapUp {
     if (lo < cuts.length) cuts(lo) else Double.MaxValue
   }
 
-  def of(v: Column, cuts: Array[Double]): Column =
-    ColumnBridge.column(SnapUp(ColumnBridge.expression(v.cast("double")), cuts))
-}
-
-object SortedBucket {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  /** First index i with bounds(i) > v (== count of boundaries ≤ v). */
-  def upperBound(bounds: Array[Double], v: Double): Int = {
-    var lo = 0
-    var hi = bounds.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (bounds(mid) <= v) lo = mid + 1 else hi = mid
-    }
-    lo
+  def of(v: Column, cuts: Array[Double]): Column = {
+    require(!cuts.exists(_.isNaN), "snap_up expects NaN-free cuts")
+    Kernel.call(this, "snap", DoubleType)(cuts, v.cast("double"))
   }
-
-  /** Column API: bucket index of `v` in the sorted `bounds`. */
-  def of(v: Column, bounds: Array[Double]): Column =
-    ColumnBridge.column(SortedBucket(ColumnBridge.expression(v.cast("double")), bounds))
 }

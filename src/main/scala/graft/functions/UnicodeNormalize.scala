@@ -1,13 +1,12 @@
 package graft.functions
 
+import java.text.Normalizer
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native expression for Unicode normalization — the text-canonicalization
+/** Native kernel for Unicode normalization — the text-canonicalization
   * step every dedup/fingerprint key needs on web text (the same page
   * crawled twice can differ only in composed vs decomposed accents, or in
   * compatibility characters like ligatures and fullwidth forms, and every
@@ -23,38 +22,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Null → null. Normalization is idempotent (spec-pinned).
   */
-case class UnicodeNormalize(child: Expression, form: String) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(s"unicode_normalize expects string, got ${child.dataType}")
-    else if (!Set("NFC", "NFD", "NFKC", "NFKD").contains(form))
-      TypeCheckResult.TypeCheckFailure(s"unknown normalization form: $form")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(t: Any): Any =
-    UnicodeNormalize.normalize(t.asInstanceOf[UTF8String], form)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.UnicodeNormalize.normalize($c, "$form");""")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object UnicodeNormalize {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
-  def normalize(s: UTF8String, form: String): UTF8String = {
-    val f = form match {
-      case "NFC"  => java.text.Normalizer.Form.NFC
-      case "NFD"  => java.text.Normalizer.Form.NFD
-      case "NFKC" => java.text.Normalizer.Form.NFKC
-      case _      => java.text.Normalizer.Form.NFKD
-    }
+  def normalize(s: UTF8String, f: Normalizer.Form): UTF8String = {
     val str = s.toString
     // fast path: already-normalized VALID text (the overwhelmingly common
     // case for ASCII-heavy corpora) returns the input without re-encoding.
@@ -62,13 +32,14 @@ object UnicodeNormalize {
     // the slow path so ill-formed bytes are CONSISTENTLY replaced with
     // U+FFFD — the output is valid UTF-8 for every input, never a mix of
     // passed-through and substituted bytes depending on surrounding text.
-    if (s.isValid && java.text.Normalizer.isNormalized(str, f)) s
-    else UTF8String.fromString(java.text.Normalizer.normalize(str, f))
+    if (s.isValid && Normalizer.isNormalized(str, f)) s
+    else UTF8String.fromString(Normalizer.normalize(str, f))
   }
 
-  def nfc(text: Column): Column =
-    ColumnBridge.column(UnicodeNormalize(ColumnBridge.expression(text.cast("string")), "NFC"))
+  def nfc(text: Column): Column = of(text, Normalizer.Form.NFC)
 
-  def nfkc(text: Column): Column =
-    ColumnBridge.column(UnicodeNormalize(ColumnBridge.expression(text.cast("string")), "NFKC"))
+  def nfkc(text: Column): Column = of(text, Normalizer.Form.NFKC)
+
+  private def of(text: Column, form: Normalizer.Form): Column =
+    Kernel.call(this, "normalize", StringType)(text.cast("string"), form)
 }

@@ -1,14 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native expression for POSITIONAL word k-gram hashes: element i is the
+/** Native kernel for POSITIONAL word k-gram hashes: element i is the
   * hash of the space-joined tokens `[i, i+n)` of the whitespace-tokenized
   * text (original case — exact-substring semantics), fewer-than-n-token
   * texts give an empty array. Unlike [[WordShingles]] this is NOT distinct:
@@ -34,31 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Both are pinned element-for-element against the built-in chain by
   * CurationSpec. Null text → null, like the built-in chain.
   */
-case class WordGramHashes(child: Expression, n: Int, algo: String) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(s"word_gram_hashes expects string, got ${child.dataType}")
-    else if (n < 1) TypeCheckResult.TypeCheckFailure(s"word_gram_hashes expects n >= 1, got $n")
-    else if (algo != "md5_48" && algo != "xx64")
-      TypeCheckResult.TypeCheckFailure(s"unknown algo: $algo")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(t: Any): Any =
-    WordGramHashes.compute(t.asInstanceOf[UTF8String], n, algo)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.WordGramHashes.compute($c, $n, "$algo");""")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object WordGramHashes {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
   private val ws = java.util.regex.Pattern.compile("\\s+")
 
@@ -96,10 +70,14 @@ object WordGramHashes {
   }
 
   /** Column API: positional md5-48 gram hashes (the portable variant). */
-  def gramHashes48(text: Column, n: Int): Column =
-    ColumnBridge.column(WordGramHashes(ColumnBridge.expression(text.cast("string")), n, "md5_48"))
+  def gramHashes48(text: Column, n: Int): Column = hashes(text, n, "md5_48")
 
   /** Column API: positional xxhash64 gram hashes (the production variant). */
-  def gramHashes64(text: Column, n: Int): Column =
-    ColumnBridge.column(WordGramHashes(ColumnBridge.expression(text.cast("string")), n, "xx64"))
+  def gramHashes64(text: Column, n: Int): Column = hashes(text, n, "xx64")
+
+  private def hashes(text: Column, n: Int, algo: String): Column = {
+    require(n >= 1, s"word_gram_hashes expects n >= 1, got $n")
+    Kernel.call(this, "compute", ArrayType(LongType, containsNull = false))(
+      text.cast("string"), n, algo)
+  }
 }

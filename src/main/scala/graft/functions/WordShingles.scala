@@ -1,14 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native expression for distinct word n-gram shingles — the hot inner
+/** Native kernel for distinct word n-gram shingles — the hot inner
   * expression of every shingle-based dedup/contamination operator.
   *
   * Semantically identical to the built-in chain
@@ -19,35 +16,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * CodegenFallback), with a per-element closure dispatch, an ArrayData slice
   * copy and a concat_ws allocation per shingle — measured ~25 µs per shingle,
   * which silently dominated every shingle query (a 260 k-shingle corpus spent
-  * ~6.5 s here, single-threaded). This expression builds the shingle set in
+  * ~6.5 s here, single-threaded). This kernel builds the shingle set in
   * one pass over the token array inside whole-stage codegen.
   *
   * Null semantics: null text → null (the built-in chain propagates null the
   * same way); callers that need empty-set semantics coalesce, as before.
   */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(s"word_shingles expects string, got ${child.dataType}")
-    else if (n < 1) TypeCheckResult.TypeCheckFailure(s"word_shingles expects n >= 1, got $n")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(t: Any): Any =
-    WordShingles.compute(t.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordShingles.compute($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object WordShingles {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
   private val ws = java.util.regex.Pattern.compile("\\s+")
 
@@ -81,6 +56,9 @@ object WordShingles {
   /** Column API: distinct word n-gram shingles of `text`. The cast keeps
     * the builtin chain's analyzer tolerance for non-string inputs
     * (`lower(x)` coerced them); identity casts are optimized away. */
-  def shingles(text: Column, n: Int): Column =
-    ColumnBridge.column(WordShingles(ColumnBridge.expression(text.cast("string")), n))
+  def shingles(text: Column, n: Int): Column = {
+    require(n >= 1, s"word_shingles expects n >= 1, got $n")
+    Kernel.call(this, "compute", ArrayType(StringType, containsNull = false))(
+      text.cast("string"), n)
+  }
 }

@@ -132,6 +132,7 @@ final case class BorutaStep(
     val base0 = df.na.drop(preds :+ outcome)
     // deterministic composite row ids, assigned within ~4k-row hash buckets
     val n = base0.count()
+    if (n == 0) throw StepCommon.noCompleteRows(name, df, outcome, preds)
     val buckets = math.max(1L, n / 4096L)
     val allCols = struct(base0.columns.map(col): _*)
     val base = base0

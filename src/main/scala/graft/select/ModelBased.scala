@@ -129,8 +129,10 @@ final case class LinearStep(
     val coefs: Map[String, Double] =
       if (StepCommon.isClassification(df, outcome)) {
         val (indexed, nClasses) = ModelBased.indexLabel(dfc, outcome)
-        require(nClasses == 2,
-          "step_select_linear can only be used for binary classification problems")
+        if (nClasses == 0) throw StepCommon.noCompleteRows(name, df, outcome, preds)
+        if (nClasses != 2)
+          throw new IllegalArgumentException(s"$name: can only be used for binary " +
+            s"classification problems, found $nClasses outcome classes")
         val data = ModelBased.assemble(indexed, preds)
         val m = new LogisticRegression()
           .setFeaturesCol("__features").setLabelCol("__label")

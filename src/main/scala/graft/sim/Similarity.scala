@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (array<float>).
@@ -141,10 +140,8 @@ object Similarity {
     * formulation below is O(k) plan width — the [[graft.functions.SnapUp]]
     * driver-hazard class). */
   def assignCentroid(df: DataFrame, vecCol: String, centroids: Seq[Seq[Double]]): DataFrame = {
-    val best = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.NearestCentroid(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(col(vecCol)),
-        centroids.map(_.toArray).toArray))
+    val best = graft.functions.NearestCentroid.nearest(
+      col(vecCol), df.schema(vecCol).dataType, centroids.map(_.toArray).toArray)
     df.withColumn("__best", best)
       .withColumn("cell", col("__best").getField("cell"))
       .withColumn("cell_sim", col("__best").getField("sim"))
@@ -324,14 +321,12 @@ object Similarity {
   /** IVF coarse assignment over the compressed store: nearest centroid by
     * fused int8 cosine, ties toward the larger cell index — mirrors
     * [[ivfAssign]] exactly (centroids live in dequantized space). One
-    * [[graft.functions.Int8NearestCentroid]] call: O(1) plan at any k. */
+    * [[graft.functions.NearestCentroid.nearestInt8]] call: O(1) plan at any k. */
   def ivfAssignInt8(df: DataFrame, codesCol: String, scaleCol: String,
       centroids: Seq[Seq[Double]]): DataFrame = {
-    val best = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.Int8NearestCentroid(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(col(codesCol)),
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(col(scaleCol)),
-        centroids.map(_.toArray).toArray))
+    val best = graft.functions.NearestCentroid.nearestInt8(
+      col(codesCol), df.schema(codesCol).dataType, col(scaleCol),
+      centroids.map(_.toArray).toArray)
     df.withColumn("cell", best.getField("cell"))
   }
 
@@ -449,7 +444,7 @@ object Similarity {
     */
   /** Reference twin of [[graft.functions.SignBandSignatures]]: the
     * compositional band-signature chain (r fused cosines + when/shiftleft
-    * per band). Test-pinned bit-equal to the native expression
+    * per band). Test-pinned bit-equal to the native kernel
     * (SimilaritySpec); not used in the hot path — at 32×8 production
     * sizing its generated consume method exceeds the JVM 64 KB limit and
     * the stage falls back to interpreted execution. */
@@ -474,13 +469,14 @@ object Similarity {
       handle: graft.runtime.CacheHandle = new graft.runtime.CacheHandle
   ): DataFrame = {
     require(bands >= 1 && planes.length % bands == 0, "bands must divide the number of planes")
-    // ONE fused expression for all bands×r sign tests: the compositional
+    // ONE fused kernel call for all bands×r sign tests: the compositional
     // chain (bandSigsBuiltin, kept below as the spec twin) generates 64 KB+
     // of consume code at the production 32×8 sizing and silently drops the
     // whole stage to interpreted execution
     val banded = handle.track(df.select(
       col(idCol),
-      posexplode(graft.functions.ArrayMath.signBandSigs(col(vecCol), planes, bands))
+      posexplode(graft.functions.ArrayMath.signBandSigs(
+        col(vecCol), df.schema(vecCol).dataType, planes, bands))
         .as(Seq("band", "sig"))
     ).cache()) // both self-join sides re-execute the 16-band signature scan
                // otherwise (Catalyst shares no re-referenced subtree); the

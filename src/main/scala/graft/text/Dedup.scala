@@ -20,7 +20,7 @@ object Dedup {
   }
 
   /** Word n-gram shingles of `text`, as a distinct array (first-occurrence
-    * order). Native codegen expression — the equivalent built-in
+    * order). Native kernel — the equivalent built-in
     * higher-order chain runs interpreted at ~25 µs/shingle and dominated
     * every shingle query; [[shinglesBuiltin]] keeps it as the equality
     * reference (Round2Spec asserts element-for-element agreement). */
@@ -158,7 +158,7 @@ object Dedup {
   /** MinHash signature: k independent permutations approximated by seeded
     * xxhash64; signature element i = min over shingles of hash(i, shingle).
     * Returns (id, sig: array<long>). One narrow map + per-doc aggregate.
-    * Native fused expression; [[minHashSignaturesBuiltin]] keeps the
+    * Native kernel; [[minHashSignaturesBuiltin]] keeps the
     * built-in formulation as the bit-equality reference (Round2Spec). */
   def minHashSignatures(df: DataFrame, id: String, text: String, n: Int, k: Int): DataFrame = {
     // shingle-less docs (under n tokens) must be dropped like the md5

@@ -16,24 +16,24 @@ import org.apache.spark.sql.functions._
   * reference model pay one). The model itself is |alphabet|² rows — always
   * broadcast. The per-document aggregation is a plain hash agg with map-side
   * partial combine. The bigram expansion runs as the native codegen
-  * [[graft.functions.CharNgrams]] expression — one n-gram per CHARACTER of
+  * [[graft.functions.CharNgrams]] kernel — one n-gram per CHARACTER of
   * corpus makes this the engine's highest elements-per-row expansion, and
   * the equivalent higher-order `transform` chain runs interpreted;
   * [[charBigramsBuiltin]] keeps the chain as the bit-equality reference.
-  * (Native expression + cached model: 3.9 s → 2.2 s on the sf0.1 bench
+  * (Native kernel + cached model: 3.9 s → 2.2 s on the sf0.1 bench
   * query — the remainder is the two irreducible corpus scans.)
   */
 object LmScore {
 
   /** Array of the character bigrams of `text` (positions 1..len−1), empty
-    * for texts shorter than 2 chars. Native codegen expression. */
+    * for texts shorter than 2 chars. Native kernel. */
   def charBigrams(text: Column): Column =
     graft.functions.CharNgrams.ngrams(text, 2)
 
   /** Reference formulation of [[charBigrams]] in built-in expressions only —
     * retained for the bit-equality spec, not used on any production path.
     * Null text propagates null (a bare `otherwise(array())` would turn null
-    * into an empty array and diverge from the native expression's
+    * into an empty array and diverge from the native kernel's
     * null-propagation — the WordShingles convention). */
   def charBigramsBuiltin(text: Column): Column =
     when(text.isNull, lit(null).cast("array<string>"))

@@ -121,7 +121,7 @@ object TextFeatures {
       "\\b\\d{3}[-. ]\\d{3}[-. ]\\d{4}\\b", "<PHONE>")
   }
 
-  /** Unicode NFC canonicalization (native codegen expression — Spark has
+  /** Unicode NFC canonicalization (native kernel — Spark has
     * no builtin; byte-compatible with DuckDB's `nfc_normalize`, verified by
     * the q_normalize oracle). Composed and decomposed spellings of the same
     * text hash identically afterwards. */

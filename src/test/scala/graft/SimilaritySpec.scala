@@ -130,7 +130,7 @@ class SimilaritySpec extends AnyFunSuite {
     val d = (vecs ++ edge).toDF("id", "v")
     val planes = Similarity.hyperplanes(64, 64)
     val rows = d.select(col("id"),
-      ArrayMath.signBandSigs(col("v"), planes, 8).as("n"),
+      ArrayMath.signBandSigs(col("v"), d.schema("v").dataType, planes, 8).as("n"),
       Similarity.bandSigsBuiltin(col("v"), planes, 8).as("b")).collect()
     rows.foreach { r =>
       assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"id=${r.getLong(0)}")
@@ -148,7 +148,7 @@ class SimilaritySpec extends AnyFunSuite {
       (3L, Some(Seq[Option[Float]](Some(1f), None)))     // null element
     ).toDF("id", "v").select(col("id"), col("v").cast("array<float>").as("v"))
     val planes = Similarity.hyperplanes(8, 2)
-    val got = d.select(col("id"), ArrayMath.signBandSigs(col("v"), planes, 4).as("s"))
+    val got = d.select(col("id"), ArrayMath.signBandSigs(col("v"), d.schema("v").dataType, planes, 4).as("s"))
       .collect().map(r => r.getLong(0) -> (r.isNullAt(1), r.getSeq[Long](1))).toMap
     assert(!got.values.exists(_._1), "result is never null")
     assert(got(2L)._2.forall(_ == 0L) && got(3L)._2.forall(_ == 0L))

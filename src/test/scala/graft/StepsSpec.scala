@@ -251,6 +251,22 @@ class StepsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("binary"))
   }
 
+  test("LinearStep with no complete row or a non-binary outcome fails naming the step and cause") {
+    def failure(frame: org.apache.spark.sql.DataFrame): String =
+      intercept[IllegalArgumentException](
+        LinearStep(topP = Some(1)).fit(frame, "species", Seq("f1", "f3"))).getMessage
+    val empty = failure(df.where(lit(false)))
+    assert(empty.contains("step_select_linear") && empty.contains("empty"), empty)
+    val allNull = failure(df.withColumn("species", lit(null).cast("string")))
+    assert(allNull.contains("step_select_linear") && allNull.contains("all-NULL columns: species"),
+      allNull)
+    for ((frame, found) <- Seq((df, 3), (df.where(col("species") === "c0"), 1))) {
+      val msg = failure(frame)
+      assert(msg.contains("step_select_linear") && msg.contains("binary") &&
+        msg.contains(s"found $found"), msg)
+    }
+  }
+
   test("TreeStep and ForestStep rank informative over noise, rescaled 0-100") {
     for (fitted <- Seq(
         TreeStep(topP = Some(2)).fit(df, "species", Seq("f1", "f3")),
@@ -308,6 +324,17 @@ class StepsSpec extends AnyFunSuite {
       s"informative feature must outscore noise: $m")
     assert(a.excluded == Seq("noi"))
     assert(m.values.flatten.forall(v => v >= -1.0 && v <= 1.0), "RReliefF scores in [-1, 1]")
+  }
+
+  test("BorutaStep with no complete row fails naming the step and the cause") {
+    def failure(frame: org.apache.spark.sql.DataFrame, preds: Seq[String]): String =
+      intercept[IllegalArgumentException](
+        BorutaStep(maxRuns = 2, trees = 2).fit(frame, "species", preds)).getMessage
+    val empty = failure(df.where(lit(false)), Seq("f1", "f3"))
+    assert(empty.contains("step_select_boruta") && empty.contains("empty"), empty)
+    val allNull = failure(df.withColumn("f_null", lit(null).cast("double")), Seq("f1", "f_null"))
+    assert(allNull.contains("step_select_boruta") && allNull.contains("all-NULL columns: f_null"),
+      allNull)
   }
 
   test("BorutaStep: informative feature wins every round; only noise can be excluded") {

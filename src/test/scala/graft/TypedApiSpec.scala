@@ -24,11 +24,15 @@ class TypedApiSpec extends AnyFunSuite {
     assert(rows.filter(_.visit_no > 1).forall(_.prev_text_len.isDefined))
   }
 
-  test("typed pipeline produces the same rows as the untyped plan") {
-    val typed = Types.featureVectors(
-      spark, Types.pages(spark, 3000, 300), Types.labels(spark, 300, 300)).toDF()
-    val untyped = graft.Bench.featurePipeline(spark, 3000, 300)
-    assert(graft.runtime.Lineage.contentDigest(typed) ==
-      graft.runtime.Lineage.contentDigest(untyped))
+  test("feature vectors do not depend on spark.sql.shuffle.partitions") {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    def digest(partitions: Int): Long = {
+      spark.conf.set(key, partitions.toString)
+      graft.runtime.Lineage.contentDigest(Types.featureVectors(
+        spark, Types.pages(spark, 3000, 300), Types.labels(spark, 300, 300)).toDF())
+    }
+    try assert(digest(1) == digest(4))
+    finally spark.conf.set(key, saved)
   }
 }

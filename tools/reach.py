@@ -8,9 +8,11 @@ that name. Such a name is called by no query, no main and no benchmark
 workload: only src/test reaches it, or nothing does. Comments and the text
 of string literals are not code; the `$name`/`${...}` parts of an
 interpolated string are, and so is a fully qualified class name in a string
-(`"graft.functions.GraftExtensions"`, loaded by reflection). On a
-definition line only the name it defines is exempt: the types in a class's
-parameters and `extends` clause still count as uses. Any definition line
+(`"graft.functions.GraftExtensions"`, loaded by reflection), and so is a
+kernel method name passed to `Kernel.call` (`Kernel.call(this, "compute",
+...)`, called through `StaticInvoke`). On a definition line only the name
+it defines is exempt: the types in a class's parameters and `extends`
+clause still count as uses. Any definition line
 exempts its own name, not only the definition's own line, so two objects
 that each define `compact` do not count as uses of each other.
 
@@ -39,6 +41,7 @@ SKIP_NAMES = {"apply", "unapply", "main", "toString", "equals", "hashCode", "ent
 CHAR_LIT = re.compile(r"'(?:\\u[0-9a-fA-F]{4}|\\.|[^'\\\n])'")
 INTERP_NAME = re.compile(r"\$[A-Za-z_]\w*")
 REFLECTED = re.compile(r'"(?:[a-z_]\w*\.)+([A-Z]\w*)"')
+KERNEL_METHOD = re.compile(r'Kernel\.call\(\s*\w+\s*,\s*"([A-Za-z_]\w*)"')
 
 
 def scala_files(d):
@@ -126,7 +129,9 @@ def main():
                 with open(p, encoding="utf-8") as f:
                     text = f.read()
                 corpus[p] = code_only(text).split("\n")
-                reflected.update(REFLECTED.findall(code_only(text, keep_strings=True)))
+                kept = code_only(text, keep_strings=True)
+                reflected.update(REFLECTED.findall(kept))
+                reflected.update(KERNEL_METHOD.findall(kept))
 
     defs = []
     for p, lines in corpus.items():
