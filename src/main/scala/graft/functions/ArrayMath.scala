@@ -259,6 +259,6 @@ object ArrayMath {
       s"planes per band (${planes.length / bands}) must fit a long's bits")
     // never null: NULL or malformed input gives the all-zero signatures
     Kernel.call(SignBandSignatures, "sigs", ArrayType(LongType, containsNull = false),
-      propagateNull = false)(flat, norms, d, bands, vec, floatElems)
+      propagateNull = false)(flat, norms, d, bands, vec -> vecType, floatElems)
   }
 }

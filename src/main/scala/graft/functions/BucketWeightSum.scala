@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
 /** Σᵢ weights[hᵢ mod B] over an array<long> of feature hashes — the scoring
   * kernel of the hashed bag-of-words classifier ([[graft.text.NbQuality]]).
@@ -42,6 +42,6 @@ object BucketWeightSum {
   def bucketWeightSum(hashes: Column, weights: Array[Double]): Column = {
     require(weights.nonEmpty, "bucket_weight_sum expects a non-empty weight table")
     // null elements poison the sum to null
-    Kernel.call(this, "sum", DoubleType, returnNullable = true)(weights, hashes)
+    Kernel.call(this, "sum", DoubleType, returnNullable = true)(weights, hashes -> ArrayType(LongType))
   }
 }

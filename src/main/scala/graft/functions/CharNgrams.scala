@@ -41,6 +41,6 @@ object CharNgrams {
   def ngrams(text: Column, n: Int): Column = {
     require(n >= 1, s"char_ngrams expects n >= 1, got $n")
     Kernel.call(this, "compute", ArrayType(StringType, containsNull = false))(
-      text.cast("string"), n)
+      text.cast("string") -> StringType, n)
   }
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Native kernel: the ORDER-PRESERVING 64-bit integer image of a
   * double — `bits ^ ((bits >> 63) >>> 1)` over `doubleToLongBits`
@@ -23,7 +23,7 @@ object DoubleBits {
     bits ^ ((bits >> 63) >>> 1)
   }
 
-  def of(c: Column): Column = Kernel.call(this, "monotone", LongType)(c)
+  def of(c: Column): Column = Kernel.call(this, "monotone", LongType)(c -> DoubleType)
 
   /** Monotone range bucket from the image's top `bits` bits — ARITHMETIC
     * shift, so the bucket id (in [−2^(bits−1), 2^(bits−1))) stays

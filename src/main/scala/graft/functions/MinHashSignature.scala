@@ -62,6 +62,6 @@ object MinHashSignature {
     require(k >= 1, s"minhash_sig expects k >= 1, got $k")
     // empty array → null even for a non-null input
     Kernel.call(this, "compute", ArrayType(LongType, containsNull = false),
-      returnNullable = true)(shingles, seedsFor(k))
+      returnNullable = true)(shingles -> ArrayType(StringType), seedsFor(k))
   }
 }

@@ -50,7 +50,7 @@ object NearestCentroid {
   def nearest(v: Column, vType: DataType, centroids: Array[Array[Double]]): Column = {
     val floatElems = isFloatVector(vType, "nearest_centroid")
     val (flat, norms, d) = matrix(centroids, "nearest_centroid expects >= 1 centroids")
-    Kernel.call(this, "assign", resultType, returnNullable = true)(flat, norms, d, v, floatElems)
+    Kernel.call(this, "assign", resultType, returnNullable = true)(flat, norms, d, v -> vType, floatElems)
   }
 
   /** Column API: [[nearest]] over int8 `codes` of type `codesType`
@@ -67,7 +67,7 @@ object NearestCentroid {
       s"int8_nearest_centroid expects array<int|smallint|tinyint>, got $codesType")
     val (flat, norms, d) = matrix(centroids, "int8_nearest_centroid expects >= 1 centroids")
     Kernel.call(this, "assignInt8", resultType, returnNullable = true)(
-      flat, norms, d, codes, scale, codeTag)
+      flat, norms, d, codes -> codesType, scale -> DoubleType, codeTag)
   }
 
   /** True for array<float>, false for array<double>; any other type fails

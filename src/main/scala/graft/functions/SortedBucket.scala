@@ -35,7 +35,7 @@ object SortedBucket {
   def of(v: Column, bounds: Array[Double]): Column = {
     require(bounds.nonEmpty && !bounds.exists(_.isNaN),
       "sorted_bucket expects non-empty, NaN-free boundaries")
-    Kernel.call(this, "upperBound", IntegerType, returnNullable = true)(bounds, v.cast("double"))
+    Kernel.call(this, "upperBound", IntegerType, returnNullable = true)(bounds, v.cast("double") -> DoubleType)
   }
 }
 
@@ -66,6 +66,6 @@ object SnapUp {
 
   def of(v: Column, cuts: Array[Double]): Column = {
     require(!cuts.exists(_.isNaN), "snap_up expects NaN-free cuts")
-    Kernel.call(this, "snap", DoubleType)(cuts, v.cast("double"))
+    Kernel.call(this, "snap", DoubleType)(cuts, v.cast("double") -> DoubleType)
   }
 }

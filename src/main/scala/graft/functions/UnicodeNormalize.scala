@@ -41,5 +41,5 @@ object UnicodeNormalize {
   def nfkc(text: Column): Column = of(text, Normalizer.Form.NFKC)
 
   private def of(text: Column, form: Normalizer.Form): Column =
-    Kernel.call(this, "normalize", StringType)(text.cast("string"), form)
+    Kernel.call(this, "normalize", StringType)(text.cast("string") -> StringType, form)
 }

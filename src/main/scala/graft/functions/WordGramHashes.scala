@@ -78,6 +78,6 @@ object WordGramHashes {
   private def hashes(text: Column, n: Int, algo: String): Column = {
     require(n >= 1, s"word_gram_hashes expects n >= 1, got $n")
     Kernel.call(this, "compute", ArrayType(LongType, containsNull = false))(
-      text.cast("string"), n, algo)
+      text.cast("string") -> StringType, n, algo)
   }
 }

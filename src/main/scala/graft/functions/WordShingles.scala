@@ -59,6 +59,6 @@ object WordShingles {
   def shingles(text: Column, n: Int): Column = {
     require(n >= 1, s"word_shingles expects n >= 1, got $n")
     Kernel.call(this, "compute", ArrayType(StringType, containsNull = false))(
-      text.cast("string"), n)
+      text.cast("string") -> StringType, n)
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.SparkSession
 
-import graft.select.{FittedSelector, SelectorStep}
+import graft.select.{FittedSelector, SelectorPipeline, SelectorStep}
 
 /** Commit-level per-step checkpoints so a killed fit resumes EXACTLY
   * (north_rule: "resumable from checkpoint with per-partition lineage +
@@ -122,9 +122,8 @@ object Checkpoints {
       df: org.apache.spark.sql.DataFrame,
       outcome: String,
       lineage: String = ""
-  ): Seq[FittedSelector] = {
-    var cur = df
-    steps.zipWithIndex.map { case ((step, preds), i) =>
+  ): Seq[FittedSelector] =
+    SelectorPipeline(steps).fold(df) { (i, step, preds, cur) =>
       val path = Paths.get(dir, f"step_$i%03d_${step.name}.json")
       val fp = fingerprint(step, outcome, preds, cur.columns.toSeq, lineage)
       def refit(warning: Option[String]): FittedSelector = {
@@ -142,7 +141,7 @@ object Checkpoints {
           val json = Files.readString(path)
           (fromJson(json), fingerprintOf(json))
         })
-      val fitted = saved match {
+      saved match {
         case Some(Success((f, Some(`fp`)))) => f
         case Some(Success(_)) => refit(Some(
           s"checkpoint ${path.getFileName} belongs to another fit (parameters or input changed); refitted"))
@@ -150,8 +149,5 @@ object Checkpoints {
           s"checkpoint ${path.getFileName} is unreadable (${e.getClass.getSimpleName}); refitted"))
         case None => refit(None)
       }
-      cur = fitted.transform(cur)
-      fitted
     }
-  }
 }

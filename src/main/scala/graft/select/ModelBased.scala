@@ -171,13 +171,15 @@ final case class TreeStep(
     val dfc = df.na.drop(preds :+ outcome) // complete cases (null label fails the fit)
     val imps: Map[String, Double] =
       if (StepCommon.isClassification(df, outcome)) {
-        val (indexed, _) = ModelBased.indexLabel(dfc, outcome)
+        val (indexed, nClasses) = ModelBased.indexLabel(dfc, outcome)
+        if (nClasses == 0) throw StepCommon.noCompleteRows(name, df, outcome, preds)
         val m = new DecisionTreeClassifier()
           .setFeaturesCol("__features").setLabelCol("__label")
           .setMaxDepth(maxDepth).setMaxBins(maxBins).setSeed(seed)
           .fit(ModelBased.assemble(indexed, preds))
         ImportanceExtractor.dtC.importances(m, preds)
       } else {
+        if (dfc.isEmpty) throw StepCommon.noCompleteRows(name, df, outcome, preds) // 1-row probe
         val m = new DecisionTreeRegressor()
           .setFeaturesCol("__features").setLabelCol(outcome)
           .setMaxDepth(maxDepth).setMaxBins(maxBins).setSeed(seed)
@@ -257,8 +259,15 @@ final case class ForestStep(
         val train = tagged.where(col("__h") =!= 0).drop("__h").cache()
         val hold = tagged.where(col("__h") === 0).drop("__h").cache()
         try {
+          val nHold = hold.count()
+          if (nHold == 0 || train.isEmpty) { // train.isEmpty: a 1-row probe
+            val nTrain = train.count()
+            if (nTrain + nHold == 0) throw StepCommon.noCompleteRows(name, df, outcome, preds)
+            throw new IllegalArgumentException(s"$name: permutation importance needs a non-empty " +
+              s"training and holdout split; the row-hash split gave $nTrain training and $nHold holdout rows")
+          }
           // ~4k rows per permutation bucket; grows with |holdout|
-          val permBuckets = math.max(1L, hold.count() / 4096L)
+          val permBuckets = math.max(1L, nHold / 4096L)
           if (classif) {
             // label mapping fit ONCE on the full data: a holdout missing an
             // alphabetically-early class must not shift indices
@@ -282,9 +291,11 @@ final case class ForestStep(
           }
         } finally { train.unpersist(); hold.unpersist() }
       } else if (classif) {
-        val (indexed, _) = ModelBased.indexLabel(dfc, outcome)
+        val (indexed, nClasses) = ModelBased.indexLabel(dfc, outcome)
+        if (nClasses == 0) throw StepCommon.noCompleteRows(name, df, outcome, preds)
         ImportanceExtractor.rfC.importances(classifier.fit(ModelBased.assemble(indexed, preds)), preds)
       } else {
+        if (dfc.isEmpty) throw StepCommon.noCompleteRows(name, df, outcome, preds) // 1-row probe
         ImportanceExtractor.rfR.importances(regressor.fit(ModelBased.assemble(dfc, preds)), preds)
       }
     val rescaled = DualFilter.rescale(imps)

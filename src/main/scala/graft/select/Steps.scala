@@ -524,14 +524,19 @@ final case class FcbfStep(minimumSu: Double = 0.025, cutpoint: Double = 0.5) ext
   * the output of the previous step's transform (test_step_select_linear.R:10–18
   * composition style). */
 final case class SelectorPipeline(steps: Seq[(SelectorStep, Seq[String])]) {
-  def fit(df: DataFrame, outcome: String): FittedPipeline = {
+  def fit(df: DataFrame, outcome: String): FittedPipeline =
+    FittedPipeline(fold(df)((_, step, preds, cur) => step.fit(cur, outcome, preds)))
+
+  /** The pipeline rule, kept once: step `i` is fitted by `fitStep(i, step,
+    * preds, input)` on the previous fitted step's transform of the input. */
+  def fold(df: DataFrame)(
+      fitStep: (Int, SelectorStep, Seq[String], DataFrame) => FittedSelector): Seq[FittedSelector] = {
     var cur = df
-    val fitted = steps.map { case (s, preds) =>
-      val f = s.fit(cur, outcome, preds)
+    steps.zipWithIndex.map { case ((step, preds), i) =>
+      val f = fitStep(i, step, preds, cur)
       cur = f.transform(cur)
       f
     }
-    FittedPipeline(fitted)
   }
 }
 

@@ -145,4 +145,15 @@ class KernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     fails("sign_band_sigs expects array<float|double>, got ArrayType(IntegerType,true)")(
       ArrayMath.signBandSigs(v, ArrayType(IntegerType), planes8, 2))
   }
+
+  test("a column of a type its kernel cannot read fails at analysis, naming the method") {
+    // select analyzes eagerly and no action is called, so no job starts
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      textDf.select(MinHashSignature.signature(col("t"), 4)))
+    assert(e.getMessage.contains("DATATYPE_MISMATCH") && e.getMessage.contains("compute"), e.getMessage)
+    // a numeric column is cast implicitly, as for Spark's own functions
+    val longs = Seq(3L, -2L, 0L).toDF("x")
+    assert(longs.select(DoubleBits.of(col("x"))).collect().toSeq ==
+      longs.select(DoubleBits.of(col("x").cast("double"))).collect().toSeq)
+  }
 }

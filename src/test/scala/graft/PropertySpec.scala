@@ -91,7 +91,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("Dedup.dedupLines == local model on seeded random corpora") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     for (seed <- Seq(1, 2, 3)) {
       val rng = new scala.util.Random(seed)
       val docs = (0L until 40L).map { i =>
@@ -145,7 +144,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("Packing.packSequences == local running-sum model on seeded random fixtures") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     for (seed <- Seq(5, 6)) {
       val rng = new scala.util.Random(seed)
       val docs = (0L until 200L).filter(_ => rng.nextInt(4) > 0) // id gaps
@@ -169,7 +167,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("counts-based exactCuts == approxQuantile(err=0); quantileType7 == percentile(), bit-for-bit") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.expr
     import graft.stats.Binning
     val rng = new scala.util.Random(11)
     // adversarial shapes: heavy ties, negatives, tiny n, exact-integer rank

@@ -267,6 +267,29 @@ class StepsSpec extends AnyFunSuite {
     }
   }
 
+  test("TreeStep and ForestStep with no complete row fail naming the step and the cause") {
+    val steps: Seq[SelectorStep] = Seq(TreeStep(topP = Some(1)), ForestStep(topP = Some(1), trees = 2),
+      ForestStep(topP = Some(1), trees = 2, importance = "impurity"))
+    for (step <- steps; (outcome, preds) <- Seq("species" -> Seq("f1", "f3"), "f2" -> Seq("f1", "f3"))) {
+      def failure(frame: org.apache.spark.sql.DataFrame): String =
+        intercept[IllegalArgumentException](step.fit(frame, outcome, preds)).getMessage
+      val empty = failure(df.where(lit(false)))
+      assert(empty.contains(step.name) && empty.contains("empty"), empty)
+      val allNull = failure(df.withColumn("f3", lit(null).cast("double")))
+      assert(allNull.contains(step.name) && allNull.contains("all-NULL columns: f3"), allNull)
+    }
+  }
+
+  test("ForestStep with an empty training or holdout split names the step and the split sizes") {
+    for (i <- 0 until 4) {
+      val one = spark.createDataFrame(Seq(rows(i)))
+      val msg = intercept[IllegalArgumentException](
+        ForestStep(topP = Some(1), trees = 2).fit(one, "species", Seq("f1", "f3"))).getMessage
+      assert(msg.contains("step_select_forests") &&
+        (msg.contains("1 training and 0 holdout") || msg.contains("0 training and 1 holdout")), msg)
+    }
+  }
+
   test("TreeStep and ForestStep rank informative over noise, rescaled 0-100") {
     for (fitted <- Seq(
         TreeStep(topP = Some(2)).fit(df, "species", Seq("f1", "f3")),

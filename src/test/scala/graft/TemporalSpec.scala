@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
 import graft.temporal.{AsOf, Windows}
 
 class TemporalSpec extends AnyFunSuite {
